@@ -87,11 +87,10 @@ object Bench {
     // nothing about external contention — the thing the flag exists to
     // disclose.
     val loadAtStart = loadNow
-    // Calibration probes (SPARK_GRAFT_BENCH_CALIBRATE=0 disables): three
-    // FIXED-work measurements recorded with every artifact — a
-    // single-threaded integer spin (pure CPU epoch: hypervisor co-tenancy
-    // and frequency state, invisible to loadavg), a fixed synthetic
-    // parquet scan-aggregate (the Spark engine + IO epoch), and a
+    // Calibration probes: three FIXED-work measurements recorded with
+    // every artifact — a single-threaded integer spin (pure CPU epoch:
+    // hypervisor co-tenancy and frequency state, invisible to loadavg), a
+    // fixed synthetic parquet scan-aggregate (the Spark engine + IO epoch), and a
     // fixed-TOTAL-work PARALLEL spin (64 tasks × 1e8 iterations submitted
     // as one Spark job — its wall time is inversely proportional to the
     // cores the session actually schedules on, so an 8-vs-32-core artifact
@@ -105,7 +104,6 @@ object Bench {
     // Runs AFTER the load gate (measures the quiesced box the suite sees)
     // and BEFORE warmup (the synthetic scan also pre-touches the reader
     // path). Medians of 3.
-    val calibrate = sys.env.get("SPARK_GRAFT_BENCH_CALIBRATE").forall(_ != "0")
     def med3(f: () => Unit): Double = {
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
@@ -113,9 +111,9 @@ object Bench {
       ts(1)
     }
     // Short fixed-work probes shared by the calibration block and the
-    // stabilization pass's validity gates below. They always run (cheap —
-    // ~0.5 s each at the reference epoch): the rebench-adoption gate needs
-    // a start-of-run reference even when the full calibration is off.
+    // stabilization pass's validity gates below (cheap — ~0.5 s each at
+    // the reference epoch): the rebench-adoption gate needs a start-of-run
+    // reference.
     var acc = 0L // escapes the loops so the JIT cannot elide them
     def shortSpin(): Double = {
       val t0 = System.nanoTime()
@@ -142,7 +140,7 @@ object Bench {
     shortSpin() // warm, untimed (C2 compile)
     val spinRef = { val a = shortSpin(); val b = shortSpin(); math.min(a, b) }
     val scanRef = { val a = scanProbe(); val b = scanProbe(); math.min(a, b) }
-    val calibration: Option[(Double, Double, Double)] = if (!calibrate) None else {
+    val (calSpinS, calScanS, calParSpinS) = {
       def spin(): Unit = {
         var x = 0x9E3779B97F4A7C15L
         var i = 0
@@ -163,7 +161,7 @@ object Bench {
       parSpin() // warm, untimed
       val parSpinS = med3(() => parSpin())
       if (acc == Long.MinValue) System.err.println("calibration sentinel")
-      Some((spinS, scanS, parSpinS))
+      (spinS, scanS, parSpinS)
     }
     // Warmup (untimed): one pass over the suite, so the timed pass measures
     // steady-state execution, not one-time JVM costs — classloading alone
@@ -348,9 +346,7 @@ object Bench {
         s""""procs_running":${rt(0)},"procs_total":${rt(1)},""" +
         s""""load_warn":${loadAtStart.exists(_ > loadMax)}"""
     } catch { case _: Throwable => """"loadavg":null,"load_warn":false""" }
-    val calibJson = calibration.fold("null") { case (spinS, scanS, parSpinS) =>
-      s"""{"cpu_spin_s":$spinS,"scan_s":$scanS,"par_spin_s":$parSpinS}"""
-    }
+    val calibJson = s"""{"cpu_spin_s":$calSpinS,"scan_s":$calScanS,"par_spin_s":$calParSpinS}"""
     val probesJson =
       s"""{"spin_ref_s":$spinRef,"scan_ref_s":$scanRef,"epochs":[""" +
         epochProbes.map { case (i, t) => s"[$i,$t]" }.mkString(",") + "]}"

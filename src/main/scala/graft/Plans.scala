@@ -26,7 +26,7 @@ object Plans {
     "llm_dedup_exact" -> "shuffle carries the 16-byte digest, text never moves",
     "llm_knn_cosine" -> "100-row query side broadcast; corpus scan never shuffles; codegen'd cosine",
     "llm_neardup_cosine" -> "banded LSH equi-join on (table, band, ci, cj), no BNLJ, no corpus broadcast",
-    "llm_semdedup" -> "broadcast centroid assignment, then (c_id, ci, cj) equi-join pair scan",
+    "llm_semdedup" -> "map-side centroid assignment (the nearest-centroid kernel over the driver-collected k centroids), then (c_id, ci, cj) equi-join pair scan",
     "llm_tfidf" -> "tf/df join unhinted (vocabulary-sized side must not broadcast at scale)",
     "llm_decontaminate" -> "eval n-grams broadcast; train side is scan + hash probe, no sort",
     "topk_global" -> "TakeOrderedAndProject: per-partition top-k, never a global sort",
@@ -37,7 +37,8 @@ object Plans {
     "text_bigram_logprob" -> "bigram-count and prefix-count joins unhinted (bigram vocabulary must not broadcast at scale); occurrences partial-agg before the doc_id exchange",
     "agg_hll_union_daily" -> "both HLL aggregations partial-combine map-side: sketches merge in the combiner, raw events never reach the per-type union",
     "llm_bloom_decontaminate" -> "eval grams compressed into a driver-built Bloom sketch; train side is one scan + map-side membership probe, no shuffle of training text",
-    "llm_ann_ivfpq" -> "ADC tables ride as a 100-row broadcast over the code scan; re-rank fetch is a broadcast equi-join on vec_id touching only shortlist rows",
+    "llm_ann_ivfpq" -> "index build: codes and coarse cells come from the nearest-centroid kernel in one codegen'd projection over the embeddings scan (no join, no exchange); query: ADC tables ride as a 100-row broadcast over the code scan; re-rank fetch is a broadcast equi-join on vec_id touching only shortlist rows",
+    "llm_kmeans" -> "Lloyd E-step is the nearest-centroid kernel inside the corpus scan against the driver-collected k centroids: no join, no window, no exchange carries an embedding; the only shuffles are the M-step (c_id, pos) partial sums and the k-key profile",
     "log_grep_multi" -> "all N rlike predicates evaluate in ONE codegen'd pass over a single text scan; adding a pattern adds a count column, never a scan",
     "llm_incremental_dedup" -> "digest probe ships 16-byte hashes; the near-dup postings join is batch x existing (small x large) — the standing corpus never self-joins",
     "join_interval_overlap" -> "no shared equi-key, yet NO BNLJ: time-bucket binning turns the interval predicate into a SortMergeJoin on bucket + in-bucket range filter; the census-salt guard (broadcast hot-bucket list, salt sub-keys) bounds a storm hour's pairing per task",

@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.vectors
+import graft.functions.{CentroidScore, Centroids, VectorOps, vectors}
 
 /** LLM-training-data pipeline operators (SURVEY.md §2.9): deduplication,
   * similarity search, embedding math, TF-IDF — over the `documents` and
@@ -1111,9 +1111,10 @@ object LlmOps {
     * OR-probing. Recall vs brute force is asserted in LlmOpsSpec.
     *
     * Scale note: the centroid build shuffles (cell, dim) partial sums —
-    * n·d rows of partial aggregation, fully map-side combined; at 100 TB
-    * the centroids would be trained on a sample and broadcast, which is
-    * exactly what this plan does (the centroid side is ≤ 2^bits rows).
+    * n·d rows of partial aggregation, fully map-side combined — and the
+    * ≤ 2^bits centroids are collected to the driver; the probe ranking is
+    * the nearest-centroid kernel inside the query scan, so no join or
+    * window ranks cells.
     */
   val annIvf = Q.noOracle("llm_ann_ivf") { (s, dir) =>
     val bits = 4       // 16 coarse cells
@@ -1121,22 +1122,17 @@ object LlmOps {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
         vectors.srpBucket(col("embedding"), bits, 0xc0ffeeL).as("cell"))
-    // Train: element-wise mean per cell (posexplode → avg → re-assemble).
-    val centroids = e
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy("cell", "pos").agg(avg("v").as("m"))
-      .groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m").cast("float")).as("centroid"))
-    // Probe: each query ranks cells by centroid cosine, keeps nprobe.
-    val q = e.filter(col("vec_id") < 100)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val cellRank = Window.partitionBy("q_id").orderBy(col("cell_sim").desc, col("cell").asc)
-    val probed = q.crossJoin(broadcast(centroids))
-      .withColumn("cell_sim", vectors.cosineSim(col("q_emb"), col("centroid")))
-      .withColumn("cell_rn", row_number().over(cellRank))
-      .filter(col("cell_rn") <= nprobe)
-      .select("q_id", "q_emb", "cell")
+    // Train: element-wise mean per cell — the k-means M-step with the SRP
+    // buckets as the assignment; the ≤ 2^bits centroids come back to the
+    // driver as index metadata.
+    val centroids = collectCentroids(
+      kmeansCentroids(e.select(col("cell").as("c_id"), col("embedding"))),
+      CentroidScore.Cosine)
+    // Probe: each query keeps its nprobe cells of highest centroid cosine.
+    val probed = e.filter(col("vec_id") < 100)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        explode(vectors.nearestCentroids(col("embedding"), centroids, nprobe)
+          .getField("id")).as("cell"))
     // Search: exact cosine inside the probed cells only.
     val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id").asc)
     broadcast(probed)
@@ -1150,7 +1146,7 @@ object LlmOps {
   }
 
   /** Squared L2 distance between two equal-length double arrays, in pure
-    * Column algebra (zip_with + aggregate) — the PQ building block.
+    * Column algebra (zip_with + aggregate) — the ADC distance tables.
     */
   private def l2sqCol(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
@@ -1440,14 +1436,15 @@ object LlmOps {
       .as[(Long, Int, Seq[Double])].collect()
     val cbSeq = trainCodebookDriver(train)
     val cb = cbSeq.toDF("sub", "code", "c")
-    val cents = trainCoarseDriver(train)
-    val centsDf = cents.toDF("cell", "c")
+    val cells = trainCoarseDriver(train)
+    val centsDf = cells.ids.indices.map(j => (cells.ids(j).toInt, cells.vecs(j).toSeq))
+      .toDF("cell", "c")
     // Encode: the corpus as pqM-int code arrays, each replicated under its
     // pqAssign coarse cells — the persisted IVF-PQ index. One map-side
     // projection over the embeddings (codes + cells from the same
-    // normalized vector, codebook and centroids inlined as literals):
-    // zero exchanges, zero joins in the encode subtree.
-    (centsDf, cb, pqEncodeWithCellsSeq(Tables.embeddings(s, dir), cbSeq, cents))
+    // normalized vector through the nearest-centroid kernel): zero
+    // exchanges, zero joins in the encode subtree.
+    (centsDf, cb, pqEncodeWithCellsSeq(Tables.embeddings(s, dir), cbSeq, cells))
   }
 
   /** The full refresh-side encode: codes + coarse cells for an arbitrary
@@ -1456,94 +1453,63 @@ object LlmOps {
     * through, so a refreshed batch can never normalize, slice, code, or
     * cell-assign differently from the original build pass. The codebook
     * arrives as a frame (the store's parquet); it is index metadata
-    * (pqM·pqKs rows), collected driver-side and inlined as literals —
-    * parquet round-trips doubles exactly, so the refresh encode stays
-    * bit-identical to the build encode (StorageLayoutSpec pins it).
+    * (pqM·pqKs rows), collected driver-side into the kernel's centroid
+    * matrices — parquet round-trips doubles exactly, so the refresh encode
+    * stays bit-identical to the build encode (StorageLayoutSpec pins it).
     */
   private[graft] def pqEncodeWithCells(emb: DataFrame, cb: DataFrame,
-                                       cents: Seq[(Int, Seq[Double])]): DataFrame = {
+                                       cells: Centroids): DataFrame = {
     val s = cb.sparkSession
     import s.implicits._
     val cbSeq = cb.select(col("sub").cast("int"), col("code").cast("int"),
         col("c").cast("array<double>"))
       .as[(Int, Int, Seq[Double])].collect().toSeq
-    pqEncodeWithCellsSeq(emb, cbSeq, cents)
+    pqEncodeWithCellsSeq(emb, cbSeq, cells)
   }
 
   /** The ENCODE half of the PQ build as ONE map-side projection: each
-    * vector normalizes, codes every subspace against the LITERAL codebook,
-    * and explodes under its [[pqAssign]] coarse cells — no subvector
-    * fan-out, no join, no aggregation, zero exchanges. Per subspace the
-    * code is the lexicographic min of (d2, code) structs — the same
-    * `min(struct(d2, code))` argmin (lowest code on ties) the aggregated
-    * formulation computed, over the same left-to-right
-    * `aggregate(zip_with(…))` double fold, so the chosen codes are
-    * bit-identical and refresh ≡ rebuild still holds file-for-row.
+    * vector normalizes, codes every subspace against its codebook, and
+    * explodes under its [[pqAssign]] coarse cells — no subvector fan-out,
+    * no join, no aggregation, zero exchanges. Codes and cells both come
+    * from the nearest-centroid kernel under the l2² spelling (Σ (vᵢ − cᵢ)²
+    * folded left to right in doubles, lowest code or cell on ties), so the
+    * chosen codes and cells are a pure function of the stored doubles and
+    * refresh ≡ rebuild holds file-for-row.
     */
   private[graft] def pqEncodeWithCellsSeq(emb: DataFrame,
                                           cb: Seq[(Int, Int, Seq[Double])],
-                                          cents: Seq[(Int, Seq[Double])]): DataFrame = {
+                                          cells: Centroids): DataFrame = {
     val norm = vectors.l2Norm(col("embedding"))
-    // The d2 kernel against a LITERAL centroid, spelled FLAT (a left-assoc
-    // chain of (v[i]−cᵢ)² terms) instead of aggregate(zip_with(…)):
-    // higher-order functions are CodegenFallback, so the HOF spelling ran
-    // 128 interpreted folds per row (same-JVM A/B: 0.96 → 1.25 s against
-    // the r12 join encode); the flat chain whole-stage-codegens. The
-    // doubles are bit-identical: zip_with's (x−y)·(x−y) is this (x−y)²,
-    // and aggregate's fold (((0.0+t₁)+t₂)+…) equals the left-assoc chain
-    // ((t₁+t₂)+…) exactly because t₁ ≥ +0.0 makes 0.0+t₁ ≡ t₁.
-    def l2sqFlat(v: Column, off: Int, c: Seq[Double]): Column =
-      c.indices.map { i =>
-        val d = element_at(v, off + i + 1) - lit(c(i))
-        d * d
-      }.reduceLeft(_ + _)
     val bySub = cb.groupBy(_._1)
-    val codesExpr = array((0 until pqM).map { sub =>
-      val entries = bySub(sub).sortBy(_._2).map { case (_, code, c) =>
-        struct(l2sqFlat(col("nv"), sub * pqDsub, c).as("d2"), lit(code).as("code"))
-      }
-      array_min(array(entries: _*)).getField("code")
+    val codes = array((0 until pqM).map { sub =>
+      val codebook = Centroids(bySub(sub).map { case (_, code, c) => (code.toLong, c.toArray) },
+        CentroidScore.L2sq)
+      vectors.nearestCentroids(slice(col("nv"), lit(sub * pqDsub + 1), lit(pqDsub)), codebook, 1)
+        .getItem(0).getField("id").cast("int")
     }: _*)
-    val cellEntries = cents.sortBy(_._1).map { case (cell, c) =>
-      struct(l2sqCol(col("nv"), typedlit(c)).as("d2"), lit(cell).as("cell"))
-    }
     emb
       .filter(norm > 0)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double") / norm).as("nv"))
-      // MaterializeOnce (guide §4.4): the codes kernel (pqM·pqKs l2sq
-      // folds) must evaluate once per VECTOR, below the cell explode —
-      // written in one select, the optimizer hoists the projection above
-      // the Generate and pays the kernel once per (vector, cell), i.e.
-      // pqAssign times (measured: 2.8 → 4.5 s on the build query).
-      // WscgFence on the cheap vec_id column keeps this projection OUT of
-      // whole-stage codegen: the flat kernel's ~1k-term literal volume
-      // exceeds Janino's method limit when inlined into processNext(),
-      // while the row-mode projection compiles it with working splits.
-      .select(graft.functions.WscgFence(col("vec_id")).as("vec_id"),
-        graft.functions.MaterializeOnce(codesExpr).as("codes"), col("nv"))
+      .select(col("vec_id"), codes.as("codes"), col("nv"))
       .select(col("vec_id"), col("codes"),
-        explode(slice(array_sort(array(cellEntries: _*)), 1, pqAssign)).as("bc"))
-      .select(col("vec_id"), col("codes"), col("bc.cell").as("cell"))
+        explode(vectors.nearestCentroids(col("nv"), cells, pqAssign).getField("id")
+          .cast("array<int>")).as("cell"))
   }
 
-  /** Collect a (cell, c) centroids frame back to the driver in cell order
-    * — index metadata ([[pqCells]] rows), shared by every query path that
-    * ranks probe cells.
+  /** Collect a (cell, c) centroids frame back to the driver as the l2²
+    * cell matrix — index metadata ([[pqCells]] rows), shared by the encode
+    * and every query path that ranks probe cells.
     */
-  private[graft] def centsOf(centsDf: DataFrame): Seq[(Int, Seq[Double])] = {
-    val s = centsDf.sparkSession
-    import s.implicits._
-    centsDf.select(col("cell").cast("int"), col("c").cast("array<double>"))
-      .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq
-  }
+  private[graft] def centsOf(centsDf: DataFrame): Centroids =
+    collectCentroids(centsDf.select("cell", "c"), CentroidScore.L2sq)
 
   /** Driver-side half of the PQ build: per-subspace k-means over the
     * budget-capped training slice. Seeds are the first [[pqKs]] training
     * vec_ids ascending (the surviving-seeds convention — an id gap can
     * never silently shrink the codebook); each Lloyd round assigns every
     * training subvector to its nearest centroid with lowest-code tiebreak
-    * (the min(struct(d2, code)) argmin, in plain loops) and recomputes
+    * (the encode's own selection, [[VectorOps.nearest]]) and recomputes
     * means in deterministic point order. A centroid that attracts no
     * points keeps its previous value, preserving the full code range for
     * the encode.
@@ -1565,9 +1531,10 @@ object LlmOps {
   /** The shared driver-side Lloyd loop behind [[trainCodebookDriver]]
     * (pqDsub-dim subvectors, one run per subspace) and
     * [[trainCoarseDriver]] (full-dim coarse cells): assign every point to
-    * its nearest centroid with lowest-index tiebreak (strict `<`), then
-    * recompute means in deterministic point order; an empty centroid
-    * keeps its previous value so no code/cell index is ever lost.
+    * its l2²-nearest centroid with lowest-index tiebreak
+    * ([[VectorOps.nearest]]), then recompute means in deterministic point
+    * order; an empty centroid keeps its previous value so no code/cell
+    * index is ever lost.
     */
   private def lloydDriver(pts: Array[(Long, Array[Double])],
                           seeds: Array[Array[Double]], rounds: Int,
@@ -1576,17 +1543,9 @@ object LlmOps {
     for (_ <- 1 to rounds) {
       val sums = Array.fill(cents.length)(new Array[Double](dim))
       val cnts = new Array[Long](cents.length)
+      val book = Centroids(cents.indices.map(c => (c.toLong, cents(c))), CentroidScore.L2sq)
       for ((_, v) <- pts) {
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          var d = 0.0
-          var i = 0
-          while (i < dim) { val t = v(i) - cents(c)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c } // strict < = lowest-index tiebreak
-          c += 1
-        }
+        val best = VectorOps.nearest(v, book, 1)._1(0)
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
         cnts(best) += 1
@@ -1613,15 +1572,14 @@ object LlmOps {
     * ranking, so the cell a query probes first is the cell its true
     * neighbors most likely live in.
     */
-  private def trainCoarseDriver(
-      train: Array[(Long, Int, Seq[Double])]): Seq[(Int, Seq[Double])] = {
+  private def trainCoarseDriver(train: Array[(Long, Int, Seq[Double])]): Centroids = {
     val full: Array[(Long, Array[Double])] = train.groupBy(_._1).toArray
       .map { case (id, subs) => (id, subs.sortBy(_._2).flatMap(_._3.toArray)) }
       .sortBy(_._1)
     val byId = full.toMap
     val seeds = full.map(_._1).sorted.take(pqCells).map(byId)
     val cents = lloydDriver(full, seeds, pqCoarseRounds, pqM * pqDsub)
-    cents.indices.map(c => (c, cents(c).toSeq))
+    Centroids(cents.indices.map(c => (c.toLong, cents(c))), CentroidScore.L2sq)
   }
 
   /** The PQ QUERY PATH over a (possibly persisted) index: ADC tables from
@@ -1651,8 +1609,7 @@ object LlmOps {
     // scan's PartitionFilters, so a cell-partitioned standing code table
     // reads only the probed partitions (the log_sql_search_served
     // pruning pattern applied to vectors).
-    val cn = centsOf(cents)
-    val probes = pqProbes(s, dir, cn, maxQ)
+    val probes = pqProbes(s, dir, centsOf(cents), maxQ)
     val probeDf = probes.toDF("q_id", "cell")
     val cellList = probes.map(_._2).distinct.sorted
     val pruned = codes.filter(col("cell").isin(cellList: _*))
@@ -1689,27 +1646,21 @@ object LlmOps {
   }
 
   /** Per-query probe plan: each query's [[pqNprobe]] nearest coarse cells
-    * by centroid L2 (≡ cosine on unit vectors), lowest-cell tiebreak.
+    * by centroid l2² (≡ cosine on unit vectors), lowest-cell tiebreak.
     * Runs driver-side over the collected query subvectors (re-assembled
     * into full vectors — sub order restores the exact doubles) — shared
     * by the programmatic shortlist and the SQL face so the two can never
     * rank probes differently.
     */
-  private[graft] def pqProbes(s: SparkSession, dir: String,
-                              cents: Seq[(Int, Seq[Double])],
+  private[graft] def pqProbes(s: SparkSession, dir: String, cells: Centroids,
                               maxQ: Long): Seq[(Long, Int)] = {
     import s.implicits._
     val qsv = pqNormSubvectors(s, dir).filter(col("vec_id") < maxQ)
       .select(col("vec_id"), col("sub").cast("int"), col("sv"))
       .as[(Long, Int, Seq[Double])].collect()
-    val centArr = cents.sortBy(_._1).map { case (cell, c) => (cell, c.toArray) }
     qsv.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, subs) =>
       val v = subs.sortBy(_._2).flatMap(_._3.toArray)
-      centArr.map { case (cell, c) =>
-        var d = 0.0; var i = 0
-        while (i < v.length) { val t = v(i) - c(i); d += t * t; i += 1 }
-        (d, cell)
-      }.sorted.take(pqNprobe).map { case (_, cell) => (q, cell) }
+      VectorOps.nearest(v, cells, pqNprobe)._1.toSeq.map(j => (q, cells.ids(j).toInt))
     }
   }
 
@@ -2718,45 +2669,42 @@ object LlmOps {
     * k=8 lowest vec_ids — a deterministic seed choice; a real loop feeds
     * the M-step means back in, same plan shape every iteration.
     *
-    * 100 TB: the k-row centroid table broadcasts, assignment is a map-side
-    * argmax over the corpus scan (corpus never shuffles — the codegen'd
-    * cosine kernel runs inside the scan pipeline), and the final profile
+    * 100 TB: the k centroid rows are collected to the driver, assignment
+    * is a map-side pick over the corpus scan (corpus never shuffles — the
+    * codegen'd cosine kernel runs inside the scan pipeline), and the final profile
     * aggregates on k keys. Assignment ranks on ROUND(cos,4) with
     * centroid-id tie-break, the same cross-engine-stable ordering the knn
     * top-k uses.
     */
   /** The shared E-step of the centroid family (llm_centroid_assign,
     * llm_embed_outliers, llm_semdedup): every vector's max-cosine centroid
-    * as a MAP-SIDE argmax — `min(struct(−round(cos,4), c_id))` over the
-    * centroids inlined as literals, the exact winner of the declared
-    * `ORDER BY cos_sim DESC, c_id` window (double negation is a bit-exact
-    * involution; the struct ordering ties on the same rounded doubles and
-    * breaks on the same c_id). The centroids are k driver-collected rows
-    * (the PCA co-moment / Lloyd metadata discipline), so the assignment
-    * runs with ZERO exchanges: the window formulation this replaces
-    * shuffled the whole corpus (embedding payload included) through a
-    * vec_id exchange per consumer just to rank k broadcast rows that were
-    * already co-resident with each vector. Returns (vec_id, embedding,
-    * best) — callers project `best.c_id` / `−best.nc`.
-    *
-    * NaN note: a zero-norm vector or centroid would make cos NaN, which
-    * Spark's struct-min ranks LAST while the window's DESC ranked it
-    * first; no fixture contains a zero-norm embedding (checked at all
-    * three SFs) and the PQ family already norm-filters, so the declared
-    * results are unaffected.
+    * as a MAP-SIDE pick — the nearest-centroid kernel under the
+    * ROUND(cos, 4) spelling, whose ordering IS the declared
+    * `ORDER BY cos_sim DESC, c_id` window's: NaN ranks greatest (a
+    * zero-norm vector or centroid scores NaN and wins, as in the window),
+    * −0.0 equals 0.0, ties go to the lowest c_id. The centroids are k
+    * driver-collected rows (the PCA co-moment / Lloyd metadata
+    * discipline), so the assignment runs with ZERO exchanges. Returns
+    * (vec_id, embedding, best) — callers project `best.id` (the c_id) and
+    * `best.score` (the rounded cosine).
     */
-  private def centroidArgmax(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    val entries = cents.map { case (cid, cemb) =>
-      struct((-round(vectors.cosineSim(col("embedding"), typedlit(cemb)), 4)).as("nc"),
-        lit(cid).as("c_id"))
-    }
+  private[graft] def centroidArgmax(e: DataFrame): DataFrame = {
+    val cents = collectCentroids(e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
+      CentroidScore.Cosine4)
     e.select(col("vec_id"), col("embedding"),
-      array_min(array(entries: _*)).as("best"))
+      vectors.nearestCentroids(col("embedding"), cents, 1).getItem(0).as("best"))
+  }
+
+  /** A small two-column (id, vector) frame collected as the kernel's
+    * centroid matrix — k rows of index metadata, the driver-side half of
+    * every E-step.
+    */
+  private def collectCentroids(df: DataFrame, score: CentroidScore): Centroids = {
+    val s = df.sparkSession
+    import s.implicits._
+    val Array(id, vec) = df.columns
+    Centroids(df.select(col(id).cast("long"), col(vec).cast("array<double>"))
+      .as[(Long, Array[Double])].collect().toSeq, score)
   }
 
   val centroidAssign = Q(
@@ -2779,7 +2727,7 @@ object LlmOps {
     // map-side argmax (r13, [[centroidArgmax]]): the corpus never
     // shuffles; the profile aggregates on k keys
     centroidArgmax(Tables.embeddings(s, dir))
-      .select(col("best.c_id").as("c_id"), (-col("best.nc")).as("cos_sim"))
+      .select(col("best.id").as("c_id"), col("best.score").as("cos_sim"))
       .groupBy("c_id")
       .agg(count(lit(1)).as("n_members"),
         (round(avg("cos_sim"), 4) + lit(0.0)).as("avg_sim"))
@@ -2830,8 +2778,7 @@ object LlmOps {
     // map-side argmax (r13, [[centroidArgmax]]): assignment costs zero
     // exchanges; only (vec_id, c_id, cos_sim) reaches the stats rollup
     val asg = centroidArgmax(Tables.embeddings(s, dir))
-      .select(col("vec_id"), col("best.c_id").as("c_id"),
-        (-col("best.nc")).as("cos_sim"))
+      .select(col("vec_id"), col("best.id").as("c_id"), col("best.score").as("cos_sim"))
     val stats = asg.groupBy("c_id")
       .agg(round(avg("cos_sim"), 4).as("mean4"),
         round(stddev_samp("cos_sim"), 4).as("std4"))
@@ -2851,8 +2798,8 @@ object LlmOps {
     * artifact a curation pipeline feeds to the filter stage.
     *
     * This is the scale answer to the exact all-pairs scan's inherent n²/2
-    * ([[exactCosinePairs]]): the cluster assignment (broadcast k
-    * centroids, map-side argmax — corpus never shuffles) cuts candidate
+    * ([[exactCosinePairs]]): the cluster assignment (k driver-collected
+    * centroids, map-side pick — corpus never shuffles) cuts candidate
     * pairs to Σ|cluster|²/2, and within each cluster the same block-grid
     * equi-join distributes the remaining work in B² bounded cells keyed on
     * (c_id, ci, cj). k and B are the two knobs: k grows with corpus size
@@ -2898,7 +2845,7 @@ object LlmOps {
     // argmax is k codegen'd cosine kernels per row, cheaper than a
     // row-format corpus copy at any scale.
     val asg = centroidArgmax(Tables.embeddings(s, dir))
-      .select(col("vec_id"), col("best.c_id").as("c_id"), col("embedding"))
+      .select(col("vec_id"), col("best.id").as("c_id"), col("embedding"))
     // Same one-cell-per-unordered-pair block grid as nearDupCosine, with the
     // cluster id joined in front — pairs never cross clusters.
     val aSide = asg
@@ -2991,23 +2938,20 @@ object LlmOps {
   }
 
   /** One Lloyd E-step: assign each vector to its nearest centroid by
-    * squared Euclidean distance (|a|² + |c|² − 2·a·c, all three terms in
-    * the codegen'd kernels). The centroid side is ≤ k rows and broadcast —
-    * the corpus NEVER shuffles during assignment, the one property that
-    * makes distributed k-means affordable at 100 TB. Ties break on c_id
-    * so assignment is a deterministic function of (vectors, centroids).
+    * squared Euclidean distance (|a|² + |c|² − 2·a·c, the declared double
+    * arithmetic of the dot-product kernels), ties to the lowest c_id. The
+    * ≤ k (c_id, c_emb) centroid rows are collected to the driver and the
+    * pick is the nearest-centroid kernel inside the corpus scan: no join,
+    * no window, and the corpus NEVER shuffles during assignment — the one
+    * property that makes distributed k-means affordable at 100 TB.
     */
-  def kmeansAssign(e: DataFrame, centroids: DataFrame): DataFrame = {
-    val d2 = vectors.dotProduct(col("embedding"), col("embedding")) +
-      vectors.dotProduct(col("c_emb"), col("c_emb")) -
-      lit(2.0) * vectors.dotProduct(col("embedding"), col("c_emb"))
-    val w = Window.partitionBy("vec_id").orderBy(col("d2").asc, col("c_id").asc)
-    e.join(broadcast(centroids))
-      .withColumn("d2", d2)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("c_id"), col("d2"))
-  }
+  def kmeansAssign(e: DataFrame, centroids: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("embedding"),
+        vectors.nearestCentroids(col("embedding"),
+          collectCentroids(centroids.select("c_id", "c_emb"), CentroidScore.DotL2sq), 1)
+          .getItem(0).as("best"))
+      .select(col("vec_id"), col("embedding"), col("best.id").as("c_id"),
+        col("best.score").as("d2"))
 
   /** One Lloyd M-step: recompute each centroid as the element-wise mean of
     * its members. posexplode fans (vector, dim) rows into a partial-agged
@@ -3032,16 +2976,16 @@ object LlmOps {
     * each round is a full corpus scan, so production k-means budgets
     * rounds up front (LlmOpsSpec pins that SSE is non-increasing round
     * over round, the Lloyd invariant). Per round the only driver action
-    * is the k-row centroid localCheckpoint that truncates lineage —
-    * metadata-sized, the same pattern clusterPairs uses.
+    * is [[kmeansAssign]]'s collect of the previous round's k centroids —
+    * metadata-sized, and it keeps the lineage one round deep; the only
+    * shuffle carries the M-step's (c_id, pos) partial sums, never vectors.
     */
   def kmeans(e: DataFrame, k: Int, iters: Int): DataFrame = {
     var c = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-      .localCheckpoint()
     var it = 0
     while (it < iters) {
-      c = kmeansCentroids(kmeansAssign(e, c)).localCheckpoint()
+      c = kmeansCentroids(kmeansAssign(e, c))
       it += 1
     }
     kmeansAssign(e, c)

@@ -283,13 +283,13 @@ object Stores {
     * (schema + file index) is memoized; execution scans parquet every
     * run. The listing itself is driver-side metadata (no Spark job). An
     * empty or unreadable listing falls through to the plain read so
-    * errors surface as Spark's own, not a memo artifact.
+    * errors surface as Spark's own, not a memo artifact. The memo holds
+    * ONE entry per path — a changed fingerprint replaces it, so refreshes
+    * never strand old frames — and the resolution runs outside the lock;
+    * two threads racing one miss both resolve, and the later replaces the
+    * earlier (frames are lazy, so either is correct).
     */
   def readCached(spark: SparkSession, path: String): DataFrame = {
-    // runtime kill switch (spark.graft.storeReadMemo=false): bypass the
-    // memo entirely — the measurement/debug escape hatch
-    if (spark.conf.getOption("spark.graft.storeReadMemo").contains("false"))
-      return spark.read.parquet(path)
     val fp = try {
       val sig = Fs.shallowSignature(path).sorted.mkString("|")
       if (sig.isEmpty) null
@@ -297,23 +297,21 @@ object Stores {
         .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     } catch { case _: Throwable => null }
     if (fp == null) return spark.read.parquet(path)
-    val key = s"${Fs.qualify(path)}@$fp"
-    readMemo.synchronized {
-      val perSession = {
-        val m = readMemo.get(spark)
-        if (m != null) m else {
-          val fresh = scala.collection.mutable.HashMap.empty[String, DataFrame]
-          readMemo.put(spark, fresh)
-          fresh
-        }
-      }
-      perSession.getOrElseUpdate(key, spark.read.parquet(path))
+    val key = Fs.qualify(path)
+    val memo = readMemo.synchronized(
+      readMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty))
+    memo.synchronized(memo.get(key)).collect { case (`fp`, df) => df }.getOrElse {
+      val df = spark.read.parquet(path)
+      memo.synchronized(memo(key) = (fp, df))
+      df
     }
   }
 
-  /** session → (store component fingerprint → lazy frame); weak keys die
-    * with their session (the `Tables.loadMemo` convention).
+  /** session → (qualified store component path → (fingerprint, lazy
+    * frame)); weak keys die with their session (the `Tables.loadMemo`
+    * convention).
     */
-  private val readMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, org.apache.spark.sql.DataFrame]]()
+  private[graft] val readMemo =
+    new java.util.WeakHashMap[SparkSession,
+      scala.collection.mutable.HashMap[String, (String, org.apache.spark.sql.DataFrame)]]()
 }

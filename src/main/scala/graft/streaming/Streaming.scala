@@ -340,9 +340,8 @@ object Streaming {
     * is emitted the moment its successor header arrives, which is the
     * only point a tailer can know the record is complete. The final
     * in-flight record intentionally stays in state (it may still be
-    * growing); production adds an event/processing-time timeout flush to
-    * cap emission latency, the same eviction pattern
-    * [[errorBurstsEvicting]] demonstrates.
+    * growing); production adds an event-time timeout flush
+    * (`GroupStateTimeout.EventTimeTimeout`) to cap emission latency.
     *
     * Within a micro-batch the group's rows are sorted by (doc_id, line_no)
     * before folding — Spark does not order rows inside a group, and the
@@ -373,164 +372,6 @@ object Streaming {
           if (st != null) state.update(st)
           out.iterator
       }
-  }
-
-  /** T6 + T4 (state eviction): the burst detector with an event-time idle
-    * timeout. A user whose last error sits more than `idleEvictMs` behind
-    * the advancing watermark has their state removed, so the state store
-    * is bounded by the ACTIVE-user set instead of the all-time user set —
-    * on an unbounded log that is the difference between per-executor state
-    * that fits in memory and state that grows forever ([[errorBursts]]
-    * deliberately omits the timeout so its output is exactly the batch
-    * formula; this variant is the production shape). After eviction a
-    * returning user restarts the count from zero.
-    */
-  def errorBurstsEvicting(events: Dataset[Ev],
-                          idleEvictMs: Long = 3600000L): Dataset[Alert] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .filter(_.event_type == "error")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[BurstState, Alert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Ev], state: GroupState[BurstState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(BurstState(0L, 0L))
-            var maxTsMs = Long.MinValue
-            val alerts = scala.collection.mutable.ArrayBuffer.empty[Alert]
-            rows.foreach { ev =>
-              maxTsMs = math.max(maxTsMs, ev.ts.getTime)
-              st = st.copy(errors = st.errors + 1)
-              if (st.errors % 3 == 0) {
-                st = st.copy(alerts = st.alerts + 1)
-                alerts += Alert(userId, st.errors, st.alerts)
-              }
-            }
-            state.update(st)
-            // The timeout must sit strictly above the current watermark or
-            // Spark rejects it (a batch can deliver only late rows).
-            if (maxTsMs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTsMs + idleEvictMs, state.getCurrentWatermarkMs() + 1))
-            alerts.iterator
-          }
-      }
-  }
-
-  /** T6 on the Spark 4 state API: the same burst detector as a
-    * [[StatefulProcessor]] for `transformWithState` — typed per-state-var
-    * handles (vs one opaque blob), TTL support, and timers without the
-    * GroupState timeout contortions. Requires the RocksDB state store
-    * provider when run in a stream. Kept semantically identical to
-    * [[errorBursts]] so one batch twin oracles both implementations.
-    */
-  class BurstProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, Alert] {
-    @transient private var burst: org.apache.spark.sql.streaming.ValueState[BurstState] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      burst = getHandle.getValueState[BurstState](
-        "burst",
-        org.apache.spark.sql.Encoders.product[BurstState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[Ev],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Alert] = {
-      var st = Option(burst.get()).getOrElse(BurstState(0L, 0L))
-      val alerts = scala.collection.mutable.ArrayBuffer.empty[Alert]
-      rows.foreach { _ =>
-        st = st.copy(errors = st.errors + 1)
-        if (st.errors % 3 == 0) {
-          st = st.copy(alerts = st.alerts + 1)
-          alerts += Alert(userId, st.errors, st.alerts)
-        }
-      }
-      burst.update(st)
-      alerts.iterator
-    }
-  }
-
-  def errorBurstsTws(events: Dataset[Ev]): Dataset[Alert] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(_.event_type == "error")
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new BurstProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  /** [[errorBurstsEvicting]] on the Spark 4 state API: the idle-eviction
-    * semantics expressed with first-class event-time TIMERS instead of the
-    * single GroupState timeout slot. Each batch re-arms one eviction timer
-    * at (last event time + idleEvictMs) — deleting the previously armed
-    * one first, since timers are not replaced implicitly and a stale timer
-    * would fire later and clear a still-active user's state. On expiry the
-    * state is dropped, so the store holds only users seen within the idle
-    * horizon of the watermark — the same 100 TB state bound as the
-    * GroupState variant, kept semantically identical so one spec can pin
-    * both implementations against each other.
-    */
-  class EvictingBurstProcessor(idleEvictMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, Alert] {
-    @transient private var burst: org.apache.spark.sql.streaming.ValueState[BurstState] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      burst = getHandle.getValueState[BurstState](
-        "burst",
-        org.apache.spark.sql.Encoders.product[BurstState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[Ev],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Alert] = {
-      var st = Option(burst.get()).getOrElse(BurstState(0L, 0L))
-      var maxTsMs = Long.MinValue
-      val alerts = scala.collection.mutable.ArrayBuffer.empty[Alert]
-      rows.foreach { ev =>
-        maxTsMs = math.max(maxTsMs, ev.ts.getTime)
-        st = st.copy(errors = st.errors + 1)
-        if (st.errors % 3 == 0) {
-          st = st.copy(alerts = st.alerts + 1)
-          alerts += Alert(userId, st.errors, st.alerts)
-        }
-      }
-      burst.update(st)
-      if (maxTsMs != Long.MinValue) {
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(
-          math.max(maxTsMs + idleEvictMs, timers.getCurrentWatermarkInMs() + 1))
-      }
-      alerts.iterator
-    }
-
-    override def handleExpiredTimer(
-        userId: Long,
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Alert] = {
-      burst.clear()
-      Iterator.empty
-    }
-  }
-
-  def errorBurstsTwsEvicting(events: Dataset[Ev],
-                             idleEvictMs: Long = 3600000L): Dataset[Alert] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .filter(_.event_type == "error")
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new EvictingBurstProcessor(idleEvictMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
   }
 
   // ---- T7: stream-stream join ----

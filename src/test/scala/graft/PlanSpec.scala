@@ -383,14 +383,14 @@ class PlanSpec extends SparkSpecBase {
     * does not apply. Everything else in the registry must plan without
     * either node — the single most common way a query that passes at
     * sf0.01 dies at 100 TB is an accidental cartesian (a typo'd join key,
-    * a non-equi condition Spark can't hash) that nobody looked at.
+    * a non-equi condition Spark can't hash) that nobody looked at. An
+    * entry whose query plans neither node is stale and fails the test, so
+    * the list cannot outlive the plans it excuses.
     */
   private val unboundedJoinAllowlist: Map[String, String] = Map(
     "join_cross"            -> "the operator IS a cartesian (5-row region × 25-row nation dims)",
     "llm_knn_cosine"        -> "100-row query side broadcast over the corpus — corpus never shuffles",
     "llm_hard_negatives"    -> "100-row anchor side broadcast over the corpus (knn discipline); label inequality rides the join",
-    "llm_ann_lsh"           -> "bucketed candidates; residual BNLJ side is the 100-row query set",
-    "llm_ann_ivf"           -> "centroid table ≤ 2^bits rows, broadcast by construction",
     // llm_ann_ivfpq / _indexed / llm_sql_ann_served left the allowlist in
     // r12: the IVF probe stage turned the ADC-table BNLJ into a broadcast
     // HASH join on the coarse cell, so their plans now clear the rule
@@ -399,15 +399,7 @@ class PlanSpec extends SparkSpecBase {
                                 "into the BM25 score — metadata rebase"),
     "log_trending_templates"-> ("single-row day-census aggregate cross-joined into the lift " +
                                 "denominator — metadata rebase over (day, template) counts"),
-    "llm_centroid_assign"   -> "k=8 centroid table broadcast; corpus side never shuffles",
-    "llm_kmeans"            -> "k=8 centroid table broadcast per Lloyd round; corpus never shuffles in the E-step",
-    "llm_semdedup"          -> "k=8 centroid table broadcast for assignment; pair scan itself is the (c_id, ci, cj) equi-join",
     "llm_dataset_card"      -> "single-row corpus-total aggregate cross-joined into pct_corpus",
-    "llm_embed_outliers"    -> "k=8 centroid table broadcast; 8-row stats re-broadcast",
-    "llm_jaccard_pairs"     -> "single-row n_docs aggregate cross-joined into the df-cap",
-    "llm_incremental_dedup" -> "single-row n_docs aggregate cross-joined into the existing-side df-cap",
-    "llm_shingle_jaccard"   -> "single-row n_docs aggregate cross-joined into the df-cap",
-    "text_winnow_pairs"     -> "single-row n_docs aggregate cross-joined into the df-cap (winnow postings)",
     "llm_tfidf"             -> "single-row corpus-count aggregate cross-joined into idf",
     "filter_scalar_subquery"-> "single-row scalar aggregate broadcast as the filter bound",
     "llm_domain_mix"        -> "single-row totals aggregate cross-joined into the weights",
@@ -418,11 +410,6 @@ class PlanSpec extends SparkSpecBase {
     "log_drift_daily"       -> "single-row global min/max and bin-total aggregates cross-joined into the binning and the KL normalizer",
     "stream_drift_1h"       -> "single-row baseline bounds + 1-row baseline histogram broadcast into the per-window KL projection (streaming-legal single aggregation)",
     "log_type_affinity"     -> "single-row session-count aggregate cross-joined into the lift",
-    "log_pagerank_types"    -> ("per-round single-row node-count and dangling-mass aggregates " +
-                                "cross-joined back as explicit broadcasts — metadata, not data"),
-    "text_bpe_merges"       -> ("per-round single-row argmax pair cross-joined back as an " +
-                                "explicit broadcast into the vocab-sized merge pass"),
-    "text_bpe_apply"        -> "inherits text_bpe_merges' per-round single-row broadcast (shared trainer)",
     "text_quality_classifier" -> ("per-round single-row weight and gradient aggregates " +
                                 "cross-joined back as explicit broadcasts — 4-key shuffle, never documents"),
     "log_resample_fill"     -> ("hour spine (exploded 1-row min/max agg) × ≤5-row distinct " +
@@ -462,6 +449,25 @@ class PlanSpec extends SparkSpecBase {
     }
     assert(offenders.isEmpty,
       s"queries with un-allowlisted cartesian/BNLJ plans: $offenders")
+    val planned = results.collect { case (name, Right(plan)) => name -> plan }.toMap
+    val stale = unboundedJoinAllowlist.keys.filterNot { name =>
+      planned.get(name).exists(p => p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
+    }
+    assert(stale.isEmpty, s"allowlisted queries that plan no cartesian/BNLJ: $stale")
+  }
+
+  test("k-means E-step plans no window and moves no embedding through an exchange") {
+    val plan = LlmOps.kmeansEmbed.build(spark, sfDir).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val windows = plan.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+    assert(windows.isEmpty, s"llm_kmeans plans a Window:\n$plan")
+    val carriers = plan.collect {
+      case x: org.apache.spark.sql.execution.exchange.Exchange
+        if x.output.exists(_.name == "embedding") => x.nodeName
+    }
+    assert(carriers.isEmpty, s"exchanges carrying embedding: $carriers\n$plan")
   }
 
   // ---- r12 optimization pins (OPTIMIZATION_r12.md) -------------------------

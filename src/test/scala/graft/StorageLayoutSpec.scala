@@ -199,6 +199,26 @@ class StorageLayoutSpec extends SparkSpecBase {
     assert(second.count() >= nBefore)
   }
 
+  test("store read memo: N refreshes of one store leave one memo entry for its path") {
+    val events = graft.engine.Tables.events(spark, sfDir)
+    val cuts = events.selectExpr("percentile(ts_ns, array(0.4, 0.6, 0.8))").head().getSeq[Double](0)
+      .map(_.toLong)
+    val dir = s"$tmp/rollup_memo_n"
+    graft.sources.Sinks.writeDailyRollup(events.filter(col("ts_ns") <= cuts.head), dir)
+    val frames = graft.sources.Stores.readCached(spark, dir) +:
+      (cuts :+ Long.MaxValue).sliding(2).map { case Seq(lo, hi) =>
+        graft.sources.Sinks.refreshDailyRollup(spark, dir,
+          events.filter(col("ts_ns") > lo && col("ts_ns") <= hi))
+        graft.sources.Stores.readCached(spark, dir)
+      }.toSeq
+    assert(frames.map(System.identityHashCode).distinct.size === frames.size,
+      "every refresh must resolve a fresh frame")
+    val key = graft.sources.Fs.qualify(dir)
+    val entries = graft.sources.Stores.readMemo.synchronized(graft.sources.Stores.readMemo.get(spark))
+      .keys.count(_.startsWith(key))
+    assert(entries === 1, s"$entries memo entries for one store path after ${frames.size - 1} refreshes")
+  }
+
   test("latency sketch store: incremental refresh of an append batch equals a full rebuild") {
     import spark.implicits._
     val events = graft.engine.Tables.events(spark, sfDir)

@@ -260,97 +260,6 @@ class StreamingSpec extends SparkSpecBase {
     assert(got === Seq(Streaming.Alert(9L, 3L, 1L), Streaming.Alert(9L, 6L, 2L)))
   }
 
-  test("event-time timeout evicts idle burst state; returning user restarts at zero") {
-    val input = MemoryStream[Streaming.Ev](spark)
-    val q = Streaming.errorBurstsEvicting(input.toDS())
-      .writeStream.format("memory").queryName("evict_sink").outputMode("append").start()
-    try {
-      // user 7: two errors — one short of an alert; timeout set to minute 61
-      input.addData(Seq(
-        Streaming.Ev(1L, ts(0), 7L, "error", 1.0),
-        Streaming.Ev(2L, ts(1), 7L, "error", 1.0)))
-      q.processAllAvailable()
-      // user 6 advances event time to minute 600 → watermark 540 ≫ 61
-      input.addData(Seq(Streaming.Ev(3L, ts(600), 6L, "error", 1.0)))
-      q.processAllAvailable()
-      // next batch fires user 7's timeout → state removed
-      input.addData(Seq(Streaming.Ev(4L, ts(601), 6L, "error", 1.0)))
-      q.processAllAvailable()
-      // user 7 returns with two errors: with surviving state these would be
-      // errors 3 and 4 (→ alert); after eviction they are 1 and 2 (→ none)
-      input.addData(Seq(
-        Streaming.Ev(5L, ts(610), 7L, "error", 1.0),
-        Streaming.Ev(6L, ts(611), 7L, "error", 1.0)))
-      q.processAllAvailable()
-      // positive control: user 6's third error still alerts
-      input.addData(Seq(Streaming.Ev(7L, ts(620), 6L, "error", 1.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("evict_sink").as[Streaming.Alert].collect().toSeq
-    assert(got === Seq(Streaming.Alert(6L, 3L, 1L)))
-  }
-
-  test("timer-based transformWithState eviction matches the GroupState timeout variant") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // identical scenario to the GroupState eviction test above: user 7's
-      // two pre-idle errors must not combine with the two post-idle ones
-      val input = MemoryStream[Streaming.Ev](spark)
-      val q = Streaming.errorBurstsTwsEvicting(input.toDS())
-        .writeStream.format("memory").queryName("tws_evict_sink").outputMode("append").start()
-      try {
-        input.addData(Seq(
-          Streaming.Ev(1L, ts(0), 7L, "error", 1.0),
-          Streaming.Ev(2L, ts(1), 7L, "error", 1.0)))
-        q.processAllAvailable()
-        input.addData(Seq(Streaming.Ev(3L, ts(600), 6L, "error", 1.0)))
-        q.processAllAvailable()
-        input.addData(Seq(Streaming.Ev(4L, ts(601), 6L, "error", 1.0)))
-        q.processAllAvailable()
-        input.addData(Seq(
-          Streaming.Ev(5L, ts(610), 7L, "error", 1.0),
-          Streaming.Ev(6L, ts(611), 7L, "error", 1.0)))
-        q.processAllAvailable()
-        input.addData(Seq(Streaming.Ev(7L, ts(620), 6L, "error", 1.0)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("tws_evict_sink").as[Streaming.Alert].collect().toSeq
-      assert(got === Seq(Streaming.Alert(6L, 3L, 1L)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState burst detector matches flatMapGroupsWithState") {
-    // the Spark 4 state API needs the RocksDB provider for streaming state
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val errs = (1 to 8).map(i => Streaming.Ev(200L + i, ts(i), 4L, "error", 1.0))
-      val input = MemoryStream[Streaming.Ev](spark)
-      val q = Streaming.errorBurstsTws(input.toDS())
-        .writeStream.format("memory").queryName("tws_sink").outputMode("append").start()
-      try {
-        input.addData(errs.take(5)); q.processAllAvailable()
-        input.addData(errs.drop(5)); q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("tws_sink").as[Streaming.Alert].collect().sortBy(_.alert_no).toSeq
-      // 8 errors → alerts at the 3rd and 6th, identical to errorBursts
-      assert(got === Seq(Streaming.Alert(4L, 3L, 1L), Streaming.Alert(4L, 6L, 2L)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("stream-stream attribution join: two MemoryStreams equal the batch twin") {
     val clicks = Seq(
       Streaming.Ev(10L, ts(0), 0L, "click", 0.0),
