@@ -37,7 +37,7 @@ object Plans {
     "text_bigram_logprob" -> "bigram-count and prefix-count joins unhinted (bigram vocabulary must not broadcast at scale); occurrences partial-agg before the doc_id exchange",
     "agg_hll_union_daily" -> "both HLL aggregations partial-combine map-side: sketches merge in the combiner, raw events never reach the per-type union",
     "llm_bloom_decontaminate" -> "eval grams compressed into a driver-built Bloom sketch; train side is one scan + map-side membership probe, no shuffle of training text",
-    "llm_ann_ivfpq" -> "index build: codes and coarse cells come from the nearest-centroid kernel in one codegen'd projection over the embeddings scan (no join, no exchange); query: ADC tables ride as a 100-row broadcast over the code scan; re-rank fetch is a broadcast equi-join on vec_id touching only shortlist rows",
+    "llm_ann_ivfpq" -> "index build: codes and coarse cells come from the nearest-centroid kernel in one codegen'd projection over the embeddings scan (no join, no exchange); query: probe cells and ADC tables are built on the driver, the one distributed pass is the encode + code scan filtered to the probed cells, each partition returning a bounded per-query top-k for the driver to merge; the re-rank fetch reads only shortlist vec_ids — the dumped plan is the answer's LocalTableScan",
     "llm_kmeans" -> "Lloyd E-step is the nearest-centroid kernel inside the corpus scan against the driver-collected k centroids: no join, no window, no exchange carries an embedding; the only shuffles are the M-step (c_id, pos) partial sums and the k-key profile",
     "log_grep_multi" -> "all N rlike predicates evaluate in ONE codegen'd pass over a single text scan; adding a pattern adds a count column, never a scan",
     "llm_incremental_dedup" -> "digest probe ships 16-byte hashes; the near-dup postings join is batch x existing (small x large) — the standing corpus never self-joins",
@@ -54,7 +54,7 @@ object Plans {
     "log_indexed_search" -> "the standing-index lifecycle: partition-pruned posting-store scan (PartitionFilters on tok_bucket = the query terms' hash buckets); the documents corpus appears nowhere in the plan",
     "log_search_ranked" -> "BM25 with zero token shuffles: per-term tf and dl via size(filter(ts)) inside the scan (no Generate node), corpus stats as a single-row broadcast, TakeOrderedAndProject top-20",
     "log_indexed_search_ranked" -> "ranked retrieval with ZERO corpus reads: pruned posting buckets -> tf/df, docstats join for dl, (N, avgdl) from store meta; same oracle as the raw-scan BM25",
-    "llm_ann_ivfpq_indexed" -> "ANN served from the persisted index: ADC tables broadcast over the PERSISTED code-table scan; codebook read from parquet — no training stages in the plan",
+    "llm_ann_ivfpq_indexed" -> "ANN served from the persisted index: one pass over the PERSISTED code-table scan, pruned to the probed cell partitions, returns a bounded per-query top-k; ADC tables are built on the driver from the parquet codebook — no training job; the dumped plan is the answer's LocalTableScan",
     "llm_sql_ann_served" -> "the plain-SQL ANN face: the request's ADC distance tables (index metadata — queries × pqM × k doubles, computed driver-side from the codebook view with the identical float fold) ride in the inline VALUES LocalRelation, so the served plan is ONE broadcast join over the PQ code-table scan + the top-k window — the only file scan is the code store; embeddings.parquet appears nowhere (GraftSessionSpec-pinned)",
     "text_levenshtein_pairs" -> "blocked pair scan with kernel discipline: block-cap semi-join, kernel-free id/length prunes, then the Myers bit-parallel distance (O(n·m/64) vs the banded built-in's O(n·band)) evaluated ONCE per pair behind MaterializeOnce — the optimizer would otherwise inline it into the join condition 2-3x",
     "log_outage_windows_merged" -> "two-phase interval union: day-partitioned running-max sweep at corpus scale, then a single-partition sweep over the metadata-sized per-day outage rows to glue midnight-crossing pieces",

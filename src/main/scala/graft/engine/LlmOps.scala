@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import graft.functions.{CentroidScore, Centroids, VectorOps, vectors}
 
 /** LLM-training-data pipeline operators (SURVEY.md §2.9): deduplication,
@@ -1145,12 +1146,6 @@ object LlmOps {
       .orderBy("q_id", "rn")
   }
 
-  /** Squared L2 distance between two equal-length double arrays, in pure
-    * Column algebra (zip_with + aggregate) — the ADC distance tables.
-    */
-  private def l2sqCol(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
-
   /** PQ geometry for [[annIvfPq]]: 64-dim vectors → `pqM` subspaces of
     * `pqDsub` dims, `pqKs` centroids per subspace → an `pqM`-byte code per
     * vector (32× smaller than the float32 original). Shared with the spec.
@@ -1201,7 +1196,7 @@ object LlmOps {
     * per-subspace nearest-centroid codes: 8 small ints instead of 64
     * floats. Queries score candidates by Asymmetric Distance Computation:
     * one ‖q_sub − c‖² table per (query, subspace, code) — 100 × 8 × 16
-    * entries, built once and broadcast — and a candidate's approximate
+    * entries, built once on the driver — and a candidate's approximate
     * distance is [[pqM]] table lookups, no float math per pair at all.
     * The ADC top-[[pqShortlist]] shortlist is then RE-RANKED with exact
     * cosine against the original vectors — the FAISS refine step, which
@@ -1218,23 +1213,20 @@ object LlmOps {
     * encode are the INDEX BUILD — the only shuffles, carrying (vec_id,
     * cell, codes) rows, never vectors, and in production persisted like
     * any index. The query path is the part that must stay cheap at
-    * 100 TB and now is on BOTH axes: the ADC tables ride in as a 100-row
-    * broadcast (the [[knnCosine]] query-side discipline), and the code
-    * scan itself is PRUNED by the IVF stage to the request's probed
-    * cells — ~nprobe/pqCells of the compressed corpus, not all of it
-    * (flat PQ's full scan was this operator's one corpus-linear edge;
-    * FAISS-style IVF-PQ exists precisely to remove it). 10× more queries
-    * changes the broadcast and the probed-cell union, not the corpus.
+    * 100 TB, and only its code scan is distributed ([[pqSearch]]): the
+    * request — probe cells and ADC tables — is built on the driver, the
+    * scan is PRUNED to the request's probed cells (~nprobe/pqCells of the
+    * compressed corpus; flat PQ's full scan was this operator's one
+    * corpus-linear edge, and FAISS-style IVF-PQ exists to remove it), and
+    * each scan partition returns at most [[pqShortlist]] rows per query
+    * for the driver to merge. 10× more queries changes the request and
+    * the probed-cell union, not the corpus.
     */
   val annIvfPq = Q.noOracle("llm_ann_ivfpq") { (s, dir) =>
     val (cents, cb, codes) = pqTrainEncode(s, dir)
-    // localCheckpoint: the encoded index is a REDUCTION (pqM ints + a cell
-    // per vector — 32× below the embeddings; exactly the rows the store
-    // persists), and materializing it separates the build stage from the
-    // serve stage the way the production lifecycle does. Fused, the
-    // non-codegen encode projection drags the whole ADC probe join into
-    // one row-mode stage (measured 6.1 vs 3.8 s at sf0.1 local[32]).
-    pqSearch(s, dir, cents, cb, codes.localCheckpoint())
+    // No checkpoint: the encode runs once, inside the search's one pass
+    // over the code table, which is also the only job that reads it.
+    pqSearch(s, dir, cents, cb, codes)
   }
 
   /** The PERSISTED-index lifecycle behind [[annIvfPq]]: the codebook +
@@ -1270,11 +1262,10 @@ object LlmOps {
     * the corpus, and the final plan reads ONLY the standing index (zero
     * embeddings scans, GraftSessionSpec-pinned). The request's ADC
     * distance tables — queries × pqM × k doubles, index metadata — ride
-    * in WITH the request in the inline VALUES relation, computed
-    * driver-side from the codebook view with the exact float fold the
-    * in-plan `aggregate(zip_with(…))` spelling performed (squared diffs
-    * accumulated left-to-right in doubles; Double.toString/parse
-    * round-trips exactly), and the request's probe CELLS ride in as a
+    * in WITH the request in the inline VALUES relation, built on the
+    * driver from the codebook view by the programmatic path's own request
+    * builder ([[annRequest]]; Double.toString/parse round-trips exactly),
+    * and the request's probe CELLS ride in as a
     * second (q_id, cell) VALUES relation whose union doubles as the
     * literal IN-list that prunes the cell-partitioned code scan. The
     * served plan is then two inline-broadcast HASH joins over the PRUNED
@@ -1299,53 +1290,27 @@ object LlmOps {
   private[graft] def sqlAnnServedFor(s: SparkSession, dir: String,
                                      nQueries: Long): DataFrame = {
     graft.GraftSession.openStores(s, dir)
-    import s.implicits._
-    // the "request": the query vectors, normalized + sliced driver-side.
-    val qsv = pqNormSubvectors(s, dir).filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("sub"), col("sv"))
-      .as[(Long, Int, Seq[Double])].collect().sortBy(t => (t._1, t._2))
-    // IVF stage, driver-side like the tabs: rank coarse cells per query
-    // from the standing centroids view (pqCells rows of index metadata)
-    // through the SAME pqProbes the programmatic shortlist uses. The
-    // probe pairs ride in as a second inline VALUES relation, and the
-    // request-wide cell union becomes a LITERAL IN-list on the code
-    // table — which constant-folds into the partitioned scan's
-    // PartitionFilters, so the served query reads only the probed
-    // nprobe-of-pqCells cell partitions.
-    val probes = pqProbes(s, dir, centsOf(s.table("graft_pq_centroids")),
-      nQueries)
-    val probeValues = probes
-      .map { case (q, cell) => s"(${q}L, $cell)" }.mkString(", ")
-    val cellInList = probes.map(_._2).distinct.sorted.mkString(", ")
-    // The per-query ADC distance tables are INDEX-METADATA-sized (queries ×
-    // pqM × k doubles — 1 280 here), so they are computed driver-side from
-    // the standing codebook and inlined, rather than re-derived by three
-    // aggregation stages inside every served query: the served plan is then
-    // two inline-broadcast hash joins against the PRUNED code-table scan
-    // plus the top-k window — interactive-latency shape. Bit-identity with the programmatic
-    // path is preserved because the Scala loop below replays the exact
-    // float fold the old `aggregate(zip_with(…))` spelled — squared diffs
-    // accumulated left-to-right in doubles — and Double.toString/parse
-    // round-trips exactly, so the inlined map VALUES are the same bits the
-    // in-plan computation produced (the spec pins row-identity).
-    val cb = s.table("graft_pq_codebook")
-      .selectExpr("cast(sub as int) AS sub", "cast(code as int) AS code",
-        "cast(c as array<double>) AS c")
-      .as[(Int, Int, Seq[Double])].collect()
-      .groupBy(_._1).map { case (k, v) => k -> v.sortBy(_._2) }
-    def d2(q: Seq[Double], c: Seq[Double]): Double = {
-      val qa = q.toArray; val ca = c.toArray
-      var acc = 0.0; var i = 0
-      while (i < qa.length) { val dd = qa(i) - ca(i); acc += dd * dd; i += 1 }
-      acc
-    }
-    val values = qsv.groupBy(_._1).toSeq.sortBy(_._1).map { case (q, subs) =>
-      val tabs = subs.sortBy(_._2).map { case (_, sub, sv) =>
-        val entries = cb(sub)
-          .map { case (_, code, c) => s"$code, ${d2(sv, c)}D" }.mkString(", ")
+    // The request, built on the driver by the programmatic path's own
+    // builder from the standing centroids and codebook views: probe cells
+    // and ADC tables (queries × pqM × k doubles — 1 280 here). The probe
+    // pairs ride in as a second inline VALUES relation, and the
+    // request-wide cell union becomes a LITERAL IN-list on the code table
+    // — which constant-folds into the partitioned scan's PartitionFilters,
+    // so the served query reads only the probed nprobe-of-pqCells cell
+    // partitions. Double.toString/parse round-trips exactly, so the inlined
+    // map VALUES are the bits the programmatic shortlist scores with.
+    val req = annRequest(s, dir, centsOf(s.table("graft_pq_centroids")),
+      s.table("graft_pq_codebook"), nQueries)
+    val probeValues = req.ids.indices
+      .flatMap(i => req.probes(i).map(cell => s"(${req.ids(i)}L, $cell)")).mkString(", ")
+    val cellInList = req.cells.mkString(", ")
+    val values = req.ids.indices.map { i =>
+      val tabs = req.tabs(i).indices.map { sub =>
+        val entries = req.tabs(i)(sub).indices
+          .map(code => s"$code, ${req.tabs(i)(sub)(code)}D").mkString(", ")
         s"$sub, map($entries)"
       }.mkString(", ")
-      s"(${q}L, map($tabs))"
+      s"(${req.ids(i)}L, map($tabs))"
     }.mkString(",\n        ")
     s.sql(
       s"""WITH tabs (q_id, tabs) AS (VALUES
@@ -1376,23 +1341,14 @@ object LlmOps {
     */
   private[graft] val sqlAnnQueries = 10L
 
-  /** (vec_id, sub, sv): unit-normalized subvector rows — the shared input
-    * of PQ training, encode, and the query-side ADC tables.
+  /** (vec_id, sub, sv): unit-normalized subvector rows — the input of PQ
+    * training, normalized by the same kernel as the encode and the request.
     */
-  private def pqNormSubvectors(s: SparkSession, dir: String): DataFrame =
-    pqNormSubvectorsOf(Tables.embeddings(s, dir))
-
-  /** [[pqNormSubvectors]] over an arbitrary (vec_id, embedding) frame —
-    * the append-batch entry point [[graft.sources.Sinks.refreshPqIndex]]
-    * encodes through, so a refreshed batch can never normalize or slice
-    * differently from the original build pass.
-    */
-  private[graft] def pqNormSubvectorsOf(emb: DataFrame): DataFrame = {
+  private def pqNormSubvectors(s: SparkSession, dir: String): DataFrame = {
     val norm = vectors.l2Norm(col("embedding"))
-    emb
+    Tables.embeddings(s, dir)
       .filter(norm > 0)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double") / norm).as("nv"))
+      .select(col("vec_id"), vectors.normalize(col("embedding")).as("nv"))
       .select(col("vec_id"), explode(sequence(lit(0), lit(pqM - 1))).as("sub"), col("nv"))
       .select(col("vec_id"), col("sub"),
         slice(col("nv"), col("sub") * pqDsub + 1, lit(pqDsub)).as("sv"))
@@ -1489,8 +1445,7 @@ object LlmOps {
     }: _*)
     emb
       .filter(norm > 0)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double") / norm).as("nv"))
+      .select(col("vec_id"), vectors.normalize(col("embedding")).as("nv"))
       .select(col("vec_id"), codes.as("codes"), col("nv"))
       .select(col("vec_id"), col("codes"),
         explode(vectors.nearestCentroids(col("nv"), cells, pqAssign).getField("id")
@@ -1582,107 +1537,177 @@ object LlmOps {
     Centroids(cents.indices.map(c => (c.toLong, cents(c))), CentroidScore.L2sq)
   }
 
-  /** The PQ QUERY PATH over a (possibly persisted) index: ADC tables from
-    * the codebook, compressed-domain shortlist over the code table, exact
-    * re-rank. Takes the index as plain frames so a parquet round-trip of
-    * the index is search-equivalent (spec-pinned).
+  /** A collected ANN request: the queries `vec_id < maxQ` with a positive
+    * norm, ascending, each with its raw vector, its [[pqNprobe]] probe
+    * cells (best first) and its ADC table `tabs(q)(sub)(code)` =
+    * ‖q_sub − c‖². It is request- and index-metadata-sized: the driver
+    * holds maxQ·pqM·pqKs doubles and maxQ vectors.
     */
-  /** The compressed-domain HALF of the PQ query path: ADC tables from the
-    * codebook for queries `vec_id < maxQ`, then the top-[[pqShortlist]]
-    * shortlist per query over the code table — (q_id, vec_id, arn), no
-    * float fetch, no re-rank. Factored out so the plain-SQL face
-    * ([[sqlAnnServed]]) can be pinned row-identical to exactly this stage
-    * (the deterministic `sequence(0, pqM-1)` fold makes the sum order —
-    * and therefore every last-ulp tie — reproducible across both forms).
+  private[graft] final case class AnnRequest(ids: Array[Long], vecs: Array[Array[Float]],
+                                             probes: Array[Array[Int]],
+                                             tabs: Array[Array[Array[Double]]]) {
+    /** The request-wide probed cells, ascending: the code scan's IN-list. */
+    def cells: Seq[Int] = probes.flatten.distinct.sorted.toSeq
+  }
+
+  /** Builds the [[AnnRequest]] on the driver from ONE collect of the query
+    * vectors. Each normalizes through [[VectorOps.normalize]] (the encode's
+    * own kernel), ranks the coarse cells through [[VectorOps.nearest]]
+    * (l2², lowest cell on ties), and scores every codebook entry as
+    * `aggregate(zip_with(q_sub, c, (x, y) -> (x − y)²), 0.0, _ + _)` did in
+    * the plan — squared differences summed left to right in doubles from
+    * 0.0 — so a table holds the same bits. The codebook is index metadata
+    * (pqM·pqKs rows) with dense codes 0..pqKs−1.
+    */
+  private[graft] def annRequest(s: SparkSession, dir: String, cells: Centroids,
+                                cb: DataFrame, maxQ: Long): AnnRequest = {
+    import s.implicits._
+    val book = cb.select(col("sub").cast("int"), col("code").cast("int"),
+        col("c").cast("array<double>"))
+      .as[(Int, Int, Array[Double])].collect().groupBy(_._1)
+      .map { case (sub, rows) => sub -> rows.sortBy(_._2) }
+    require((0 until pqM).forall(sub => book.get(sub).exists(_.map(_._2).sameElements(0 until pqKs))),
+      "the PQ codebook must hold codes 0 until pqKs in every subspace")
+    val queries = Tables.embeddings(s, dir).filter(col("vec_id") < maxQ)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
+      .filter { case (_, v) => v != null && VectorOps.l2Norm(ArrayData.toArrayData(v)) > 0 }
+      .sortBy(_._1)
+    val nvs = queries.map { case (_, v) => VectorOps.normalize(ArrayData.toArrayData(v)).toDoubleArray() }
+    val tabs = nvs.map { nv =>
+      Array.tabulate(pqM) { sub =>
+        book(sub).map { case (_, _, c) =>
+          var acc = 0.0
+          var i = 0
+          while (i < pqDsub) { val d = nv(sub * pqDsub + i) - c(i); acc += d * d; i += 1 }
+          acc
+        }
+      }
+    }
+    val probes = nvs.map(nv => VectorOps.nearest(nv, cells, pqNprobe)._1.map(j => cells.ids(j).toInt))
+    AnnRequest(queries.map(_._1), queries.map(_._2), probes, tabs)
+  }
+
+  /** The `k` best (id, score) candidates under `SELECT DISTINCT … ORDER BY
+    * score [DESC], id`, kept in a bounded buffer: at 4·k candidates it
+    * compacts — sort by (id, score), drop duplicate rows, pick through
+    * [[VectorOps.select]] — so NaN ranks greatest, −0.0 equals 0.0 and
+    * ties go to the lowest id. A row dropped by one compaction ranks
+    * below every kept row, so its duplicates are dropped later too.
+    */
+  private final class TopK(k: Int, desc: Boolean) {
+    private var ids = new Array[Long](4 * k)
+    private var scores = new Array[Double](4 * k)
+    private var n = 0
+    def add(id: Long, score: Double): Unit = {
+      if (n == ids.length) compact()
+      ids(n) = id; scores(n) = score; n += 1
+    }
+    /** The kept candidates, best first. */
+    def result(): (Array[Long], Array[Double]) = { compact(); (ids.take(n), scores.take(n)) }
+    private def compact(): Unit = {
+      val byId = Array.range(0, n).sortWith { (a, b) =>
+        ids(a) < ids(b) || ids(a) == ids(b) && VectorOps.compareScores(scores(a), scores(b)) < 0
+      }
+      val uniq = byId.indices.filter(p => p == 0 || ids(byId(p)) != ids(byId(p - 1)) ||
+        VectorOps.compareScores(scores(byId(p)), scores(byId(p - 1))) != 0).map(byId(_))
+      val best = VectorOps.select(uniq.map(scores(_)).toArray, k, desc).map(uniq(_))
+      val keptIds = best.map(ids(_))
+      val keptScores = best.map(scores(_))
+      ids = new Array[Long](4 * k); scores = new Array[Double](4 * k)
+      System.arraycopy(keptIds, 0, ids, 0, keptIds.length)
+      System.arraycopy(keptScores, 0, scores, 0, keptScores.length)
+      n = keptIds.length
+    }
+  }
+
+  /** The compressed-domain HALF of the PQ query path: the request's
+    * top-[[pqShortlist]] vec_ids per query, best first, by approx_d2 — the
+    * ADC distance, folded in sub order (0.0 + t₀ + … + t₇) — then vec_id.
+    * This is the search's ONE distributed pass: a scan of the code table
+    * filtered to the request's literal cell IN-list (which lands in a
+    * cell-partitioned store's PartitionFilters, so only the probed
+    * partitions are read), in which each partition keeps, per query, a
+    * bounded top-k of its candidates. Boundary-replicated vectors reach a
+    * query through two probed cells with identical codes; both the
+    * partitions and the driver's merge of their partitions × queries × k
+    * rows drop such duplicates.
+    */
+  private def adcShortlist(req: AnnRequest, codes: DataFrame): Array[Array[Long]] = {
+    val s = codes.sparkSession
+    import s.implicits._
+    val (ids, tabs, k, m) = (req.ids, req.tabs, pqShortlist, pqM)
+    val byCell: Map[Int, Array[Int]] = req.probes.indices
+      .flatMap(q => req.probes(q).map(_ -> q)).groupBy(_._1)
+      .map { case (cell, qs) => cell -> qs.map(_._2).toArray }
+    val top = codes.filter(col("cell").isin(req.cells: _*))
+      .select(col("cell").cast("int"), col("vec_id").cast("long"), col("codes").cast("array<int>"))
+      .as[(Int, Long, Array[Int])]
+      .mapPartitions { rows =>
+        val tops = new Array[TopK](ids.length)
+        rows.foreach { case (cell, v, code) =>
+          for (q <- byCell.getOrElse(cell, Array.emptyIntArray) if v != ids(q)) {
+            var d2 = 0.0
+            var sub = 0
+            while (sub < m) { d2 += tabs(q)(sub)(code(sub)); sub += 1 }
+            if (tops(q) == null) tops(q) = new TopK(k, desc = false)
+            tops(q).add(v, d2)
+          }
+        }
+        tops.indices.iterator.filter(tops(_) != null).flatMap { q =>
+          val (vs, d2s) = tops(q).result()
+          vs.indices.map(j => (q, vs(j), d2s(j)))
+        }
+      }.collect()
+    val merged = Array.fill(ids.length)(new TopK(k, desc = false))
+    top.foreach { case (q, v, d2) => merged(q).add(v, d2) }
+    merged.map(_.result()._1)
+  }
+
+  /** [[adcShortlist]] as (q_id, vec_id, arn) rows — the stage the plain-SQL
+    * face ([[sqlAnnServed]]) is pinned row-identical to.
     */
   private[graft] def pqAdcShortlist(s: SparkSession, dir: String,
                                     cents: DataFrame, cb: DataFrame,
                                     codes: DataFrame,
                                     maxQ: Long = 100): DataFrame = {
     import s.implicits._
-    // IVF stage: rank the pqCells coarse cells per query DRIVER-SIDE (the
-    // centroids are 16×64-double index metadata; the queries are the
-    // bounded request batch every path here already treats as
-    // driver-held) and keep the best pqNprobe. Two artifacts come out:
-    // the per-query (q_id, cell) probe relation, and the REQUEST-WIDE
-    // literal cell IN-list — the latter constant-folds into the code
-    // scan's PartitionFilters, so a cell-partitioned standing code table
-    // reads only the probed partitions (the log_sql_search_served
-    // pruning pattern applied to vectors).
-    val probes = pqProbes(s, dir, centsOf(cents), maxQ)
-    val probeDf = probes.toDF("q_id", "cell")
-    val cellList = probes.map(_._2).distinct.sorted
-    val pruned = codes.filter(col("cell").isin(cellList: _*))
-    // ADC tables: map<sub, map<code, ‖q_sub − c‖²>> per query, broadcast.
-    val dtabs = pqNormSubvectors(s, dir).filter(col("vec_id") < maxQ)
-      .select(col("vec_id").as("q_id"), col("sub"), col("sv").as("qsv"))
-      .join(broadcast(cb), Seq("sub"))
-      .withColumn("d2", l2sqCol(col("qsv"), col("c")))
-      .groupBy("q_id", "sub")
-      .agg(map_from_entries(array_sort(collect_list(struct(col("code"), col("d2"))))).as("sm"))
-      .groupBy("q_id")
-      // no array_sort here: structs holding maps aren't orderable, and a
-      // map build is insertion-order-independent anyway
-      .agg(map_from_entries(collect_list(struct(col("sub"), col("sm")))).as("tabs"))
-    // ADC scan → top-`pqShortlist` candidates per query in the COMPRESSED
-    // domain (the cheap part: pqM map lookups per pair, no float math).
-    // The probe join is a broadcast HASH join on cell (the old flat-PQ
-    // BNLJ is gone with the pruning); boundary-replicated vectors can
-    // reach one query through BOTH probed cells with bit-identical
-    // approx_d2 (same codes, same tabs), so the candidate set dedups on
-    // the full (q_id, vec_id, approx_d2) row before ranking.
-    val wAdc = Window.partitionBy("q_id").orderBy(col("approx_d2").asc, col("vec_id").asc)
-    broadcast(dtabs.join(probeDf, Seq("q_id")))
-      .join(pruned, Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx_d2",
-        aggregate(sequence(lit(0), lit(pqM - 1)), lit(0.0),
-          (acc, sub) => acc +
-            element_at(element_at(col("tabs"), sub), element_at(col("codes"), sub + 1))))
-      .select("q_id", "vec_id", "approx_d2").distinct()
-      .withColumn("arn", row_number().over(wAdc))
-      .filter(col("arn") <= pqShortlist)
-      .select("q_id", "vec_id", "arn")
+    val req = annRequest(s, dir, centsOf(cents), cb, maxQ)
+    val shortlist = adcShortlist(req, codes)
+    req.ids.indices.flatMap(q => shortlist(q).indices.map(r => (req.ids(q), shortlist(q)(r), r + 1)))
+      .toDF("q_id", "vec_id", "arn")
   }
 
-  /** Per-query probe plan: each query's [[pqNprobe]] nearest coarse cells
-    * by centroid l2² (≡ cosine on unit vectors), lowest-cell tiebreak.
-    * Runs driver-side over the collected query subvectors (re-assembled
-    * into full vectors — sub order restores the exact doubles) — shared
-    * by the programmatic shortlist and the SQL face so the two can never
-    * rank probes differently.
+  /** The PQ QUERY PATH over a (possibly persisted) index: the request on
+    * the driver, the one distributed pass over the code table
+    * ([[adcShortlist]]), and the exact re-rank — the FAISS refine step.
+    * Only queries × shortlist vectors pay full-precision math: one job
+    * fetches the shortlisted vectors by vec_id (the query vectors came
+    * with the request), and the driver ranks them by `ROUND(cosine_sim,
+    * 4)` ([[VectorOps.round4]] of [[VectorOps.cosine]], the column's own
+    * arithmetic), best first, ties to the lowest vec_id. The answer is a
+    * local relation ordered by (q_id, rn); vec_id is the embeddings key.
+    * Takes the index as plain frames so a parquet round-trip of the index
+    * is search-equivalent (spec-pinned).
     */
-  private[graft] def pqProbes(s: SparkSession, dir: String, cells: Centroids,
-                              maxQ: Long): Seq[(Long, Int)] = {
-    import s.implicits._
-    val qsv = pqNormSubvectors(s, dir).filter(col("vec_id") < maxQ)
-      .select(col("vec_id"), col("sub").cast("int"), col("sv"))
-      .as[(Long, Int, Seq[Double])].collect()
-    qsv.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, subs) =>
-      val v = subs.sortBy(_._2).flatMap(_._3.toArray)
-      VectorOps.nearest(v, cells, pqNprobe)._1.toSeq.map(j => (q, cells.ids(j).toInt))
-    }
-  }
-
   private[graft] def pqSearch(s: SparkSession, dir: String, cents: DataFrame,
-                              cb: DataFrame, codes: DataFrame): DataFrame = {
-    val shortlist = pqAdcShortlist(s, dir, cents, cb, codes).select("q_id", "vec_id")
-    // …then exact-cosine re-rank of the shortlist against the ORIGINAL
-    // vectors — the FAISS refine step. Only queries × shortlist rows (not
-    // the corpus) pay full-precision math; the fetch is a broadcast
-    // equi-join on vec_id, so at 100 TB it reads back exactly the ≤ 100·50
-    // vectors it re-scores.
-    val raw = Tables.embeddings(s, dir)
-    val q = raw.filter(col("vec_id") < 100)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id").asc)
-    broadcast(shortlist.join(q, Seq("q_id")))
-      .join(raw, Seq("vec_id"))
-      .withColumn("cos_sim", round(vectors.cosineSim(col("q_emb"), col("embedding")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
-      .select("q_id", "vec_id", "cos_sim", "rn")
-      .orderBy("q_id", "rn")
+                              cb: DataFrame, codes: DataFrame,
+                              maxQ: Long = 100): DataFrame = {
+    import s.implicits._
+    val req = annRequest(s, dir, centsOf(cents), cb, maxQ)
+    val shortlist = adcShortlist(req, codes)
+    val wanted = shortlist.flatten.distinct.sorted
+    val fetched: Map[Long, Array[Float]] =
+      if (wanted.isEmpty) Map.empty
+      else Tables.embeddings(s, dir).filter(col("vec_id").isin(wanted.toSeq: _*))
+        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect().toMap
+    req.ids.indices.flatMap { q =>
+      val qv = ArrayData.toArrayData(req.vecs(q))
+      val top = new TopK(10, desc = true)
+      for (v <- shortlist(q).sorted; e <- fetched.get(v))
+        top.add(v, VectorOps.round4(VectorOps.cosine(qv, ArrayData.toArrayData(e))))
+      val (vs, sims) = top.result()
+      vs.indices.map(r => (req.ids(q), vs(r), sims(r), r + 1))
+    }.toDF("q_id", "vec_id", "cos_sim", "rn")
   }
 
   /** D4: embedding norms — the L2 kernel plus per-label stats. */

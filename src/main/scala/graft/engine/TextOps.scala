@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for training-data curation (SURVEY.md §2.9 +
   * north-star): language identification, quality scoring, token counting,
@@ -835,19 +836,16 @@ object TextOps {
   /** D5/D9 (tokenizer training): byte-pair-encoding merge learning — the
     * algorithm behind every production tokenizer (GPT-2 BPE, SentencePiece
     * BPE mode), distributed the way industrial trainers actually scale it:
-    * the 100 TB corpus is scanned ONCE into (word, freq) counts, and every
-    * merge round thereafter runs over the VOCABULARY-sized state only
-    * (Heaps' law: ~10⁷ rows for a web corpus — executor-trivial), never the
-    * corpus again. Each round: (a) adjacent symbol pairs explode from the
-    * per-word symbol arrays weighted by word freq and partial-agg into pair
-    * scores; (b) the argmax pair (deterministic score/lex tiebreak via
-    * orderBy-limit-1 — a TakeOrdered, not a sort) broadcasts back as a
-    * single row; (c) a pure-Column left-to-right non-overlapping fold
-    * (`aggregate` with a (out, pending) accumulator — the classic BPE merge
-    * pass) rewrites every word's symbol array; (d) localCheckpoint
-    * truncates the round's lineage (vocab-sized — the k-means/CC
-    * convention). No driver-side collect anywhere: learned merges
-    * accumulate as 1-row frames and union into the result.
+    * the 100 TB corpus is scanned ONCE, in one job, into the (word, freq,
+    * symbols) table, and every merge round thereafter runs over that
+    * VOCABULARY-sized state only, never the corpus again. The table is
+    * collected and the rounds run on the driver, which holds one row per
+    * distinct word (Heaps' law: ~10⁷ for a web corpus). Each round: (a)
+    * adjacent symbol pairs score by summed word freq; (b) the argmax pair
+    * ranks by score DESC, then sym_a and sym_b in Spark's string order
+    * (UTF-8 bytes, unsigned); (c) a left-to-right non-overlapping fold —
+    * the classic BPE merge pass — rewrites every word's symbol array. An
+    * exhausted round learns no merge and leaves the vocabulary unchanged.
     *
     * Oracled via the PageRank precedent (MATERIALIZED-CTE unroll): the
     * training loop is fully deterministic — integer pair counts with a
@@ -925,57 +923,58 @@ object TextOps {
     */
   private[graft] def bpeTrain(s: SparkSession, dir: String,
                               rounds: Int): (DataFrame, DataFrame) = {
+    import s.implicits._
     val toks = Tables.documents(s, dir)
       .select(explode(filter(split(lower(col("text")), " "), t => t =!= "")).as("tok"))
-    var vocab = toks.groupBy("tok").agg(count(lit(1)).as("freq"))
+    // The one distributed job: the corpus scan to (word, freq, symbols).
+    val words = toks.groupBy("tok").agg(count(lit(1)).as("freq"))
       .select(col("tok"), col("freq"),
         transform(sequence(lit(1), length(col("tok"))),
           i => col("tok").substr(i, lit(1))).as("syms"))
-      .localCheckpoint()
-    var bests = Seq.empty[DataFrame]
+      .as[(String, Long, Array[String])].collect()
+    val syms = words.map(_._3)
+    // Spark's string order: UTF-8 bytes, unsigned (not String.compareTo).
+    def utf8(x: String, y: String): Int =
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     for (r <- 1 to rounds) {
-      val best = vocab
-        .select(col("freq"), col("syms"), posexplode(col("syms")).as(Seq("i", "a")))
-        .filter(col("i") < size(col("syms")) - 1)
-        .select(col("freq"), col("a"), element_at(col("syms"), col("i") + 2).as("b"))
-        .groupBy("a", "b").agg(sum("freq").as("score"))
-        .orderBy(col("score").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .select(col("a").as("ma"), col("b").as("mb"), col("score"))
-        .localCheckpoint()
-      bests = bests :+ best.select(lit(r).as("rank"), col("ma").as("sym_a"),
-        col("mb").as("sym_b"), concat(col("ma"), col("mb")).as("new_sym"), col("score"))
-      // The merge pass: fold each symbol array left-to-right, holding one
-      // pending symbol; (pending, next) == (ma, mb) emits the merged symbol
-      // and clears pending, so a merged symbol never re-merges in the same
-      // pass — standard BPE single-pass semantics.
-      val z = struct(array().cast("array<string>").as("out"),
-        lit(null).cast("string").as("p"))
-      val step = (acc: Column, sym: Column) => {
-        val out = acc.getField("out")
-        val p = acc.getField("p")
-        when(p.isNull, struct(out.as("out"), sym.as("p")))
-          .when(p === col("ma") && sym === col("mb"),
-            struct(concat(out, array(concat(col("ma"), col("mb")))).as("out"),
-              lit(null).cast("string").as("p")))
-          .otherwise(struct(concat(out, array(p)).as("out"), sym.as("p")))
+      val scores = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for (w <- words.indices; i <- 0 until syms(w).length - 1) {
+        val pair = (syms(w)(i), syms(w)(i + 1))
+        scores(pair) = scores.getOrElse(pair, 0L) + words(w)._2
       }
-      val fin = (acc: Column) =>
-        when(acc.getField("p").isNull, acc.getField("out"))
-          .otherwise(concat(acc.getField("out"), array(acc.getField("p"))))
-      // LEFT join on true, not crossJoin: once every word is a single
-      // symbol there are no pairs left, `best` is EMPTY, and a cross join
-      // would wipe the vocabulary — the left join keeps rows and the null
-      // guard makes the exhausted round a no-op (mirrored by the spec
-      // reference stopping when no pairs remain).
-      vocab = vocab.join(broadcast(best), lit(true), "left")
-        .withColumn("syms",
-          when(col("ma").isNull, col("syms"))
-            .otherwise(aggregate(col("syms"), z, step, fin)))
-        .select("tok", "freq", "syms")
-        .localCheckpoint()
+      // An exhausted round (no pairs left) learns nothing and leaves the
+      // vocabulary as it is.
+      if (scores.nonEmpty) {
+        val ((ma, mb), score) = scores.reduce { (x, y) =>
+          val c = if (x._2 != y._2) java.lang.Long.compare(y._2, x._2)
+            else if (x._1._1 != y._1._1) utf8(x._1._1, y._1._1)
+            else utf8(x._1._2, y._1._2)
+          if (c <= 0) x else y
+        }
+        merges += ((r, ma, mb, ma + mb, score))
+        for (w <- words.indices) syms(w) = bpeMerge(syms(w), ma, mb)
+      }
     }
-    (bests.reduce(_ unionByName _), vocab)
+    (merges.toSeq.toDF("rank", "sym_a", "sym_b", "new_sym", "score"),
+      words.indices.map(w => (words(w)._1, words(w)._2, syms(w).toSeq)).toDF("tok", "freq", "syms"))
+  }
+
+  /** One BPE merge pass over a word's symbols: left to right, holding one
+    * pending symbol; (pending, next) == (ma, mb) emits the merged symbol and
+    * clears pending, so a merged symbol never re-merges in the same pass —
+    * standard BPE single-pass semantics.
+    */
+  private def bpeMerge(syms: Array[String], ma: String, mb: String): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var p: String = null
+    for (sym <- syms) {
+      if (p == null) p = sym
+      else if (p == ma && sym == mb) { out += ma + mb; p = null }
+      else { out += p; p = sym }
+    }
+    if (p != null) out += p
+    out.toArray
   }
 
   /** D5/D9 (tokenizer application): encode the corpus with the merges

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -58,10 +59,28 @@ object VectorOps {
     math.sqrt(s)
   }
 
+  /** `a` divided by its [[l2Norm]], element by element in doubles: the
+    * norm is computed once per row, and a null element stays null. Callers
+    * keep rows whose norm is positive; a zero norm gives NaN or ±∞.
+    */
+  def normalize(a: ArrayData): ArrayData = {
+    val norm = l2Norm(a)
+    val n = a.numElements()
+    val out = new Array[Double](n)
+    var nulls = false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) nulls = true else out(i) = a.getFloat(i).toDouble / norm
+      i += 1
+    }
+    if (!nulls) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(Array.tabulate[Any](n)(j => if (a.isNullAt(j)) null else out(j)))
+  }
+
   /** ORDER BY comparison of two scores: NaN ranks greatest and −0.0
     * equals 0.0 (Spark's `SQLOrderingUtil.compareDoubles`; DuckDB agrees).
     */
-  private def compareScores(a: Double, b: Double): Int =
+  def compareScores(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
 
   /** Spark's `ROUND(x, 4)` on a double, bit for bit (HALF_UP over the
@@ -283,6 +302,23 @@ case class L2Norm(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** The unit vector of an `array<float>` as `array<double>`
+  * ([[VectorOps.normalize]]): one call per row inside whole-stage codegen,
+  * where a `transform(v, x -> x / l2_norm(v))` lambda runs outside it and
+  * evaluates the norm once per element.
+  */
+case class Normalize(child: Expression)
+    extends UnaryExpression with FloatArrayInputs {
+  override def dataType: DataType =
+    ArrayType(DoubleType, child.dataType.asInstanceOf[ArrayType].containsNull)
+  override def prettyName: String = "normalize"
+  override protected def nullSafeEval(a: Any): Any =
+    VectorOps.normalize(a.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.normalize($a)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** LSH bucket id for approximate-NN: `bits` signed random projections.
   * Distinct `seed`s give independent hash tables (multi-probe recall).
   */
@@ -343,6 +379,8 @@ object vectors {
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
   def l2Norm(a: Column): Column =
     Bridge.column(L2Norm(Bridge.expression(a)))
+  def normalize(a: Column): Column =
+    Bridge.column(Normalize(Bridge.expression(a)))
   def srpBucket(a: Column, bits: Int, seed: Long = 0L): Column =
     Bridge.column(SrpBucket(Bridge.expression(a), bits, seed))
   def nearestCentroids(v: Column, cents: Centroids, k: Int): Column =

@@ -10,6 +10,43 @@ import org.apache.spark.sql.functions.{col, sum}
 class LlmOpsSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** `body`'s result and the executed plans of every action it runs, read
+    * through a QueryExecutionListener once the (asynchronous) listener bus
+    * drains.
+    */
+  private def executedPlans[A](body: => A): (A, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try {
+      val r = body
+      // listenerBus is private[spark] (public in bytecode)
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+        .invoke(bus, java.lang.Long.valueOf(15000L))
+      r
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    (result, plans.asScala.toSeq)
+  }
+
+  /** Every file scan of `plans`, inside adaptive plans and query stages too. */
+  private def fileScans(plans: Seq[org.apache.spark.sql.execution.SparkPlan])
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    plans.flatMap(p => helper.collect(p) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    })
+  }
+
   /** documents-shaped temp dir (builders read `$dir/documents.parquet`). */
   private def docsDir(rows: Seq[(Long, String)]): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
@@ -861,15 +898,17 @@ class LlmOpsSpec extends SparkSpecBase {
       .filter(f => f.isDirectory && f.getName.startsWith("cell=")).map(_.getName).toSeq
     assert(cellDirs.size > 1 && cellDirs.size <= LlmOps.pqCells,
       s"unexpected cell partition layout: $cellDirs")
-    val df = LlmOps.pqAdcShortlist(spark, sfDir,
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebook"),
-      spark.read.parquet(s"$path/codes"), maxQ = 1L)
-    val scans = df.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-        if f.relation.location.rootPaths.exists(_.toString.contains("pq_index/codes")) => f
+    // the code scan runs inside the shortlist's build: read it off the
+    // plans that build executed
+    val (_, plans) = executedPlans {
+      LlmOps.pqAdcShortlist(spark, sfDir,
+        spark.read.parquet(s"$path/centroids"),
+        spark.read.parquet(s"$path/codebook"),
+        spark.read.parquet(s"$path/codes"), maxQ = 1L).collect()
     }
-    assert(scans.nonEmpty, "no code-table scan in the shortlist plan")
+    val scans = fileScans(plans).filter(
+      _.relation.location.rootPaths.exists(_.toString.contains("pq_index/codes")))
+    assert(scans.nonEmpty, "no code-table scan in the shortlist's executed plans")
     scans.foreach { f =>
       val ins = f.partitionFilters.collect {
         case i: org.apache.spark.sql.catalyst.expressions.In => i.list.size
@@ -880,12 +919,11 @@ class LlmOpsSpec extends SparkSpecBase {
   }
 
   test("registered indexed ANN: serves from the standing PQ store, full top-10s, recall floor") {
-    val df = LlmOps.annIvfPqIndexed.build(spark, sfDir)
+    val (df, plans) = executedPlans(LlmOps.annIvfPqIndexed.build(spark, sfDir))
     // the ADC shortlist must scan the PERSISTED code table — a re-trained
-    // in-memory index here means the lifecycle regressed to per-query build
-    val roots = df.queryExecution.sparkPlan
-      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .map(_.relation.location.rootPaths.mkString(","))
+    // in-memory index here means the lifecycle regressed to per-query
+    // build; the scans run inside the build, so read its executed plans
+    val roots = fileScans(plans).map(_.relation.location.rootPaths.mkString(","))
     assert(roots.exists(_.contains("pq_index/codes")), s"no persisted code scan in: $roots")
     assert(roots.exists(_.contains("pq_index/codebook")), s"no persisted codebook scan in: $roots")
     val got = df.select("q_id", "vec_id", "rn").as[(Long, Long, Int)].collect()

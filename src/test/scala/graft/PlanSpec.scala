@@ -456,6 +456,39 @@ class PlanSpec extends SparkSpecBase {
     assert(stale.isEmpty, s"allowlisted queries that plan no cartesian/BNLJ: $stale")
   }
 
+  /** Registered queries whose returned plan holds a `Window` with no
+    * PARTITION BY — one task sorts and scans every row that reaches it —
+    * each with the size of that input. The inventory is pinned both ways:
+    * a query that gains such a window fails until it is listed, and an
+    * entry whose query no longer plans one is stale and fails.
+    */
+  private val unpartitionedWindowAllowlist: Map[String, String] = Map(
+    "log_cumulative_users"      -> "running sum over the day rows of the (user → first day) aggregate",
+    "log_cusum_changepoint"     -> "global stats and prefix sums over the day-count rows",
+    "log_outage_windows_merged" -> "phase-2 sweep over the per-day outage pieces, not events",
+    "log_seasonality"           -> "load factor over the ≤ 168 (dow, hour) cells",
+    "log_sla_burn"              -> "trailing RANGE frame over the hour-count rows",
+    "log_value_histogram"       -> "grand total over the ≤ 10 bin-count rows",
+    "text_zipf_ranks"           -> "row_number over the top-30 token counts",
+    "win_moving_avg"            -> "7-row frame over the day-count rows",
+    "win_running_sum"           -> "running sum over the daily-revenue rows")
+
+  test("registry inventory: every unpartitioned window is listed") {
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try Right(helper.collectWithSubqueries(fn(spark, sfDir).queryExecution.executedPlan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec if w.partitionSpec.isEmpty => w
+      }.nonEmpty) catch { case e: Throwable => Left(e.getMessage) })
+    }
+    val broken = results.collect { case (name, Left(msg)) => s"$name: $msg" }
+    assert(broken.isEmpty, s"queries failed to plan: $broken")
+    val found = results.collect { case (name, Right(true)) => name }.toSet
+    val unlisted = found.filterNot(unpartitionedWindowAllowlist.contains).toSeq.sorted
+    assert(unlisted.isEmpty, s"queries with unlisted unpartitioned windows: $unlisted")
+    val stale = unpartitionedWindowAllowlist.keySet.diff(found).toSeq.sorted
+    assert(stale.isEmpty, s"listed queries that plan no unpartitioned window: $stale")
+  }
+
   test("k-means E-step plans no window and moves no embedding through an exchange") {
     val plan = LlmOps.kmeansEmbed.build(spark, sfDir).queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan

@@ -45,6 +45,30 @@ class VectorExprsSpec extends SparkSpecBase {
     assert(diff < 1e-12)
   }
 
+  test("normalize equals the transform lambda it replaces, bit for bit, nulls included") {
+    val norm = vectors.l2Norm(col("v"))
+    val v = graft.engine.Tables.embeddings(spark, sfDir).limit(50)
+      .select(col("embedding").as("v"))
+      .union(Seq(Seq[java.lang.Float](3.0f, null, 4.0f)).toDF("v"))
+    val both = v.select(vectors.normalize(col("v")).as("k"),
+      transform(col("v"), x => x.cast("double") / norm).as("h"))
+    for (codegen <- Seq(true, false)) withCodegen(codegen) {
+      val rows = both.as[(Seq[java.lang.Double], Seq[java.lang.Double])].collect()
+      assert(rows.length === 51)
+      rows.foreach { case (k, h) => assert(k === h, s"codegen=$codegen: $k vs $h") }
+      assert(rows.exists(_._1.contains(null)), s"codegen=$codegen: the null element was lost")
+    }
+  }
+
+  /** Runs `body` with generated code on, or with every expression interpreted. */
+  private def withCodegen(on: Boolean)(body: => Unit): Unit = {
+    val confs = Seq("spark.sql.codegen.wholeStage" -> on.toString,
+      "spark.sql.codegen.factoryMode" -> (if (on) "CODEGEN_ONLY" else "NO_CODEGEN"))
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("srp bucket: deterministic, within bit range, seed-sensitive") {
     val e = graft.engine.Tables.embeddings(spark, sfDir)
     val b = e.select(
