@@ -59,8 +59,12 @@ object GraftSession {
     *    stats + the store's bucket modulus.
     *  - `graft_store_health` (current_gen, gen_seq, folded_through,
     *    visible_segments, retired_generations_on_disk, gen_retention,
-    *    n_docs) — one-row operational snapshot; alarm when `gen_seq`
-    *    advances ≥ `gen_retention` within a probe's lifetime.
+    *    n_docs) — one-row operational snapshot of the posting store's
+    *    [[sources.StoreLog]]: the current version's directory name and id,
+    *    its fold watermark, the committed segments above it, the other
+    *    version directories still on disk, and the retention window; alarm
+    *    when `gen_seq` advances ≥ `gen_retention` within a probe's
+    *    lifetime.
     *  - `graft_term_dict` (tok, df, cf) — vocabulary with document /
     *    collection frequencies, LSM base + delta merged at view time.
     *  - `graft_latency_sketch` (event_type, bucket, n, day) — DDSketch
@@ -105,11 +109,11 @@ object GraftSession {
       .createOrReplaceTempView("graft_postings")
     sources.Sinks.storeDocstats(spark, post)
       .createOrReplaceTempView("graft_docstats")
-    // one-row (n_docs, avgdl, buckets) snapshot combined from the current
-    // generation's meta + visible segments' segmeta at open time
+    // one-row (n_docs, avgdl, buckets) snapshot combined from the meta rows
+    // of the current version and the visible segments at open time
     sources.Sinks.storeMeta(spark, post)
       .createOrReplaceTempView("graft_search_meta")
-    // operational one-row health view (generation seq, fold watermark,
+    // operational one-row health view (version id, fold watermark,
     // retention window) — what a monitoring query alarms on; see
     // Sinks.storeHealth for the snapshot-age rule it makes checkable.
     // LIVE, not an open-time snapshot: the view wraps the DSv2

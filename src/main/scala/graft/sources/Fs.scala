@@ -79,11 +79,12 @@ private[graft] object Fs {
     require(fs.rename(s, new Path(dst)), s"rename failed: $src -> $dst")
   }
 
-  /** ATOMIC single-file replace — the pointer-swap primitive behind the
-    * posting store's generation pointer: write the new content to a
-    * uniquely-named sibling temp file (two concurrent swappers must never
-    * stage into the same name), then rename it over the destination with
-    * the strongest replace primitive the filesystem offers. A reader sees
+  /** ATOMIC single-file replace — the primitive behind [[StoreLog]]'s
+    * commit markers (a marker appears whole, watermark included, or not
+    * at all): write the new content to a uniquely-named sibling temp
+    * file (two concurrent writers must never stage into the same name),
+    * then rename it over the destination with the strongest replace
+    * primitive the filesystem offers. A reader sees
     * the old content or the new content, never a torn write and never an
     * absent file; under concurrent swaps the last rename wins.
     *
@@ -99,8 +100,8 @@ private[graft] object Fs {
 
   /** [[writeTextAtomic]]'s generic form: `fill` streams the new content
     * into the staged temp file, and the same strongest-available rename
-    * replaces the destination — the shared primitive behind the BASE
-    * pointer swap (text) and the Bloom store's binary rewrite, so a
+    * replaces the destination — the shared primitive behind the commit
+    * markers (text) and the Bloom store's binary rewrite, so a
     * reader of either sees old bytes or new bytes, never a truncated
     * file.
     */
@@ -110,7 +111,7 @@ private[graft] object Fs {
     // On the local scheme, create the temp through the RAW (checksum-free)
     // layer: the checksummed LocalFileSystem writes a `.tmp-….crc` sidecar
     // that the data-file-only move below would orphan — one stray file per
-    // pointer swap, unbounded under an auto-compacting stream.
+    // marker write, unbounded under an auto-compacting stream.
     val out = fs match {
       case l: org.apache.hadoop.fs.LocalFileSystem => l.getRawFileSystem.create(tmp, true)
       case other => other.create(tmp, true)

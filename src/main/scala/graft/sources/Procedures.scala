@@ -29,9 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * the maintain half is too. Every procedure routes through the SAME
   * [[Sinks]] refresh entrypoints the programmatic and streaming paths
   * use, so SQL-landed batches inherit every guard those paths carry —
-  * including the loud fresh-checkpoint rejection when
-  * `ingest_postings_segment` is handed a batch id at/below the store's
-  * fold watermark (spec-pinned misuse). Procedures execute DRIVER-side at
+  * including [[StoreLog.guard]]'s watermark rule: `ingest_postings_segment`
+  * rejects a batch id strictly below the store's fold watermark loudly
+  * (the fresh-checkpoint misuse, spec-pinned) and lands an id equal to it
+  * invisible, with a warning. Procedures execute DRIVER-side at
   * CALL time (they are maintenance operations, not expressions), return
   * no result rows, and are declared non-deterministic so nothing ever
   * caches or re-plans around them.
@@ -103,8 +104,9 @@ class GraftProcedureCatalog extends ProcedureCatalog with TableCatalog {
     },
     proc("ingest_postings_segment",
       "land a batch view as an explicit posting segment id " +
-        "(Sinks.ingestPostingsSegment — replays rewrite in place; a fresh-" +
-        "checkpoint id at/below the fold watermark is rejected loudly)",
+        "(Sinks.ingestPostingsSegment — a replayed id drops the segment's " +
+        "commit marker, rewrites it and re-commits; an id strictly below " +
+        "the fold watermark is rejected, one equal to it lands invisible)",
       Seq("store_path", "batch_view", "batch_id")) { (s, a) =>
       val id = a(2).toLongOption.getOrElse(throw new IllegalArgumentException(
         s"ingest_postings_segment: batch_id must be an integer, got '${a(2)}'"))

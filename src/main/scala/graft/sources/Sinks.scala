@@ -260,23 +260,35 @@ object Sinks {
     * [[graft.streaming.Streaming.startKeyedUpsertSink]]'s versioning).
     */
   def refreshDailyRollup(spark: org.apache.spark.sql.SparkSession,
-                         path: String, newEvents: DataFrame): Unit = {
-    val batch = newEvents
+                         path: String, newEvents: DataFrame): Unit =
+    mergeTouchedDays(spark, path, newEvents
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
+      .agg(count(lit(1)).as("n"), sum("value").as("sum_value")),
+      Seq("day", "event_type"), Seq("n", "sum_value"))
+
+  /** The touched-days merge behind [[refreshDailyRollup]] and
+    * [[refreshLatencySketches]]: union the aggregated `batch` with the
+    * standing rows of only the days it touches, re-sum `sums` per `keys`
+    * (which lead with `day`), and dynamically overwrite just those day
+    * partitions of `path`.
+    */
+  private def mergeTouchedDays(spark: org.apache.spark.sql.SparkSession,
+                               path: String, batch: DataFrame,
+                               keys: Seq[String], sums: Seq[String]): Unit = {
     // touched days only: metadata-sized (≤ days in the batch)
     val days = batch.select("day").distinct().collect().map(_.getDate(0))
     val standing = spark.read.parquet(path)
       .filter(col("day").isin(days: _*))
-      .select("day", "event_type", "n", "sum_value")
+      .select((keys ++ sums).map(col): _*)
+    val summed = sums.map(c => sum(c).as(c))
     standing.unionByName(batch)
-      .groupBy("day", "event_type")
-      .agg(sum("n").as("n"), sum("sum_value").as("sum_value"))
+      .groupBy(keys.map(col): _*)
+      .agg(summed.head, summed.tail: _*)
       .repartition(col("day"))
-      // materialize BEFORE the write: the merged partials read from the
-      // same path the write overwrites, and Spark (rightly) refuses a
-      // plan that scans its own output. The materialized state is
-      // touched-days × event-types rows — metadata-sized.
+      // materialize BEFORE the write: the merged rows read from the same
+      // path the write overwrites, and Spark (rightly) refuses a plan that
+      // scans its own output. The materialized state is touched-days ×
+      // keys rows — metadata-sized.
       .localCheckpoint()
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -284,6 +296,97 @@ object Sinks {
       .partitionBy("day")
       .parquet(path)
   }
+
+  /** The store's tokenization — ONE definition shared by build and refresh
+    * so an appended doc can never tokenize differently from the original
+    * corpus pass.
+    */
+  private def postingToks: org.apache.spark.sql.Column =
+    filter(split(lower(col("text")), " "), t => t =!= "")
+
+  // The posting store is a [[StoreLog]] (`gen-*` versions, `seg/b=*`
+  // segments; the module doc states the protocol) whose versions and
+  // segments share one inner layout: `postings/` (tok_bucket-partitioned),
+  // `docstats/` (per-doc side table) and `meta/` (one row: n_docs, sum_dl,
+  // buckets). A probe unions the same components over every directory of
+  // its snapshot.
+  private[graft] def postingLog(path: String): StoreLog =
+    new StoreLog(path, Some(s"$path/seg"))
+
+  /** One consistent read-side snapshot of a posting store: the log
+    * snapshot and its combined stats. Every probe resolves exactly one
+    * and plans against its immutable directories.
+    */
+  private case class PostingsView(snap: StoreLog.Snapshot, buckets: Int,
+                                  nDocs: Long, sumDl: Long) {
+    def postingRoots: Seq[String] = snap.dirs.map(d => s"$d/postings")
+    def docstatRoots: Seq[String] = snap.dirs.map(d => s"$d/docstats")
+  }
+
+  // A committed directory's meta row is immutable — version names are
+  // unique, and a segment replay evicts its entry while its marker is down
+  // — so the stats are memoizable for the life of the JVM. Without this
+  // every probe pays 1 + |segments| driver-side parquet-read JOBS just to
+  // resolve (buckets, stats); with it, a snapshot costs directory listings
+  // and one marker read after first touch. Entries leave with their
+  // directories' GC ([[forget]]), so an indefinitely-compacting stream
+  // does not grow the map.
+  private val metaCache =
+    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Int)]
+
+  private def forget(dirs: Seq[String]): Unit =
+    dirs.foreach(d => metaCache.remove(Fs.qualify(d)): Unit)
+
+  private def postingsView(spark: org.apache.spark.sql.SparkSession,
+                           path: String, defaultBuckets: Int = 64): PostingsView = {
+    val snap = postingLog(path).snapshot
+    val stats = snap.dirs.map(d => metaCache.getOrElseUpdate(Fs.qualify(d), {
+      // a v6 segment holds its row in `segmeta` (see StoreLog's v6 note)
+      if (Fs.exists(s"$d/segmeta")) throw new IllegalStateException(s"$path is a " +
+        "posting store in the v6 layout, which this version does not read; " +
+        "rebuild the store into an empty path")
+      val r = spark.read.parquet(s"$d/meta").select("n_docs", "sum_dl", "buckets").head()
+      (r.getLong(0), r.getLong(1), r.getInt(2))
+    }))
+    PostingsView(snap, stats.headOption.fold(defaultBuckets)(_._3),
+      stats.map(_._1).sum, stats.map(_._2).sum)
+  }
+
+  /** Index `docs` into `dir`: postings partitioned by `tok_bucket =
+    * pmod(hash(tok), buckets)`, the per-doc side table in `docstatFiles`
+    * files, then the meta row — the one writer behind builds and
+    * segments. Meta carries exact long (n_docs, sum_dl) from the
+    * just-written docstats (never a second corpus pass) and the bucket
+    * modulus, which is part of the store, not a caller convention: a
+    * prober hashing into a different modulus would prune to the wrong
+    * directories and silently miss.
+    */
+  private def indexDocs(docs: DataFrame, dir: String, buckets: Int,
+                        docstatFiles: Int): Unit = {
+    val toks = postingToks
+    docs
+      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
+      .withColumn("tok_bucket", pmod(hash(col("tok")), lit(buckets)))
+      .repartition(col("tok_bucket"))
+      .write.mode("overwrite")
+      .option("compression", "zstd")
+      .partitionBy("tok_bucket")
+      .parquet(s"$dir/postings")
+    // per-doc side table: the BM25 length normalizer PLUS the doc-level
+    // facet dimensions (lang, source) — built in the same corpus pass
+    // family at index time, so ranked queries AND facet rollups never
+    // touch text: hits join this metadata-per-doc table, not the corpus
+    writeSized(docs.select(col("doc_id"), size(toks).cast("long").as("dl"),
+      col("lang"), col("source")), s"$dir/docstats", docstatFiles)
+    writeMeta(docs.sparkSession, dir, buckets)
+  }
+
+  private def writeMeta(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        buckets: Int): Unit =
+    writeSized(spark.read.parquet(s"$dir/docstats")
+      .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
+      .withColumn("buckets", lit(buckets)),
+      s"$dir/meta", 1)
 
   /** Positional posting store: the persisted form of the inverted index
     * behind `log_inverted_search` / `log_phrase_search`. Postings
@@ -294,265 +397,20 @@ object Sinks {
     * posting rows. Bucket-by-hash (not by token) keeps directory count
     * bounded as the vocabulary grows Heaps-law-style at 100 TB; the
     * pre-write repartition is the same small-files control as
-    * [[writeEventsByDay]].
+    * [[writeEventsByDay]]. A (re)build commits a new version that folds
+    * through every standing segment: their docs must be part of `docs`
+    * (the rebuild contract).
     */
-  /** The store's tokenization — ONE definition shared by build and refresh
-    * so an appended doc can never tokenize differently from the original
-    * corpus pass.
-    */
-  private def postingToks: org.apache.spark.sql.Column =
-    filter(split(lower(col("text")), " "), t => t =!= "")
-
-  // ---------------------------------------------------------------------
-  // Posting store — MVCC generation layout.
-  //
-  //   $path/BASE                   pointer file: "<current-gen> <prev-gen>"
-  //   $path/<gen>/postings/        tok_bucket-partitioned, IMMUTABLE
-  //   $path/<gen>/docstats/        per-doc side table, IMMUTABLE
-  //   $path/<gen>/meta/            1 row (n_docs, sum_dl, avgdl, buckets,
-  //                                folded_through), IMMUTABLE
-  //   $path/seg/b=<id>/…           streaming segments (+ segmeta, _COMMIT)
-  //
-  // NOTHING in the store is ever rewritten in place: builds and
-  // compactions write a COMPLETE new generation beside the live one and
-  // then swap the BASE pointer with one atomic rename ([[Fs
-  // .writeTextAtomic]]); segments are immutable once their _COMMIT
-  // marker exists, and the meta a probe needs is either the generation's
-  // (immutable) or derived from per-segment segmeta rows (immutable).
-  // Consequences, each spec-pinned:
-  //  - READ ISOLATION: a probe racing a refresh / compaction / rebuild
-  //    sees the pre-state or the post-state, never a torn union
-  //    (StorageLayoutSpec's race test). The retired generation and its
-  //    folded segments survive until the NEXT maintenance op's GC — the
-  //    same retire-one-version grace as Streaming.upsertBatch.
-  //  - CRASH SAFETY WITHOUT DATA LOSS: a crash at any point leaves the
-  //    old pointer target intact, so the store never passes through a
-  //    marker-less state and a compaction crash can no longer degrade to
-  //    a corpus-only rebuild that would drop streaming-only documents.
-  //  - CROSS-PROCESS BUILD RACE: generation directories carry a unique
-  //    suffix, so two writers that both pass the missing-marker check
-  //    build side by side and the LAST pointer swap wins — both
-  //    outcomes are complete stores (spec-pinned last-writer-wins).
-  //
-  // `folded_through` is the watermark of segment ids folded into a
-  // generation: readers union the generation with committed segments
-  // STRICTLY ABOVE it, so a compaction's segment deletions are pure GC —
-  // visibility flipped with the pointer, not with the deletes.
-  //
-  // Concurrency contract: READERS are fully concurrent with everything
-  // (that is the point of the design). MAINTENANCE ops (build, compact,
-  // and their leading GC) assume one maintainer at a time per store —
-  // in-process they are serialized by Stores' build lock and the single
-  // streaming-sink thread; the cross-process BUILD race degrades safely
-  // to last-writer-wins (unique gen dirs + atomic pointer), but two
-  // concurrent GCs could retire each other's in-progress generation, so
-  // cross-process periodic maintenance should be owned by one scheduler,
-  // as with any LSM.
-  // ---------------------------------------------------------------------
-
-  /** (current, previous) generation names from the BASE pointer file. */
-  private def readBasePointer(path: String): (Option[String], Option[String]) =
-    Fs.readTextIfExists(s"$path/BASE") match {
-      case None => (None, None)
-      case Some(txt) =>
-        val parts = txt.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-        (parts.headOption, parts.drop(1).headOption)
-    }
-
-  /** Atomically point BASE at `gen`, recording the outgoing generation as
-    * `prev` (the GC grace set).
-    */
-  private def swapBase(path: String, gen: String): Unit = {
-    val (cur, _) = readBasePointer(path)
-    Fs.writeTextAtomic(s"$path/BASE", (Seq(gen) ++ cur.toSeq).mkString(" "))
-  }
-
-  /** A fresh generation directory name: monotonic number (for humans and
-    * ordering) + a unique suffix (so two racing writers can never build
-    * into the same directory — last pointer swap wins).
-    */
-  private def newGenName(path: String): String = {
-    val next = Fs.listSubdirs(path).map(_._1)
-      .filter(_.startsWith("gen-"))
-      .flatMap(genNumber)
-      .maxOption.getOrElse(-1L) + 1
-    s"gen-$next-${java.util.UUID.randomUUID().toString.take(8)}"
-  }
-
-  /** Monotonic sequence number of a `gen-<n>-<uuid>` directory name. */
-  private def genNumber(name: String): Option[Long] =
-    name.split('-').lift(1).flatMap(_.toLongOption)
-
-  /** One consistent read-side snapshot of a posting store: the current
-    * generation (if any), its stats, and the committed segments still
-    * VISIBLE over it (id > folded_through). Every probe resolves exactly
-    * one snapshot and plans against its immutable directories.
-    */
-  private case class PostingsView(genDir: Option[String], buckets: Int,
-                                  nDocs: Long, sumDl: Long,
-                                  foldedThrough: Long,
-                                  segs: Seq[(Long, String)]) {
-    def postingRoots: Seq[String] =
-      genDir.map(g => s"$g/postings").toSeq ++ segs.map(s => s"${s._2}/postings")
-    def docstatRoots: Seq[String] =
-      genDir.map(g => s"$g/docstats").toSeq ++ segs.map(s => s"${s._2}/docstats")
-  }
-
-  // Generation directories carry a unique name and are IMMUTABLE once the
-  // pointer lands on them, and a segment's segmeta is immutable once its
-  // _COMMIT exists — so their one-row stats are memoizable for the life of
-  // the JVM. Without this every probe pays 1 + |segments| driver-side
-  // parquet-read JOBS just to resolve (buckets, folded_through, stats);
-  // with it, a snapshot costs one pointer read + one directory listing
-  // after first touch. A replayed segment rewrite drops its marker first
-  // (ingestPostingsSegment), and replays rewrite IDENTICAL rows, so a
-  // cached segmeta can never go stale in value.
-  private val genMetaCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Int, Long)]
-  private val segMetaCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Int)]
-
-  private def postingsView(spark: org.apache.spark.sql.SparkSession,
-                           path: String, defaultBuckets: Int = 64): PostingsView = {
-    val (cur, _) = readBasePointer(path)
-    val genDir = cur.map(g => s"$path/$g")
-    val genMeta = genDir.map(g => genMetaCache.getOrElseUpdate(Fs.qualify(g), {
-      val r = spark.read.parquet(s"$g/meta")
-        .select("n_docs", "sum_dl", "buckets", "folded_through").head()
-      (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))
-    }))
-    val folded = genMeta.map(_._4).getOrElse(-1L)
-    val segs = committedSegments(path).filter(_._1 > folded)
-    val segStats = segs.map { case (_, dir) =>
-      segMetaCache.getOrElseUpdate(Fs.qualify(dir), {
-        val r = spark.read.parquet(s"$dir/segmeta")
-          .select("n_docs", "sum_dl", "buckets").head()
-        (r.getLong(0), r.getLong(1), r.getInt(2))
-      })
-    }
-    val buckets = genMeta.map(_._3)
-      .orElse(segStats.headOption.map(_._3)).getOrElse(defaultBuckets)
-    PostingsView(genDir, buckets,
-      genMeta.map(_._1).getOrElse(0L) + segStats.map(_._1).sum,
-      genMeta.map(_._2).getOrElse(0L) + segStats.map(_._2).sum,
-      folded, segs)
-  }
-
-  /** Retire what no snapshot within the retention window can still
-    * reference: retired generations beyond the `spark.graft.genRetention`
-    * most recent (default 1 — the pointer's previous generation), and
-    * segments folded into EVERY retained generation. Runs at the START of
-    * each maintenance op, so the STATED read-side guarantee is: a probe
-    * snapshot stays readable across `genRetention` subsequent maintenance
-    * cycles (refresh+compaction); one that outlives the window fails with
-    * a clean FileNotFound error on read — never a wrong answer, because
-    * generation directories are immutable and only ever deleted whole
-    * (spec-pinned both ways). Slow analytical probes racing a busy
-    * compactor at 100 TB should raise the knob to cover their worst-case
-    * read time; the cost is linear (one retired generation's files per
-    * increment). The pointer's (current, previous) pair is always kept
-    * regardless — `previous` is what an in-flight reader of the last
-    * swap holds.
-    */
-  /** The `spark.graft.genRetention` knob, parsed once for the GC and the
-    * health view so the two can never disagree on the effective window. */
-  private[graft] def genRetention(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("spark.graft.genRetention")
-      .map(v => v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"spark.graft.genRetention must be an integer, got '$v'")))
-      .getOrElse(1).max(1)
-
-  private def gcPostings(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Unit = {
-    val (cur, prev) = readBasePointer(path)
-    if (cur.isEmpty && prev.isEmpty) return // nothing ever committed
-    val retain = genRetention(spark)
-    val retired = Fs.listSubdirs(path).map(_._1)
-      .filter(n => n.startsWith("gen-") && !cur.contains(n))
-      .sortBy(genNumber(_).getOrElse(-1L)).reverse // newest retiree first
-    val keep = (cur.toSeq ++ prev.toSeq).toSet ++ retired.take(retain)
-    Fs.listSubdirs(path)
-      .filter { case (name, _) => name.startsWith("gen-") && !keep(name) }
-      .foreach { case (_, dir) =>
-        // evict the retired dir's memoized stats with it — gen names are
-        // UUID-unique so a stale entry would never be re-read, but an
-        // indefinitely-compacting stream would otherwise grow the map by
-        // one dead entry per generation for the life of the JVM
-        genMetaCache.remove(Fs.qualify(dir)): Unit
-        Fs.delete(dir)
-      }
-    val folds = keep.toSeq
-      .filter(g => Fs.exists(s"$path/$g/meta")) // tolerate a torn manual delete
-      .map { g =>
-        // generation meta is immutable — serve the watermark from the same
-        // memo postingsView fills, instead of one driver parquet job per
-        // kept generation per maintenance op
-        genMetaCache.getOrElseUpdate(Fs.qualify(s"$path/$g"), {
-          val r = spark.read.parquet(s"$path/$g/meta")
-            .select("n_docs", "sum_dl", "buckets", "folded_through").head()
-          (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))
-        })._4
-      }
-    if (folds.isEmpty) return
-    val minFolded = folds.min
-    committedSegments(path).filter(_._1 <= minFolded)
-      .foreach { case (_, dir) =>
-        segMetaCache.remove(Fs.qualify(dir)): Unit // see the gen eviction
-        Fs.delete(dir)
-      }
-  }
-
-  /** Generation meta writer: exact long (n_docs, sum_dl) from the
-    * just-written docstats (never a third corpus pass), avgdl derived as
-    * one double division so a batch-built and a stream-accumulated store
-    * compute bit-identical normalizers, the bucket modulus (part of the
-    * store, not a caller convention — a prober hashing into a different
-    * modulus would prune to the wrong directories and silently miss),
-    * and the folded-segment watermark.
-    */
-  private def writeGenMeta(spark: org.apache.spark.sql.SparkSession,
-                           genDir: String, buckets: Int,
-                           foldedThrough: Long): Unit =
-    writeSized(spark.read.parquet(s"$genDir/docstats")
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      .withColumn("avgdl", col("sum_dl") / col("n_docs"))
-      .withColumn("buckets", lit(buckets))
-      .withColumn("folded_through", lit(foldedThrough)),
-      s"$genDir/meta", 1)
-
   def writePostings(docs: DataFrame, path: String, buckets: Int = 64): Unit = {
-    val spark = docs.sparkSession
-    gcPostings(spark, path)
-    // a (re)build folds the whole corpus, so any standing streaming
-    // segments are superseded: the new generation's watermark hides them
-    // (their docs must be part of `docs` — the rebuild contract), and the
-    // next maintenance op's GC removes the directories
-    val folded = committedSegments(path).map(_._1).maxOption.getOrElse(-1L)
-    val gen = s"$path/${newGenName(path)}"
-    val toks = postingToks
-    docs
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-      .withColumn("tok_bucket", pmod(hash(col("tok")), lit(buckets)))
-      .repartition(col("tok_bucket"))
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .partitionBy("tok_bucket")
-      .parquet(s"$gen/postings")
-    // per-doc side table: the BM25 length normalizer PLUS the doc-level
-    // facet dimensions (lang, source) — built in the same corpus pass
-    // family at index time, so ranked queries AND facet rollups never
-    // touch text: hits join this metadata-per-doc table, not the corpus
-    writeSized(docs.select(col("doc_id"), size(toks).cast("long").as("dl"),
-      col("lang"), col("source")),
-      s"$gen/docstats", 8)
-    writeGenMeta(spark, gen, buckets, folded)
-    // the build becomes visible HERE — one atomic pointer swap
-    swapBase(path, gen.split('/').last)
+    val log = postingLog(path)
+    val folded = log.snapshot.nextSegment - 1
+    forget(log.commitVersion(docs.sparkSession, log.newVersionDir(), folded)(
+      indexDocs(docs, _, buckets, 8)))
   }
 
   /** One-row (n_docs, avgdl, buckets) corpus stats of a posting store —
-    * the BM25 normalizers, combined from the generation meta and the
-    * visible segments' segmeta rows (all immutable, all metadata-sized).
+    * the BM25 normalizers, combined from the meta rows of the current
+    * version and the visible segments (all immutable, all metadata-sized).
     * This is the relation behind the SQL surface's `graft_search_meta`
     * view and [[probePostingsBm25]]'s normalizers.
     */
@@ -568,59 +426,47 @@ object Sinks {
   /** One-row OPERATIONAL health snapshot of a posting store — the
     * monitoring face of the genRetention contract (`graft_store_health`
     * in [[graft.GraftSession.openStores]]). `gen_seq` is the current
-    * generation's monotonic number: a monitoring query records it per
-    * probe window and alarms when it advances by ≥ `gen_retention` while
-    * a probe is still in flight — that probe's snapshot is now outside
-    * the retention window and its next read will fail with the clean
-    * FileNotFound contract rather than a wrong answer. The safe-probe
-    * rule this view makes checkable: max safe probe duration =
-    * (maintenance cadence) × gen_retention; raise
-    * `spark.graft.genRetention` until that product covers the slowest
-    * analytical probe (README's deployment-knobs row works the numbers).
+    * version's id: a monitoring query records it per probe window and
+    * alarms when it advances by ≥ `gen_retention` while a probe is still
+    * in flight — that probe's snapshot is now outside the retention window
+    * and its next read will fail with the clean FileNotFound contract
+    * rather than a wrong answer. The safe-probe rule this view makes
+    * checkable: max safe probe duration = (maintenance cadence) ×
+    * gen_retention; raise `spark.graft.genRetention` until that product
+    * covers the slowest analytical probe (README's deployment-knobs row
+    * works the numbers).
     */
   private[graft] def storeHealth(spark: org.apache.spark.sql.SparkSession,
                                  path: String): DataFrame = {
-    val (cur, _) = readBasePointer(path)
     val v = postingsView(spark, path)
-    val retiredKept = Fs.listSubdirs(path).map(_._1)
-      .count(n => n.startsWith("gen-") && !cur.contains(n))
+    val cur = v.snap.current
+    val retiredOnDisk = postingLog(path).versionDirs.size - cur.size
     import spark.implicits._
-    Seq((cur.getOrElse(""), cur.flatMap(genNumber).getOrElse(-1L),
-        v.foldedThrough, v.segs.size.toLong, retiredKept.toLong,
-        genRetention(spark).toLong, v.nDocs))
+    Seq((cur.fold("")(_.name), cur.fold(-1L)(_.id), v.snap.watermark,
+        v.snap.segments.size.toLong, retiredOnDisk.toLong,
+        StoreLog.retention(spark).toLong, v.nDocs))
       .toDF("current_gen", "gen_seq", "folded_through", "visible_segments",
         "retired_generations_on_disk", "gen_retention", "n_docs")
   }
 
   /** Incremental refresh of a [[writePostings]] store for an APPEND batch
     * of NEW documents: postings are additive in doc_id, so the batch
-    * lands as one immutable committed SEGMENT (the next free segment id)
-    * via [[ingestPostingsSegment]] — the standing generation is never
-    * read or rewritten and refresh cost tracks the batch. The segment
-    * becomes visible with its `_COMMIT` marker, one atomic create, so a
-    * probe racing the refresh answers from the pre- or post-state, never
-    * a torn append (StorageLayoutSpec's race test). StorageLayoutSpec
-    * also proves refresh ≡ full rebuild for the conjunctive, ranked, and
-    * phrase probes. Exactly-once is the CALLER's obligation (a
-    * re-delivered batch lands a second segment with duplicate rows);
-    * batches must also hold NEW doc_ids — both are the standard
-    * index-maintenance contract, and the replay-safe ingest shape is the
-    * batchId-keyed [[graft.streaming.Streaming.startPostingsSink]].
+    * lands as one immutable committed SEGMENT at the next free segment id
+    * via [[ingestPostingsSegment]] — the standing version is never read or
+    * rewritten and refresh cost tracks the batch. The segment becomes
+    * visible with its `_COMMIT` marker, so a probe racing the refresh
+    * answers from the pre- or post-state, never a torn append
+    * (StorageLayoutSpec's race test). StorageLayoutSpec also proves
+    * refresh ≡ full rebuild for the conjunctive, ranked, and phrase
+    * probes. Exactly-once is the CALLER's obligation (a re-delivered batch
+    * lands a second segment with duplicate rows); batches must also hold
+    * NEW doc_ids — both are the standard index-maintenance contract, and
+    * the replay-safe ingest shape is the batchId-keyed
+    * [[graft.streaming.Streaming.startPostingsSink]].
     */
   def refreshPostings(spark: org.apache.spark.sql.SparkSession, path: String,
-                      newDocs: DataFrame): Unit = {
-    // The next id must clear BOTH watermarks, not just the committed
-    // segments': after a rebuild recomputes folded_through from still-on-
-    // disk superseded segments and the next compaction's leading GC
-    // deletes them (and early-returns with no new generation), max
-    // committed id sits BELOW folded_through — an id allocated from
-    // segments alone would land committed-but-INVISIBLE (visibility is
-    // id > folded_through) and the next GC would silently delete the
-    // refreshed docs.
-    val v = postingsView(spark, path)
-    ingestPostingsSegment(spark, path, newDocs,
-      math.max(v.foldedThrough, v.segs.map(_._1).maxOption.getOrElse(-1L)) + 1)
-  }
+                      newDocs: DataFrame): Unit =
+    ingestPostingsSegment(spark, path, newDocs, postingLog(path).snapshot.nextSegment)
 
   /** Conjunctive-AND probe of a [[writePostings]] store: reads the bucket
     * modulus from the store's own meta (never a caller-supplied count —
@@ -757,7 +603,7 @@ object Sinks {
       .select(pmod(hash(col("t")), lit(v.buckets)).as("b"))
       .as[Int].collect().toSeq.distinct
     val roots = v.postingRoots
-    require(roots.nonEmpty, s"posting store has no postings (gen=${v.genDir})")
+    require(roots.nonEmpty, "posting store has no postings")
     roots.map(Stores.readCached(spark, _)
         .filter(col("tok_bucket").isin(bucketIds: _*)) // partition pruning
         .filter(col("tok").isin(normTerms: _*)))
@@ -765,22 +611,22 @@ object Sinks {
   }
 
   /** Streaming-ingest step for a [[writePostings]] store: the batch lands
-    * as an IMMUTABLE PER-BATCH SEGMENT under `$path/seg/b=<batchId>/`
-    * (postings partitioned by the store's own tok_bucket modulus, a
-    * docstats side table, and a one-row segmeta carrying the segment's
-    * exact (n_docs, sum_dl) so probe-time BM25 normalizers need no
-    * store-wide rewrite), with a `_COMMIT` marker written LAST — the
-    * Lucene/LSM segment discipline. Probes union the current generation
-    * with every COMMITTED segment above its fold watermark, so a
-    * half-written segment is invisible and NOTHING is rewritten in place.
+    * as an IMMUTABLE PER-BATCH SEGMENT `b=<batchId>` of the store's
+    * [[StoreLog]] (postings partitioned by the store's own tok_bucket
+    * modulus, a docstats side table, and a meta row carrying the
+    * segment's exact (n_docs, sum_dl) so probe-time BM25 normalizers need
+    * no store-wide rewrite) — the Lucene/LSM segment discipline. Probes
+    * union the current version with every COMMITTED segment above its
+    * fold watermark, so a half-written segment is invisible and NOTHING
+    * is rewritten in place.
     *
     * Idempotent under at-least-once replay BY CONSTRUCTION: a
-    * re-delivered batch rewrites its own `b=<batchId>` directory with
-    * identical rows (its marker is dropped first, so probes racing the
-    * replay see the store without the segment — the pre-batch state —
-    * never a half-rewritten one). A stream-only store (no
-    * [[writePostings]] base) works: probes resolve the modulus and stats
-    * from the segments alone.
+    * re-delivered batch rewrites its own segment with identical rows
+    * under the log's replay rule (marker dropped first, so probes racing
+    * the replay see the pre-batch state, never a half-rewritten one). The
+    * log's guard rejects an id strictly below the watermark. A stream-only
+    * store (no [[writePostings]] base) works: probes resolve the modulus
+    * and stats from the segments alone.
     *
     * At 100 TB: segment count grows with batches — the standing answer is
     * [[compactPostings]], wired as an automatic every-N-segments fold in
@@ -790,92 +636,31 @@ object Sinks {
   def ingestPostingsSegment(spark: org.apache.spark.sql.SparkSession, path: String,
                             newDocs: DataFrame, batchId: Long,
                             buckets: Int = 64): Unit = {
+    val log = postingLog(path)
     val view = postingsView(spark, path, buckets)
-    val bucketsEff = view.buckets
-    val seg = s"$path/seg/b=$batchId"
-    // A batch id STRICTLY below the generation's fold watermark whose
-    // segment directory does NOT exist is not a replay — it is a streaming
-    // sink restarted with a fresh checkpoint (batchId reset to 0) against
-    // a store with a positive watermark, or a caller-allocated id bug:
-    // batches are sequential, so a genuinely replayed batch (the one
-    // in-flight at the crash) is always the HIGHEST id that ever landed,
-    // and no compaction can fold PAST it — a true replay always has
-    // batchId ≥ folded_through, even when its own segment was folded and
-    // then GC'd while the sink was down (that replay must proceed as the
-    // harmless invisible rewrite, not wedge the stream). Below the
-    // watermark, the segment would be committed-but-invisible (visibility
-    // is id > folded_through) and silently deleted by the next GC, so
-    // fail loudly instead of losing the docs.
-    require(batchId >= view.foldedThrough || Fs.exists(seg),
-      s"postings ingest batchId=$batchId is below folded_through=" +
-        s"${view.foldedThrough} and no segment directory exists at $seg — " +
-        "not a replay; the segment would be invisible and GC'd. Allocate " +
-        "ids above the watermark (refreshPostings does) or keep the " +
-        "sink's checkpoint so batch ids resume past it.")
-    // The EQUALITY case is inherently ambiguous: a genuine replay of the
-    // exact batch the store folded through looks identical to a sink
-    // restarted with a RESET checkpoint against a store whose watermark
-    // happens to equal the restart id (e.g. batchId=0 vs folded_through=0)
-    // — and in the reset case the landed segment is committed-but-
-    // INVISIBLE (visibility is id > watermark) and the next GC deletes the
-    // docs. The guard cannot distinguish them, so warn loudly and document:
-    // never reset a checkpoint on a store whose watermark equals the id
-    // the fresh sink will restart at.
-    if (batchId == view.foldedThrough && !Fs.exists(seg))
-      System.err.println(
-        s"[graft] WARNING: postings ingest batchId=$batchId EQUALS " +
-          s"folded_through and no prior segment exists at $seg. If this " +
-          "sink was restarted with a reset checkpoint (not replaying), " +
-          "this batch will be invisible and GC'd — resume past the " +
-          "watermark instead.")
-    Fs.delete(s"$seg/_COMMIT") // replay: hide the segment while rewriting
-    // a segment id CAN recur with different rows (rebuild + GC resets the
-    // id space) — drop any memoized stats while the marker is down; probes
-    // skip uncommitted segments, so nothing re-caches until the re-touch
-    segMetaCache.remove(Fs.qualify(seg)): Unit
-    val toks = postingToks
-    newDocs
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-      .withColumn("tok_bucket", pmod(hash(col("tok")), lit(bucketsEff)))
-      .repartition(col("tok_bucket"))
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .partitionBy("tok_bucket")
-      .parquet(s"$seg/postings")
-    newDocs.select(col("doc_id"), size(toks).cast("long").as("dl"),
-        col("lang"), col("source"))
-      .repartition(1)
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .parquet(s"$seg/docstats")
-    writeSized(spark.read.parquet(s"$seg/docstats")
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      .withColumn("buckets", lit(bucketsEff)),
-      s"$seg/segmeta", 1)
-    // the segment becomes visible to probes HERE — everything above is
-    // invisible scratch until this marker exists
-    Fs.touch(s"$seg/_COMMIT")
+    log.guard(batchId, view.snap, "postings ingest")
+    log.writeSegment(batchId) { seg =>
+      // a segment id CAN recur with different rows (a rebuild folds past
+      // it and GC resets the id space): drop its memoized stats while the
+      // marker is down — probes skip uncommitted segments, so nothing
+      // re-caches until the re-commit
+      forget(Seq(seg))
+      indexDocs(newDocs, seg, view.buckets, 1)
+    }
   }
 
   /** Segment COMPACTION of a [[writePostings]] store: folds every visible
-    * committed segment ([[ingestPostingsSegment]]) into a NEW generation
-    * — the scheduled maintenance the segment contract defers to (probe
-    * cost grows with segment count; compaction bounds the fan-in, the
+    * committed segment ([[ingestPostingsSegment]]) into a NEW version —
+    * the scheduled maintenance the segment contract defers to (probe cost
+    * grows with segment count; compaction bounds the fan-in, the
     * Lucene/LSM merge step). The merged postings + docstats + meta are
-    * written COMPLETE beside the live generation, then one atomic BASE
-    * pointer swap makes them current; the folded segments stay on disk —
-    * invisible to new readers via the generation's `folded_through`
-    * watermark, still there for in-flight readers of the old generation —
-    * until the next maintenance op's GC retires them along with the
-    * retired generation.
-    *
-    * A crash at ANY point therefore leaves the OLD pointer target fully
-    * live: no marker-less window, no corpus-only rebuild, and — unlike a
-    * delete-then-rename swap — no window where streaming-only documents
-    * exist nowhere but a deleted segment. StorageLayoutSpec proves probe
-    * invariance (conjunctive / BM25 / phrase identical before and after,
-    * equal to a batch-built store over the union corpus) and the race
-    * test proves reader isolation through a live compaction.
+    * written COMPLETE beside the live version and committed with the
+    * folded watermark; the folded segments stay on disk for in-flight
+    * readers of the old version until the log's GC retires them. A crash
+    * at ANY point leaves the old version fully live. StorageLayoutSpec
+    * proves probe invariance (conjunctive / BM25 / phrase identical before
+    * and after, equal to a batch-built store over the union corpus) and
+    * the race test proves reader isolation through a live compaction.
     *
     * At 100 TB: compaction rewrites the base — that is its definition, as
     * with any LSM merge — so it runs when segment count crosses a budget
@@ -884,39 +669,23 @@ object Sinks {
     * partition.
     */
   def compactPostings(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    gcPostings(spark, path)
+    val log = postingLog(path)
     val v = postingsView(spark, path)
-    if (v.segs.isEmpty) return // nothing to fold
-    val gen = s"$path/${newGenName(path)}"
-    // write the merged layout as a complete sibling generation (probes
-    // never see it until the pointer swap)
-    v.postingRoots.map(spark.read.parquet(_)).reduce(_ unionByName _)
-      .repartition(col("tok_bucket"))
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .partitionBy("tok_bucket")
-      .parquet(s"$gen/postings")
-    v.docstatRoots.map(spark.read.parquet(_)).reduce(_ unionByName _)
-      .repartition(8)
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .parquet(s"$gen/docstats")
-    writeGenMeta(spark, gen, v.buckets, v.segs.map(_._1).max)
-    swapBase(path, gen.split('/').last)
+    if (v.snap.segments.isEmpty) return // nothing to fold
+    forget(log.commitVersion(spark, log.newVersionDir(), v.snap.segments.last._1) { gen =>
+      v.postingRoots.map(spark.read.parquet(_)).reduce(_ unionByName _)
+        .repartition(col("tok_bucket"))
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .partitionBy("tok_bucket")
+        .parquet(s"$gen/postings")
+      writeSized(v.docstatRoots.map(spark.read.parquet(_)).reduce(_ unionByName _),
+        s"$gen/docstats", 8)
+      writeMeta(spark, gen, v.buckets)
+    })
   }
 
-  /** Committed streaming segments of a posting store, (id, dir) in id
-    * order (numeric — `b=10` sorts after `b=2`).
-    */
-  private def committedSegments(path: String): Seq[(Long, String)] =
-    Fs.listSubdirs(s"$path/seg")
-      .filter { case (name, dir) =>
-        name.startsWith("b=") && Fs.exists(s"$dir/_COMMIT")
-      }
-      .map { case (name, dir) => (name.stripPrefix("b=").toLong, dir) }
-      .sortBy(_._1)
-
-  /** The store's full postings relation: the current generation's
+  /** The store's full postings relation: the current version's
     * partitions (absent in a stream-only store) unioned with every
     * visible committed segment's — the UNPRUNED view behind the SQL
     * surface's `graft_postings` ([[graft.GraftSession.openStores]]).
@@ -933,7 +702,7 @@ object Sinks {
     roots.map(Stores.readCached(spark, _)).reduce(_ unionByName _)
   }
 
-  /** The store's full docstats view: the current generation's side table
+  /** The store's full docstats view: the current version's side table
     * (absent in a stream-only store) unioned with every visible committed
     * segment's.
     */
@@ -945,12 +714,12 @@ object Sinks {
   }
 
   /** Count of committed segments still visible over the current
-    * generation — the auto-compaction trigger input
+    * version — the auto-compaction trigger input
     * ([[graft.streaming.Streaming.startPostingsSink]]).
     */
   private[graft] def visibleSegmentCount(
       spark: org.apache.spark.sql.SparkSession, path: String): Int =
-    postingsView(spark, path).segs.size
+    postingLog(path).snapshot.segments.size
 
   /** Token-SORTED term dictionary + string zone map — the layout a PREFIX
     * query (search-box autocomplete, `tok LIKE 'spar%'`) needs and the
@@ -1101,30 +870,12 @@ object Sinks {
     * re-reads its pre-state version on re-delivery instead.
     */
   def refreshLatencySketches(spark: org.apache.spark.sql.SparkSession,
-                             path: String, newEvents: DataFrame): Unit = {
-    val batch = newEvents
+                             path: String, newEvents: DataFrame): Unit =
+    mergeTouchedDays(spark, path, newEvents
       .groupBy(to_date(col("ts")).as("day"), col("event_type"),
         graft.engine.LogOps.sketchBucketCol.as("bucket"))
-      .agg(count(lit(1)).as("n"))
-    // touched days only: metadata-sized (≤ days in the batch)
-    val days = batch.select("day").distinct().collect().map(_.getDate(0))
-    val standing = spark.read.parquet(path)
-      .filter(col("day").isin(days: _*))
-      .select("day", "event_type", "bucket", "n")
-    standing.unionByName(batch)
-      .groupBy("day", "event_type", "bucket")
-      .agg(sum("n").as("n"))
-      .repartition(col("day"))
-      // materialize BEFORE the write: the merged counts read from the same
-      // path the write overwrites (see refreshDailyRollup); the state is
-      // touched-days × types × buckets rows — metadata-sized
-      .localCheckpoint()
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "zstd")
-      .partitionBy("day")
-      .parquet(path)
-  }
+      .agg(count(lit(1)).as("n")),
+      Seq("day", "event_type", "bucket"), Seq("n"))
 
   /** Persisted Bloom decontamination filter: the serialized
     * `org.apache.spark.util.sketch.BloomFilter` bytes (self-describing —

@@ -45,7 +45,12 @@ object Stores {
   //     unpruned; the bump rebuilds every store instead. It also retires
   //     any pre-r12 checksum-sidecar'd files wholesale (Fs.writeAtomic
   //     now drops stale .crc sidecars too — belt and braces).
-  private val VERSION = "v6"
+  // v7: the posting store moved onto the shared StoreLog protocol — no
+  //     BASE pointer; versions carry their own `_COMMIT` marker holding
+  //     the fold watermark, and versions and segments share one `meta`
+  //     row. v7 readers refuse a v6 posting store (StoreLog), so the
+  //     bump rebuilds instead.
+  private val VERSION = "v7"
   private val memo = scala.collection.concurrent.TrieMap.empty[String, String]
   private val buildLock = new Object
 
@@ -81,13 +86,13 @@ object Stores {
     s"${storeRootBase(spark)}/graft_stores/$VERSION/${safe}_${fingerprint(dataDir, table)}/$kind"
   }
 
-  private def buildOnce(key: String, doneMarker: String)(build: => Unit): String =
+  private def buildOnce(key: String, done: => Boolean)(build: => Unit): String =
     memo.getOrElse(key, buildLock.synchronized {
       // re-check under the lock: a concurrent first query may have built
       // while this thread waited — getOrElseUpdate alone would run both
       // thunks and race two overwrite-mode writers onto one directory
       memo.getOrElseUpdate(key, {
-        if (!Fs.exists(doneMarker)) build
+        if (!done) build
         key
       })
     })
@@ -97,9 +102,8 @@ object Stores {
     */
   def postingStore(spark: SparkSession, dataDir: String): String = {
     val path = storeRoot(spark, dataDir, "documents.parquet", "postings_store")
-    // the BASE pointer is swapped in only after a complete generation is
-    // written → valid completion marker
-    buildOnce(path, s"$path/BASE") {
+    // a version commits only once complete → a committed one means built
+    buildOnce(path, Sinks.postingLog(path).versions.nonEmpty) {
       Sinks.writePostings(graft.engine.Tables.documents(spark, dataDir), path)
     }
   }
@@ -112,7 +116,7 @@ object Stores {
     */
   def dailyRollup(spark: SparkSession, dataDir: String): String = {
     val path = storeRoot(spark, dataDir, "events.parquet", "daily_rollup")
-    buildOnce(path, s"$path/_SUCCESS") {
+    buildOnce(path, Fs.exists(s"$path/_SUCCESS")) {
       Sinks.writeDailyRollup(graft.engine.Tables.events(spark, dataDir), path)
     }
   }
@@ -125,7 +129,7 @@ object Stores {
     */
   def rangeClusteredEvents(spark: SparkSession, dataDir: String): String = {
     val path = storeRoot(spark, dataDir, "events.parquet", "range_clustered")
-    buildOnce(path, s"$path/zonemap/_SUCCESS") {
+    buildOnce(path, Fs.exists(s"$path/zonemap/_SUCCESS")) {
       Sinks.writeRangeClustered(graft.engine.Tables.events(spark, dataDir), path)
     }
   }
@@ -195,7 +199,7 @@ object Stores {
     */
   def termDict(spark: SparkSession, dataDir: String): String = {
     val path = storeRoot(spark, dataDir, "documents.parquet", "term_dict")
-    buildOnce(path, s"$path/zonemap/_SUCCESS") {
+    buildOnce(path, Fs.exists(s"$path/zonemap/_SUCCESS")) {
       Sinks.writeTermDict(graft.engine.Tables.documents(spark, dataDir), path)
     }
   }
@@ -214,7 +218,7 @@ object Stores {
     */
   def shinglePairs(spark: SparkSession, dataDir: String): String = {
     val path = storeRoot(spark, dataDir, "documents.parquet", "shingle_pairs")
-    buildOnce(path, s"$path/_SUCCESS") {
+    buildOnce(path, Fs.exists(s"$path/_SUCCESS")) {
       Sinks.writeSized(graft.engine.LlmOps.shinglePairsOf(spark, dataDir), path, 4)
     }
   }
@@ -229,7 +233,7 @@ object Stores {
     */
   def bloomFilter(spark: SparkSession, dataDir: String): String = {
     val path = storeRoot(spark, dataDir, "documents.parquet", "bloom_decontam")
-    buildOnce(path, s"$path/_SUCCESS") {
+    buildOnce(path, Fs.exists(s"$path/_SUCCESS")) {
       Sinks.writeBloomFilter(
         graft.engine.LlmOps.evalGramsOf(spark, dataDir)
           .stat.bloomFilter("ng", graft.engine.LlmOps.bloomExpectedItems,
@@ -248,7 +252,7 @@ object Stores {
     */
   def latencySketch(spark: SparkSession, dataDir: String): String = {
     val path = storeRoot(spark, dataDir, "events.parquet", "latency_sketch")
-    buildOnce(path, s"$path/_SUCCESS") {
+    buildOnce(path, Fs.exists(s"$path/_SUCCESS")) {
       Sinks.writeLatencySketches(graft.engine.Tables.events(spark, dataDir), path)
     }
   }
@@ -261,7 +265,7 @@ object Stores {
   def pqIndex(spark: SparkSession, dataDir: String): String = {
     val path = storeRoot(spark, dataDir, "embeddings.parquet", "pq_index")
     // codes is written after centroids + codebook (writePqIndex order) → marker
-    buildOnce(path, s"$path/codes/_SUCCESS") {
+    buildOnce(path, Fs.exists(s"$path/codes/_SUCCESS")) {
       val (cents, cb, codes) = graft.engine.LlmOps.pqTrainEncode(spark, dataDir)
       Sinks.writePqIndex(cents, cb, codes, path)
     }

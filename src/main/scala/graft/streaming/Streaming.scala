@@ -496,8 +496,9 @@ object Streaming {
       .start()
 
   /** One keyed-upsert MERGE step (factored out so the replay spec can
-    * drive a crash re-delivery directly). Latest version of the table =
-    * `path/v=<max committed batchId>`.
+    * drive a crash re-delivery directly). The table is a [[graft.sources
+    * .StoreLog]] of versions `gen-<batchId>`; its current version is the
+    * table.
     */
   def upsertBatch(batch: DataFrame, path: String, batchId: Long): Unit = {
     val key = Window.partitionBy("user_id", "event_type")
@@ -511,26 +512,17 @@ object Streaming {
         col("n_versions"))
     // pre-state = latest version STRICTLY BEFORE this batch — a replayed
     // batch must merge against what it saw the first time, never its own
-    // output (reading v=batchId here would double-count on re-delivery)
-    val prev = tableVersions(path).filter(_ < batchId)
-    val merged =
-      if (prev.isEmpty) compacted
-      else {
-        val state = batch.sparkSession.read.parquet(s"$path/v=${prev.max}")
-        state.unionByName(compacted)
-          .withColumn("rn", row_number().over(
-            key.orderBy(col("last_ts").desc, col("last_event_id").desc)))
-          .withColumn("nv", sum("n_versions").over(key))
-          .filter(col("rn") === 1)
-          .select(col("user_id"), col("event_type"), col("last_ts"),
-            col("last_value"), col("last_event_id"), col("nv").as("n_versions"))
-      }
-    merged.write.mode("overwrite").parquet(s"$path/v=$batchId")
-    // retire versions older than the one just read — the pre-state must
-    // survive until THIS version commits, in case this batch replays
-    prev.filter(_ < prev.maxOption.getOrElse(Long.MinValue)).foreach { v =>
-      graft.sources.Fs.delete(s"$path/v=$v")
+    // output (reading version batchId here would double-count on re-delivery)
+    val merged = preState(batch, path, batchId).fold(compacted) { state =>
+      state.unionByName(compacted)
+        .withColumn("rn", row_number().over(
+          key.orderBy(col("last_ts").desc, col("last_event_id").desc)))
+        .withColumn("nv", sum("n_versions").over(key))
+        .filter(col("rn") === 1)
+        .select(col("user_id"), col("event_type"), col("last_ts"),
+          col("last_value"), col("last_event_id"), col("nv").as("n_versions"))
     }
+    commitTableVersion(merged, path, batchId)
   }
 
   /** S5 (sketch-ingest sink): streaming micro-batches folded into a
@@ -560,8 +552,8 @@ object Streaming {
       .start()
 
   /** One sketch-merge MVCC step (factored out so the replay spec can drive
-    * a crash re-delivery directly). Latest version of the table =
-    * `path/v=<max committed batchId>`; rows are (event_type, day, bucket, n).
+    * a crash re-delivery directly), on the same versioned table as
+    * [[upsertBatch]]; rows are (event_type, day, bucket, n).
     */
   def sketchUpsertBatch(batch: DataFrame, path: String, batchId: Long): Unit = {
     val counts = batch
@@ -569,19 +561,30 @@ object Streaming {
         graft.engine.LogOps.sketchBucketCol.as("bucket"))
       .agg(count(lit(1)).as("n"))
     // pre-state = latest version STRICTLY BEFORE this batch (see upsertBatch)
-    val prev = tableVersions(path).filter(_ < batchId)
-    val merged =
-      if (prev.isEmpty) counts
-      else batch.sparkSession.read.parquet(s"$path/v=${prev.max}")
-        .unionByName(counts)
+    val merged = preState(batch, path, batchId).fold(counts)(
+      _.unionByName(counts)
         .groupBy("day", "event_type", "bucket")
-        .agg(sum("n").as("n"))
-    merged.write.mode("overwrite").parquet(s"$path/v=$batchId")
-    // retire versions older than the one just read — the pre-state must
-    // survive until THIS version commits, in case this batch replays
-    prev.filter(_ < prev.maxOption.getOrElse(Long.MinValue)).foreach { v =>
-      graft.sources.Fs.delete(s"$path/v=$v")
-    }
+        .agg(sum("n").as("n")))
+    commitTableVersion(merged, path, batchId)
+  }
+
+  /** A versioned upsert table: versions `gen-<batchId>` of a
+    * [[graft.sources.StoreLog]], no segments.
+    */
+  private def tableLog(path: String) = new graft.sources.StoreLog(path)
+
+  /** The newest committed version before `batchId`, read. Its directory
+    * survives the commit of `batchId` (GC keeps at least two versions), so
+    * a replay of `batchId` reads it again.
+    */
+  private def preState(batch: DataFrame, path: String, batchId: Long): Option[DataFrame] =
+    tableLog(path).versions.filter(_.id < batchId).lastOption
+      .map(v => batch.sparkSession.read.parquet(v.dir))
+
+  private def commitTableVersion(merged: DataFrame, path: String, batchId: Long): Unit = {
+    val log = tableLog(path)
+    log.commitVersion(merged.sparkSession, log.versionDir(batchId), -1L)(
+      merged.write.mode("overwrite").parquet(_)): Unit
   }
 
   /** T11 (search-index ingest sink): streaming documents folded into a
@@ -591,9 +594,9 @@ object Streaming {
     * rescans. Each micro-batch lands as an immutable per-batch SEGMENT via
     * [[graft.sources.Sinks.ingestPostingsSegment]]; idempotence under
     * at-least-once replay is by construction (a re-delivered batch
-    * overwrites its own `b=<batchId>` segment with identical rows — the
-    * segment analog of the MVCC version protocol above), and probes only
-    * see segments whose `_COMMIT` marker exists. StreamingSpec proves the
+    * rewrites its own `b=<batchId>` segment with identical rows under the
+    * [[graft.sources.StoreLog]] replay rule), and probes only see segments
+    * whose `_COMMIT` marker exists. StreamingSpec proves the
     * stream-fed store answers conjunctive/BM25/phrase probes identically
     * to a batch-built [[graft.sources.Sinks.writePostings]] store over the
     * same docs, and that a crash re-delivery changes nothing.
@@ -601,9 +604,9 @@ object Streaming {
   /** `compactEvery` closes the LSM loop WITHOUT an operator in it: once
     * the visible segment count reaches the threshold, the batch that
     * crossed it runs [[graft.sources.Sinks.compactPostings]] inline —
-    * safe mid-stream because compaction is an atomic generation-pointer
-    * swap (concurrent probes stay isolated; a crash leaves the old
-    * generation live; a replayed batch re-triggering compaction folds a
+    * safe mid-stream because compaction commits a new store version with
+    * one marker (concurrent probes stay isolated; a crash leaves the old
+    * version live; a replayed batch re-triggering compaction folds a
     * now-empty visible set and no-ops). Probe cost is thereby bounded at
     * O(compactEvery) segments no matter how long the stream lives.
     */
@@ -635,7 +638,8 @@ object Streaming {
     * ∪ segments committed STRICTLY BEFORE this batch.
     *
     * Idempotent under at-least-once replay twice over: a re-delivered
-    * batch (a) overwrites its own doc segment with identical rows and (b)
+    * batch (a) rewrites its own doc segment with identical rows, its
+    * marker dropped first ([[graft.sources.StoreLog]]'s replay rule), and (b)
     * re-derives the SAME existing set (strictly-before excludes its own
     * segment — which also prevents the batch pairing against itself), so
     * the pair append's standing-key anti-join drops every re-derived pair.
@@ -660,7 +664,7 @@ object Streaming {
     * index exists to remove). The reconstruction unions one component per
     * prior batch — which `foldEvery` bounds: once the visible doc-segment
     * count reaches the threshold, the batch that crossed it folds every
-    * visible segment into one consolidated BASE version
+    * visible segment into one consolidated doc-side version
     * ([[foldDocSegments]] — the postings store's every-N compaction
     * discipline applied to the doc side, index components folded with the
     * docs), so segment discovery and the existing-set union stay
@@ -691,49 +695,28 @@ object Streaming {
                               pairsPath: String, docsPath: String,
                               batchId: Long): Int = {
     val spark = batch.sparkSession
-    val seg = s"$docsPath/b=$batchId"
-    // ONE driver-side snapshot of the doc side per batch (the watermark
-    // and segment listing serve the guard, the existing-set derivation,
-    // AND the returned visible count — on HDFS/S3A each extra resolution
-    // is a remote LIST round-trip per micro-batch).
-    val folded = docFoldedThrough(docsPath)
-    // Same loud-failure contract as the postings ingest: a batch id
-    // STRICTLY below the doc-fold watermark whose segment is gone is a
-    // FRESH checkpoint against a folded store. A genuine replay is always
-    // the highest id that ever landed, so no fold can pass it —
-    // batchId ≥ watermark even when its own segment was folded and GC'd
-    // while the sink was down (that replay proceeds idempotently below).
-    require(batchId >= folded || graft.sources.Fs.exists(seg),
-      s"pair ingest batchId=$batchId is below the doc-fold watermark " +
-        s"$folded and no segment directory exists at $seg — not a replay; " +
-        "keep the sink's checkpoint so batch ids resume past the watermark.")
-    // Equality is the one ambiguous case (see Sinks.ingestPostingsSegment):
-    // a true replay of the folded-through batch is indistinguishable from
-    // a reset checkpoint restarting at the watermark id, and the reset
-    // case lands docs the next fold's GC silently deletes. Warn loudly;
-    // operators must not reset checkpoints on stores whose watermark
-    // equals the restart id.
-    if (batchId == folded && !graft.sources.Fs.exists(seg))
-      System.err.println(
-        s"[graft] WARNING: pair ingest batchId=$batchId EQUALS the " +
-          s"doc-fold watermark and no prior segment exists at $seg. If " +
-          "this sink restarted with a reset checkpoint (not replaying), " +
-          "the batch's docs will be invisible and GC'd at the next fold " +
-          "— resume past the watermark instead.")
+    val log = docLog(docsPath)
+    // ONE driver-side snapshot of the doc side per batch: it serves the
+    // guard, the existing-set derivation, AND the returned visible count
+    // (on HDFS/S3A each extra resolution is a remote LIST round-trip per
+    // micro-batch)
+    val snap = log.snapshot
+    log.guard(batchId, snap, "pair ingest")
     // the seed corpus's shingle-index components materialize ONCE (marker-
     // guarded): the static pre-stream docs never need re-shingling again
     ensureDocSeedIndex(spark, docsPath, baseDocs)
-    batch.write.mode("overwrite")
-      .option("compression", "zstd").parquet(s"$seg/data")
-    // the segment's own doc-side shingle-index components, derived from
-    // the LANDED data so a replay re-derives byte-identical components;
-    // written before the marker like everything else in the segment
-    writeDocShingleIndex(spark.read.parquet(s"$seg/data"), seg)
-    graft.sources.Fs.touch(s"$seg/_COMMIT")
+    val seg = log.segmentDir(batchId)
+    log.writeSegment(batchId) { dir =>
+      batch.write.mode("overwrite")
+        .option("compression", "zstd").parquet(s"$dir/data")
+      // the segment's own doc-side shingle-index components, derived from
+      // the LANDED data so a replay re-derives byte-identical components
+      writeDocShingleIndex(spark.read.parquet(s"$dir/data"), dir)
+    }
     // strictly-before: replays re-derive the same existing set, and the
     // batch can never pair against its own just-landed segment. A replay
     // that lands AFTER its batch was folded (crash between fold and the
-    // checkpoint commit) reads the folded base — a superset containing
+    // checkpoint commit) reads the folded version — a superset containing
     // its own docs — so the batch's doc_ids are anti-joined OUT of the
     // existing side (inside shinglePairsDeltaSharded, via the dshard-
     // pruned overlap subtraction): the delta's df census then counts
@@ -743,12 +726,9 @@ object Streaming {
     // batch excluded, the re-derived delta is identical and the
     // standing-key anti-join drops all of it — idempotent in every cap
     // regime.
-    val committed = committedDocSegments(docsPath)
-    val prior = committed.filter(p => p._1 > folded && p._1 < batchId)
-    val comps = (s"$docsPath/seed" +:
-      (if (folded < 0) Nil else Seq(s"$docsPath/base/v=$folded"))) ++
-      prior.map(_._2)
-    // one-time in-place migration: a base/segment committed BEFORE the
+    val comps = (s"$docsPath/seed" +: snap.current.map(_.dir).toSeq) ++
+      snap.segments.filter(_._1 < batchId).map(_._2)
+    // one-time in-place migration: a version/segment committed BEFORE the
     // doc-side index existed (pre-index layout: data/_COMMIT only) — or
     // whose index write crashed before its `shards` meta landed —
     // re-derives its components from the landed docs here, so a resumed
@@ -764,9 +744,8 @@ object Streaming {
     val (posts, bydoc, census, nShards) = readDocShingleIndex(spark, comps)
     graft.sources.Sinks.refreshShinglePairsSharded(
       spark, pairsPath, posts, bydoc, census, batchDocs, nShards)
-    // visible count AFTER this batch (`committed` was listed after the
-    // segment landed, so it is included) — the auto-fold trigger input
-    committed.count(_._1 > folded)
+    // visible count AFTER this batch — the auto-fold trigger input
+    snap.segments.count(_._1 != batchId) + (if (batchId > snap.watermark) 1 else 0)
   }
 
   /** Write the doc-side shingle-index components for `docs` under `dir`:
@@ -901,59 +880,40 @@ object Streaming {
     (posts, bydoc, census, metas.head._2)
   }
 
-  /** Fold every visible doc segment of a pair-ingest sink into ONE
-    * consolidated base version (`docsPath/base/v=<max folded id>/data`,
-    * `_COMMIT` written last) — the doc-side compaction that bounds the
-    * existing-set union at O(foldEvery) parts. MVCC like everything else
-    * here: the new base is written complete beside the old, visibility
-    * flips with its `_COMMIT` marker (readers take the HIGHEST committed
-    * version, so a crash mid-fold leaves the old base authoritative), and
-    * the previous base version plus the just-folded segments survive one
-    * fold cycle for in-flight derivations before the next fold's GC
-    * retires them. Cost: one linear rewrite of the accumulated doc corpus
-    * per fold — amortized O(corpus/foldEvery) per batch, the standard LSM
-    * trade; the pair STORE is never rewritten.
-    *
-    * Deliberately a SIMPLER sibling of the posting store's generation
-    * machinery ([[graft.sources.Sinks.compactPostings]]), not a reuse of
-    * it: the doc side is one flat versioned directory read by exactly one
-    * single-threaded writer (this sink), so it needs neither the BASE
-    * pointer swap, per-bucket layout, segmeta stats, nor the configurable
-    * `spark.graft.genRetention` window that concurrent analytical probes
-    * of the posting store justify. The shared invariants (marker-last
-    * commit, highest-committed-wins, one-cycle grace GC) are pinned by
-    * their own StreamingSpec run, so a divergence from the postings
-    * discipline would fail a spec, not drift silently.
+  /** Fold every visible doc segment of a pair-ingest sink into ONE new
+    * version of its doc-side [[graft.sources.StoreLog]] — the doc-side
+    * compaction that bounds the existing-set union at O(foldEvery) parts,
+    * under the same commit protocol as the posting store
+    * ([[graft.sources.Sinks.compactPostings]]): the new version is written
+    * complete beside the old and becomes current with its `_COMMIT`
+    * marker, so a crash mid-fold leaves the old version authoritative, and
+    * the log's GC retires what the kept versions no longer need. Cost: one
+    * linear rewrite of the accumulated doc corpus per fold — amortized
+    * O(corpus/foldEvery) per batch, the standard LSM trade; the pair STORE
+    * is never rewritten.
     */
   def foldDocSegments(spark: SparkSession, docsPath: String): Unit = {
-    val folded = docFoldedThrough(docsPath)
-    val segs = committedDocSegments(docsPath).filter(_._1 > folded)
-    if (segs.isEmpty) return // nothing visible to fold
-    val hi = segs.map(_._1).max
-    val parts =
-      (if (folded < 0) Nil
-       else Seq(spark.read.parquet(s"$docsPath/base/v=$folded/data"))) ++
-        segs.map(s => spark.read.parquet(s"${s._2}/data"))
-    val dst = s"$docsPath/base/v=$hi"
-    parts.reduce(_ unionByName _)
-      .write.mode("overwrite")
-      .option("compression", "zstd").parquet(s"$dst/data")
-    // the folded base's shingle-index components, re-derived from the
-    // folded data through the ONE shared writer — identical rows to
-    // unioning the folded segments' components (bigramShingles is
-    // row-wise), so fold ≡ no-fold holds for the index exactly as it does
-    // for the docs; cost rides the fold's existing linear rewrite
-    writeDocShingleIndex(spark.read.parquet(s"$dst/data"), dst)
-    graft.sources.Fs.touch(s"$dst/_COMMIT")
-    // GC with one-cycle grace: what the PREVIOUS fold superseded has now
-    // outlived a full cycle — retire base versions below the old watermark
-    // and the segments it folded; the just-folded segments stay until the
-    // next fold
-    docBaseVersions(docsPath).filter(_ < folded)
-      .foreach(v => graft.sources.Fs.delete(s"$docsPath/base/v=$v"))
-    committedDocSegments(docsPath).filter(_._1 <= folded)
-      .foreach { case (_, dir) => graft.sources.Fs.delete(dir) }
+    val log = docLog(docsPath)
+    val snap = log.snapshot
+    if (snap.segments.isEmpty) return // nothing visible to fold
+    log.commitVersion(spark, log.newVersionDir(), snap.segments.last._1) { dst =>
+      snap.dirs.map(d => spark.read.parquet(s"$d/data")).reduce(_ unionByName _)
+        .write.mode("overwrite")
+        .option("compression", "zstd").parquet(s"$dst/data")
+      // the folded version's shingle-index components, re-derived from the
+      // folded data through the ONE shared writer — identical rows to
+      // unioning the folded segments' components (bigramShingles is
+      // row-wise), so fold ≡ no-fold holds for the index exactly as it
+      // does for the docs; cost rides the fold's existing linear rewrite
+      writeDocShingleIndex(spark.read.parquet(s"$dst/data"), dst)
+    }: Unit
   }
+
+  /** The doc side of a pair-ingest sink: versions under `docsPath/base`,
+    * segments `docsPath/b=<batchId>`.
+    */
+  private def docLog(docsPath: String) =
+    new graft.sources.StoreLog(s"$docsPath/base", Some(docsPath))
 
   /** T13 (ANN-index ingest sink): streaming embedding batches fold into a
     * standing [[graft.sources.Sinks.writePqIndex]] store via
@@ -998,48 +958,18 @@ object Streaming {
       }
       .start()
 
-  /** Committed base versions of a pair-ingest sink's doc side. */
-  private def docBaseVersions(docsPath: String): Seq[Long] =
-    graft.sources.Fs.listSubdirs(s"$docsPath/base")
-      .filter { case (name, dir) =>
-        name.startsWith("v=") && graft.sources.Fs.exists(s"$dir/_COMMIT")
-      }
-      .map(_._1.stripPrefix("v=").toLong).sorted
-
-  /** Doc-fold watermark: highest committed base version (-1 = no fold
-    * yet). Segments with id ≤ it are folded into the base.
-    */
-  private[graft] def docFoldedThrough(docsPath: String): Long =
-    docBaseVersions(docsPath).maxOption.getOrElse(-1L)
-
   /** Committed doc segments still visible over the fold watermark — the
     * auto-fold trigger input.
     */
-  private[graft] def visibleDocSegmentCount(docsPath: String): Int = {
-    val folded = docFoldedThrough(docsPath)
-    committedDocSegments(docsPath).count(_._1 > folded)
-  }
+  private[graft] def visibleDocSegmentCount(docsPath: String): Int =
+    docLog(docsPath).snapshot.segments.size
 
-  /** Committed doc segments of a pair-ingest sink (dirs with _COMMIT). */
-  private def committedDocSegments(path: String): Seq[(Long, String)] =
-    graft.sources.Fs.listSubdirs(path)
-      .filter { case (name, dir) =>
-        name.startsWith("b=") && graft.sources.Fs.exists(s"$dir/_COMMIT")
-      }
-      .map { case (name, dir) => (name.stripPrefix("b=").toLong, dir) }
-      .sortBy(_._1)
-
-  /** Committed version ids of a keyed-upsert table (dirs with _SUCCESS). */
-  def tableVersions(path: String): Seq[Long] =
-    graft.sources.Fs.listSubdirs(path)
-      .filter { case (name, dir) =>
-        name.startsWith("v=") && graft.sources.Fs.exists(s"$dir/_SUCCESS")
-      }
-      .map(_._1.stripPrefix("v=").toLong).sorted
+  /** Committed version ids of a keyed-upsert table, oldest first. */
+  def tableVersions(path: String): Seq[Long] = tableLog(path).versions.map(_.id)
 
   /** Current contents of a keyed-upsert table: its latest version. */
   def readKeyedTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/v=${tableVersions(path).max}")
+    spark.read.parquet(tableLog(path).versions.last.dir)
 
   /** File-based streaming source over an events-shaped directory: new
     * parquet files appearing under `dir` are treated as stream arrivals

@@ -132,8 +132,8 @@ class FsSpec extends SparkSpecBase {
       rows(graft.sources.Sinks.probePostingsPhrase(spark, p, "slow", "join")))
 
     graft.sources.Sinks.writePostings(docs.filter(col("doc_id") <= cut), dir, buckets = 16)
-    // the BASE pointer really lives on the mock scheme
-    assert(graft.sources.Fs.readTextIfExists(s"$dir/BASE").exists(_.startsWith("gen-")))
+    // a committed version really lives on the mock scheme
+    assert(graft.sources.Sinks.postingLog(dir).versions.exists(_.dir.startsWith("mockfs:")))
     // probe racing a refresh THROUGH THE MOCK SCHEME: every sampled answer
     // is the pre- or post-state — the isolation contract must hold on the
     // branch a remote deployment takes, not just on java.nio
@@ -156,7 +156,7 @@ class FsSpec extends SparkSpecBase {
       assert(a._2 === before._2 || a._2 === after._2, "torn BM25 read on mockfs")
       assert(a._3 === before._3 || a._3 === after._3, "torn phrase read on mockfs")
     }
-    // compaction (generation swap via FileContext rename) is answer-invariant
+    // compaction (a version commit marker via FileContext rename) is answer-invariant
     graft.sources.Sinks.compactPostings(spark, dir)
     assert(answers(dir) === after, "compaction changed answers on mockfs")
     // and the whole store answers exactly like one built on the local FS
@@ -198,7 +198,7 @@ class FsSpec extends SparkSpecBase {
       spark.conf.set("spark.graft.storeRoot", s"mockfs:$tmp/store_root")
       val path = graft.sources.Stores.postingStore(spark, sfDir)
       assert(path.startsWith(s"mockfs:$tmp/store_root/graft_stores/"), path)
-      assert(graft.sources.Fs.exists(s"$path/BASE"))
+      assert(graft.sources.Sinks.postingLog(path).versions.nonEmpty)
       val got = graft.sources.Sinks
         .probePostingsBm25(spark, path, Seq("spark", "join"), k = 20)
         .collect().map(_.toString).toSeq

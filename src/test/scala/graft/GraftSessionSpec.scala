@@ -206,13 +206,13 @@ class GraftSessionSpec extends SparkSpecBase {
       .collect().map(_.toString).toSeq
     assert(served === want && served.nonEmpty,
       "SQL-driven refresh diverged from a full rebuild")
-    // misuse: run maintenance until segment b=0's directory is past its
-    // retention grace (while it is on disk, id 0 is a legal replay — the
-    // GC keeps a segment as long as ANY retained generation predates its
-    // fold), then hand the ingest procedure the id — the fresh-checkpoint
-    // shape the guard exists to reject, now reachable from pure SQL and
-    // still loud. The third compact folds nothing but its leading GC
-    // retires the initial generation and with it the folded segment.
+    // misuse: run maintenance until the fold watermark passes id 0 and
+    // segment b=0's directory is past its retention grace (the GC keeps a
+    // segment as long as ANY retained version predates its fold), then
+    // hand the ingest procedure the id — the fresh-checkpoint shape the
+    // guard exists to reject, now reachable from pure SQL and still loud.
+    // The second compaction's commit retires the initial version and with
+    // it the folded segment; the third folds nothing.
     sources.Sinks.compactPostings(spark, dir)
     spark.sql(s"CALL graft.refresh_postings('$dir', 'graft_test_batch')").collect()
     sources.Sinks.compactPostings(spark, dir)

@@ -504,9 +504,9 @@ class StorageLayoutSpec extends SparkSpecBase {
   test("posting store READ ISOLATION: probes racing a refresh, a compaction, and " +
     "a rebuild each observe the pre- or post-state, never a torn union") {
     // The MVCC contract under test: a maintenance op flips visibility with
-    // ONE atomic event (the segment _COMMIT create / the BASE pointer
-    // swap), so a concurrent reader's snapshot is always exactly one of
-    // the two adjacent states — no half-appended postings, no
+    // ONE atomic event (a segment's or a version's _COMMIT create), so a
+    // concurrent reader's snapshot is always exactly one of the two
+    // adjacent states — no half-appended postings, no
     // base-without-segments window, no double count mid-fold.
     val docs = graft.engine.Tables.documents(spark, sfDir)
     val cut = docs.selectExpr("percentile(doc_id, 0.7)").head.getDouble(0).toLong
@@ -678,11 +678,11 @@ class StorageLayoutSpec extends SparkSpecBase {
   }
 
   test("posting store CROSS-PROCESS BUILD RACE: two concurrent writers converge " +
-    "to one valid complete store (last pointer swap wins)") {
+    "to one valid complete store (highest committed version wins)") {
     // Stores serializes builds in-process; across JVMs both writers can
-    // pass the missing-marker check. Generation directories carry a unique
-    // suffix, so the two builds never collide on disk and whichever BASE
-    // swap lands last points at a complete generation.
+    // pass the missing-marker check. Version directories carry a unique
+    // suffix, so the two builds never collide on disk, and whichever
+    // committed version sorts highest is a complete store.
     val docs = graft.engine.Tables.documents(spark, sfDir)
     val dir = s"$tmp/postings_build_race"
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
