@@ -4,11 +4,24 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Writes PLANS.md: the formatted physical plan of every headline query plus
-  * the structurally interesting operators, annotated with what to look for.
-  * This is the artifact behind the scale claims — broadcast pins, single
-  * exchanges, pushed filters, codegen spans — regenerated on demand so the
-  * documented plans can never silently drift from the code.
+/** The plan-dump tool: `.explain("formatted")` of registered queries.
+  *
+  * With no arguments it writes PLANS.md: the formatted physical plan of
+  * every headline query plus the structurally interesting operators,
+  * annotated with what to look for. This is the artifact behind the scale
+  * claims — broadcast pins, single exchanges, pushed filters, codegen
+  * spans — regenerated on demand so the documented plans can never
+  * silently drift from the code.
+  *
+  * With `<out_dir> <suffix> <q1,q2,...>` it writes
+  * `<out_dir>/<query>_<suffix>.txt` per listed query — the evidence
+  * artifact behind each optimization round's
+  * `plans/rNN/<query>_{before,after}.txt` files:
+  * `sbt "runMain graft.Plans plans/r13 before llm_semdedup,llm_tfidf"`.
+  *
+  * Both modes share one session (local[4], 4 shuffle partitions, UTC) so
+  * dumps are comparable across rounds; `SPARK_GRAFT_SF_DIR` picks the
+  * fixture (default sf0.001).
   */
 object Plans {
   private val annotated: Seq[(String, String)] = Seq(
@@ -40,6 +53,8 @@ object Plans {
     "llm_ann_ivfpq" -> "index build: codes and coarse cells come from the nearest-centroid kernel in one codegen'd projection over the embeddings scan (no join, no exchange); query: probe cells and ADC tables are built on the driver, the one distributed pass is the encode + code scan filtered to the probed cells, each partition returning a bounded per-query top-k for the driver to merge; the re-rank fetch reads only shortlist vec_ids — the dumped plan is the answer's LocalTableScan",
     "llm_kmeans" -> "Lloyd E-step is the nearest-centroid kernel inside the corpus scan against the driver-collected k centroids: no join, no window, no exchange carries an embedding; the only shuffles are the M-step (c_id, pos) partial sums and the k-key profile",
     "log_grep_multi" -> "all N rlike predicates evaluate in ONE codegen'd pass over a single text scan; adding a pattern adds a count column, never a scan",
+    "llm_jaccard_pairs" -> "the adaptive exact pair scan (exactJaccardPairs) over the df-capped src0 token sets: the closed token vocabulary (≤ 4096 capped keys) takes the dense path — per-doc bitmask words from a codegen'd bit_or aggregate, a block-grid ShuffledHashJoin on the cell with the popcount evaluated once per pair; no candidate pair set is materialized",
+    "text_winnow_pairs" -> "the exact pair scan's expansion path over the census-capped fingerprints: postings group by fingerprint once, the C(df, 2) pairs expand map-side into a partially-aggregated count, and both size relations join the count verify (the open fingerprint vocabulary's adaptive route, prefix filter + array verify, measured slower)",
     "llm_incremental_dedup" -> "digest probe ships 16-byte hashes; the near-dup postings join is batch x existing (small x large) — the standing corpus never self-joins",
     "join_interval_overlap" -> "no shared equi-key, yet NO BNLJ: time-bucket binning turns the interval predicate into a SortMergeJoin on bucket + in-bucket range filter; the census-salt guard (broadcast hot-bucket list, salt sub-keys) bounds a storm hour's pairing per task",
     "log_template_mine" -> "mask + hash-agg in one codegen'd scan pipeline; partial agg collapses onto template-cardinality keys map-side",
@@ -101,6 +116,8 @@ object Plans {
     "log_sql_sketch_served" -> "the SQL-surface range-quantile report (plain spark.sql over graft_latency_sketch): day= partition filter prunes the standing store's directories, rank walk over pruned bucket rows, zero events scans")
 
   def main(args: Array[String]): Unit = {
+    require(args.isEmpty || args.length == 3,
+      "usage: Plans [<out_dir> <suffix> <q1,q2,...>]")
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -109,18 +126,27 @@ object Plans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the structural queries\n\n")
-    sb.append(s"Generated by `graft.Plans` against `$sfDir`. Each section notes\n")
-    sb.append("the property the plan must exhibit; PlanSpec asserts the same\n")
-    sb.append("properties in CI so they cannot drift.\n")
-    annotated.foreach { case (name, note) =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(FormattedMode)
-      sb.append(s"\n## $name\n\n*$note*\n\n```\n$plan```\n")
+    def plan(name: String): String =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+    if (args.isEmpty) {
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans of the structural queries\n\n")
+      sb.append(s"Generated by `graft.Plans` against `$sfDir`. Each section notes\n")
+      sb.append("the property the plan must exhibit; PlanSpec asserts the same\n")
+      sb.append("properties in CI so they cannot drift.\n")
+      annotated.foreach { case (name, note) =>
+        sb.append(s"\n## $name\n\n*$note*\n\n```\n${plan(name)}```\n")
+      }
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"PLANS.md written (${annotated.size} queries)")
+    } else {
+      val Array(outDir, suffix, list) = args
+      Files.createDirectories(Paths.get(outDir))
+      list.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan(name))
+        println(s"dumped $name")
+      }
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"PLANS.md written (${annotated.size} queries)")
     spark.stop()
   }
 }

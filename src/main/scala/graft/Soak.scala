@@ -366,11 +366,8 @@ object Soak {
         // capped-postings census: vocabulary size decides dense vs prefix
         val sh0 = graft.engine.LlmOps.bigramShingles(
           graft.engine.Tables.documents(spark, d)).localCheckpoint()
-        val nDocs = sh0.agg(countDistinct("doc_id")).head.getLong(0)
-        val capped = sh0.groupBy("sh").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= least(
-            lit(graft.engine.LlmOps.shingleDfFrac) * nDocs,
-            lit(graft.engine.LlmOps.shingleDfAbs)))
+        val capped = graft.engine.LlmOps.capCensus(sh0, "sh",
+          graft.engine.LlmOps.shingleDfFrac, graft.engine.LlmOps.shingleDfAbs)
         val vocab = capped.count()
         // prefix-filter candidate volume (the §6f-style evidence): only
         // meaningful on the open-vocab path, but cheap enough to measure

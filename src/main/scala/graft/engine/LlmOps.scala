@@ -24,8 +24,10 @@ import graft.functions.{CentroidScore, Centroids, VectorOps, vectors}
   */
 object LlmOps {
 
-  /** Document-frequency cap for inverted-index joins: removes posting keys
-    * (tokens, shingles) with df > least(frac·n_docs, absCap). The two
+  /** Document-frequency cap census for inverted-index joins: (key, df) for
+    * every posting key (token, shingle, fingerprint) with
+    * df ≤ least(frac·n_docs, absCap) — callers drop the rest from their
+    * postings by a semi-join on `key`. The two
     * components bound two different blow-ups. The FRACTIONAL cap drops
     * corpus-wide stopwords — one token shared by every doc otherwise turns
     * the postings self-join into ~n² candidate rows on a single hot key.
@@ -38,17 +40,16 @@ object LlmOps {
     * Keys over the cap carry no near-dup signal either way (membership
     * shared by thousands of docs identifies nobody). `postings` must be
     * distinct (doc_id, key) rows; the doc count joins in as a broadcast
-    * single-row aggregate and the keep-list applies as a semi-join (one
-    * row per vocabulary term).
+    * single-row aggregate, and the census is one row per kept vocabulary
+    * term.
     */
-  private[graft] def dfCapped(postings: DataFrame, key: String, frac: Double,
-                              absCap: Long = 2000L): DataFrame = {
+  private[graft] def capCensus(postings: DataFrame, key: String, frac: Double,
+                               absCap: Long): DataFrame = {
     val nDocs = postings.agg(countDistinct("doc_id").as("n_docs"))
-    val keep = postings.groupBy(key).agg(count(lit(1)).as("df"))
+    postings.groupBy(key).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .filter(col("df") <= least(lit(frac) * col("n_docs"), lit(absCap)))
-      .select(key)
-    postings.join(keep, Seq(key), "left_semi")
+      .select(key, "df")
   }
 
   /** Pair-intersection counts for an inverted-index join, computed by
@@ -64,7 +65,7 @@ object LlmOps {
     * Σdf² ≈ 73 M the whole query. Identical semantics to the self-join
     * (the oracle SQL keeps that spelling): sorted ids + slice-after-i
     * emit each unordered pair exactly once with id_a < id_b. Per-key work
-    * and per-task memory stay bounded by [[dfCapped]]'s absCap — the ids
+    * and per-task memory stay bounded by [[capCensus]]'s absCap — the ids
     * array tops out at absCap elements, and pairs stream out of the
     * generators (never materialized as one cap²-element array). At 100 TB
     * the win doubles: the grouped relation is one row per vocabulary term,
@@ -124,12 +125,14 @@ object LlmOps {
     * join postings on token, count co-occurrences. This is the formulation
     * that scales: candidate pairs are generated only for docs sharing a
     * token, and the df-cap below (drop tokens in > 80% of in-scope docs,
-    * or > 2000 docs absolute — see [[dfCapped]]) bounds the postings join
+    * or > 2000 docs absolute — see [[capCensus]]) bounds the postings join
     * at web scale — one stopword shared by every doc would otherwise make
     * the self-join n²-row regardless of the inverted-index structure. Capped tokens leave BOTH the intersection
     * and the set sizes, so the score is Jaccard over the discriminating
     * (non-ubiquitous) token space — the similarity a stopword-filtered
     * dedup pipeline actually wants; the oracle applies the identical cap.
+    * The pair scan is the adaptive [[exactJaccardPairs]]; the fixtures'
+    * closed token vocabulary sends it down the dense bitset path.
     * MinHash (llm_minhash_pairs) is the sub-linear approximation of this
     * quantity.
     */
@@ -157,48 +160,16 @@ object LlmOps {
       |JOIN sz sb ON inter.id_b = sb.doc_id
       |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8
       |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
-    val tok0 = Tables.documents(s, dir)
+    // tokens are distinct per doc (array_distinct), so the census count
+    // is the document frequency
+    val tok = Tables.documents(s, dir)
       .filter(col("source") === "src0")
       .select(col("doc_id"),
-        explode(array_distinct(split(lower(col("text")), " "))).as("tok"))
-      .filter(col("tok") =!= "")
-    // df-cap: tokens present in > 80% of in-scope docs carry no near-dup
-    // signal and blow the postings join up to ~n² rows; drop them (tok0 is
-    // already distinct per doc, so the helper's count == document
-    // frequency).
-    // localCheckpoint: `tok` feeds three consumers (the size relation and
-    // both stages of the pair expansion via dfCapped's own two passes);
-    // materializing it once stops the tokenize+explode+cap pipeline from
-    // re-running per consumer. Single-JVM stand-in for persist/checkpoint.
-    val tok = dfCapped(tok0, "tok", 0.8).localCheckpoint()
-    val sz = tok.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = pairCounts(tok, "tok")
-    val jac = col("c").cast("double") / (col("sa.n") + col("sb.n") - col("c"))
-    inter
-      .join(sz.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("id_b") === col("sb.doc_id"))
-      .filter(jac >= 0.8)
-      .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
-      .orderBy("id_a", "id_b")
+        explode(array_distinct(split(lower(col("text")), " "))).as("sh"))
+      .filter(col("sh") =!= "")
+    exactJaccardPairs(tok, 0.8, 2000L, 0.8).orderBy("id_a", "id_b")
   }
 
-  /** D2 (n-gram form): word-bigram shingle Jaccard ≥ 0.5 — near-identical
-    * docs keep most shingles in common while random co-occurrence stays
-    * near zero, so shingling separates true near-dups far better than the
-    * unigram token sets above. Same inverted-index join, same df-cap
-    * protection as [[jaccardPairs]] (here 10% of docs, 2000 absolute —
-    * shingles are far sparser than unigrams, so a boilerplate bigram
-    * shared by a tenth of the corpus is already pure noise; at the
-    * fixtures no shingle reaches either bound, so results are the
-    * uncapped ones while the guard stays load-bearing for saturated or
-    * closed-vocabulary corpora). The shingle is `concat_ws` over a 2-slice so Spark and
-    * DuckDB build byte-identical keys (both slice 1-based and truncate at
-    * the array end); docs with fewer than two tokens emit NO shingles on
-    * either side (a when-guard here, `range(1, len)` being empty at
-    * len ≤ 1 there — an unguarded Spark `sequence(1, len-1)` would count
-    * DOWN at len = 0 and a `greatest(1, …)` floor would emit a degenerate
-    * unigram shingle DuckDB never builds).
-    */
   /** Bigram-shingle SELECT shared by [[shinglePairCtes]] (whole-corpus)
     * and [[incrementalDedup]]'s batch/existing sides — ONE SQL source of
     * truth for the shingling, per the shinglePairCtes lockstep rule.
@@ -225,7 +196,7 @@ object LlmOps {
   }
 
   /** Shingle df-cap parameters, shared across every consumer (Spark
-    * [[dfCapped]] calls and the oracle CTEs) so the cap can be tuned in
+    * [[capCensus]] calls and the oracle CTEs) so the cap can be tuned in
     * exactly one place. */
   private[graft] val shingleDfFrac = 0.1
   private[graft] val shingleDfAbs = 2000L
@@ -291,7 +262,7 @@ object LlmOps {
     * transitive clusters, audits), so the downstream consumers probe the
     * store instead of re-running this postings expansion per query.
     *
-    * The pair scan is ADAPTIVE (see [[shinglePairsFrom]]): dense bitset
+    * The pair scan is ADAPTIVE (see [[exactJaccardPairs]]): dense bitset
     * popcount for closed vocabularies, prefix-filtered inverted index +
     * exact verify for open ones — both compute the identical exact pair
     * set, and the oracle SQL deliberately keeps the naive self-join
@@ -304,7 +275,8 @@ object LlmOps {
     * …) — the entry the pair-store REFRESH spec drives with corpus splits.
     */
   private[graft] def shinglePairsOfDocs(docs: DataFrame): DataFrame =
-    shinglePairsFrom(bigramShingles(docs))
+    exactJaccardPairs(bigramShingles(docs), shingleDfFrac, shingleDfAbs,
+      shingleJaccardThreshold)
 
   /** The NEW pair rows an APPEND batch of documents adds to a standing
     * pair set built over `exist`: batch×existing cross pairs (an
@@ -322,16 +294,10 @@ object LlmOps {
   private[graft] def shinglePairsDelta(exist: DataFrame, batch: DataFrame): DataFrame = {
     val shx0 = bigramShingles(exist).localCheckpoint()
     val shb0 = bigramShingles(batch).localCheckpoint()
-    val all = shx0.unionByName(shb0)
-    val nDocs = all.agg(countDistinct("doc_id").as("n_docs"))
-    val keep = all.groupBy("sh").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(nDocs))
-      .filter(col("df") <= least(lit(shingleDfFrac) * col("n_docs"), lit(shingleDfAbs)))
+    val keep = capCensus(shx0.unionByName(shb0), "sh", shingleDfFrac, shingleDfAbs)
       .select("sh")
     val shx = shx0.join(keep, Seq("sh"), "left_semi").localCheckpoint()
     val shb = shb0.join(keep, Seq("sh"), "left_semi").localCheckpoint()
-    val szx = shx.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val szb = shb.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = shb.select(col("doc_id").as("bid"), col("sh"))
       .join(shx.select(col("doc_id").as("xid"), col("sh")), Seq("sh"))
       // a batch doc can ALSO appear in `exist` when a folded-base replay
@@ -340,15 +306,19 @@ object LlmOps {
       // pair with its own folded copy
       .filter(col("bid") =!= col("xid"))
       .groupBy("bid", "xid").agg(count(lit(1)).as("c"))
-    val jac = col("c").cast("double") / (col("bn") + col("xn") - col("c"))
-    val cross = inter
-      .join(szb.select(col("doc_id").as("bid"), col("n").as("bn")), Seq("bid"))
-      .join(szx.select(col("doc_id").as("xid"), col("n").as("xn")), Seq("xid"))
-      .filter(jac >= shingleJaccardThreshold)
+    deltaPairs(inter, shb, shx.groupBy("doc_id").agg(count(lit(1)).as("n")))
+  }
+
+  /** A delta's new pair rows: the batch×standing cross pairs (`inter`:
+    * bid, xid, c) verified against the batch sizes and the standing sizes
+    * `szx` and re-oriented to id_a < id_b, plus the batch-internal pairs of
+    * the capped batch postings `shb`. */
+  private def deltaPairs(inter: DataFrame, shb: DataFrame, szx: DataFrame): DataFrame = {
+    val szb = shb.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    countVerify(inter, "bid", "xid", szb, szx, shingleJaccardThreshold)
       .select(least(col("bid"), col("xid")).as("id_a"),
-        greatest(col("bid"), col("xid")).as("id_b"),
-        round(jac, 4).as("jaccard"))
-    cross.unionByName(prefixVerifiedPairs(shb, shingleJaccardThreshold))
+        greatest(col("bid"), col("xid")).as("id_b"), col("jaccard"))
+      .unionByName(prefixVerifiedPairs(shb, shingleJaccardThreshold))
   }
 
   /** Shard count for the standing doc-side shingle index
@@ -503,55 +473,47 @@ object LlmOps {
       .select("sh")
     val szx = mshingles.join(keepM, Seq("sh"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val szb = shb.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val jac = col("c").cast("double") / (col("bn") + col("xn") - col("c"))
-    val cross = inter
-      .join(szb.select(col("doc_id").as("bid"), col("n").as("bn")), Seq("bid"))
-      .join(szx.select(col("doc_id").as("xid"), col("n").as("xn")), Seq("xid"))
-      .filter(jac >= shingleJaccardThreshold)
-      .select(least(col("bid"), col("xid")).as("id_a"),
-        greatest(col("bid"), col("xid")).as("id_b"),
-        round(jac, 4).as("jaccard"))
-    cross.unionByName(prefixVerifiedPairs(shb, shingleJaccardThreshold))
+    deltaPairs(inter, shb, szx)
   }
 
-  /** [[shinglePairsOf]] over an arbitrary (doc_id, sh) shingle relation —
-    * the shared core of the whole-corpus build and spec-level replays.
+  /** The exact set-similarity pair scan of the near-dup family: every doc
+    * pair (id_a < id_b, jaccard ≥ `tau`, ROUND(…, 4)) over distinct
+    * (doc_id, sh) postings whose keys — shingles, tokens or fingerprints,
+    * of any type with an injective string form — survive the
+    * [[capCensus]] cap (`frac`, `absCap`). The whole-corpus shingle build,
+    * spec-level replays and `llm_jaccard_pairs` run it.
     *
     * ADAPTIVE by measured vocabulary size (one metadata-sized count on the
-    * already-checkpointed capped postings): an OPEN vocabulary (Heaps'-law
-    * text — most shingles rare) goes through the prefix-filtered inverted
-    * index, where candidate volume tracks the rare-key df² mass; a CLOSED
-    * vocabulary (≤ [[denseVocabMax]] distinct capped shingles — log
-    * templates, enum-ish fields, saturated word soups) is the inverted
-    * index's worst case (every key is hot, nearly all pairs co-occur:
-    * measured 10.3 M co-occurring of 12.5 M possible on the 5 000-doc /
-    * 931-shingle fixture), so it takes [[densePairs]] — exact bitset
-    * popcount over a block grid, no candidate materialization at all.
-    * Both paths compute the identical exact pair set.
+    * checkpointed census): an OPEN vocabulary (Heaps'-law text — most
+    * keys rare) goes through the prefix-filtered inverted index, where
+    * candidate volume tracks the rare-key df² mass; a CLOSED vocabulary
+    * (≤ [[denseVocabMax]] distinct capped keys — log templates, enum-ish
+    * fields, saturated word soups) is the inverted index's worst case
+    * (every key is hot, nearly all pairs co-occur: measured 10.3 M
+    * co-occurring of 12.5 M possible on the 5 000-doc / 931-shingle
+    * fixture), so it takes [[densePairs]] — exact bitset popcount over a
+    * block grid, no candidate materialization at all. Every path
+    * computes the identical exact pair set.
     */
-  private[graft] def shinglePairsFrom(sh0raw: DataFrame): DataFrame = {
-    // localCheckpoint before fan-out, as in [[jaccardPairs]]: the
-    // shingling pipeline is consumed by the vocabulary census and the
-    // pair scan and must not re-run per consumer.
-    val sh0 = sh0raw.localCheckpoint()
-    val nDocs = sh0.agg(countDistinct("doc_id").as("n_docs"))
-    // SURVIVING vocabulary census (dfCapped's keep-list, kept as a DF
-    // WITH its dfs — they also drive the path decision below):
-    // vocabulary-sized, checkpointed because three consumers read it
-    // (the dense probe, the volume estimate, the keep semi-join)
-    val census = sh0.groupBy("sh").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(nDocs))
-      .filter(col("df") <= least(lit(shingleDfFrac) * col("n_docs"), lit(shingleDfAbs)))
-      .select("sh", "df")
-      .localCheckpoint()
+  private[graft] def exactJaccardPairs(postings: DataFrame, frac: Double, absCap: Long,
+                                       tau: Double): DataFrame = {
+    // localCheckpoint before fan-out: the postings pipeline (shingling,
+    // tokenizing, winnowing) is consumed by the census and the pair scan
+    // and must not re-run per consumer.
+    val sh0 = postings.localCheckpoint()
+    // the SURVIVING vocabulary with its dfs (they also drive the path
+    // decision below): vocabulary-sized, checkpointed because three
+    // consumers read it (the dense probe, the volume estimate, the keep
+    // semi-join)
+    val census = capCensus(sh0, "sh", frac, absCap).localCheckpoint()
     // limit(denseVocabMax+1) bounds the driver collect: we only need to
     // know WHETHER the vocabulary exceeds the dense bound, never to hold
     // an open vocabulary on the driver
-    val vocabProbe = census.select("sh").limit(denseVocabMax.toInt + 1)
+    val vocabProbe = census.select(col("sh").cast("string").as("sh"))
+      .limit(denseVocabMax.toInt + 1)
       .orderBy("sh").as(org.apache.spark.sql.Encoders.STRING).collect()
     if (vocabProbe.length <= denseVocabMax)
-      densePairs(sh0, vocabProbe, shingleJaccardThreshold)
+      densePairs(sh0, vocabProbe, tau)
     else {
       // open vocabulary: materialize the capped postings once (they fan
       // out to the doc-set relation and the pair expansion)
@@ -575,8 +537,8 @@ object LlmOps {
       val Array(p, n) = census
         .agg(sum(expr("df * (df - 1) / 2")), sum("df"))
         .head().toSeq.map(v => String.valueOf(v).toDouble).toArray
-      if (p > 16.0 * n) expandedPairs(sh, shingleJaccardThreshold)
-      else prefixVerifiedPairs(sh, shingleJaccardThreshold)
+      if (p > 16.0 * n) expandedPairs(sh, tau)
+      else prefixVerifiedPairs(sh, tau)
     }
   }
 
@@ -593,12 +555,26 @@ object LlmOps {
     */
   private[graft] def expandedPairs(postings: DataFrame, tau: Double): DataFrame = {
     val sz = postings.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val jac = col("c").cast("double") / (col("na") + col("nb") - col("c"))
-    pairCounts(postings, "sh")
-      .join(sz.select(col("doc_id").as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(sz.select(col("doc_id").as("id_b"), col("n").as("nb")), Seq("id_b"))
+    countVerify(pairCounts(postings, "sh"), "id_a", "id_b", sz, sz, tau)
+  }
+
+  /** Exact Jaccard from intersection counts `c`: the one spelling every
+    * pair scan scores with, c / (na + nb − c) over the two set sizes. */
+  private def jaccard(na: Column, nb: Column): Column =
+    col("c").cast("double") / (na + nb - col("c"))
+
+  /** The count verify: intersection counts `inter` (a, b, c) joined to the
+    * a-side sizes `szA` and b-side sizes `szB` (both doc_id, n), filtered
+    * on jaccard ≥ τ — (a, b, jaccard) with ROUND(…, 4). A pair sharing no
+    * key has no count row and jaccard 0 < τ, so it is correctly absent. */
+  private def countVerify(inter: DataFrame, a: String, b: String,
+                          szA: DataFrame, szB: DataFrame, tau: Double): DataFrame = {
+    val jac = jaccard(col("na"), col("nb"))
+    inter
+      .join(szA.select(col("doc_id").as(a), col("n").as("na")), Seq(a))
+      .join(szB.select(col("doc_id").as(b), col("n").as("nb")), Seq(b))
       .filter(jac >= tau)
-      .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
+      .select(col(a), col(b), round(jac, 4).as("jaccard"))
   }
 
   /** Open-vocabulary pair scan: prefix-filtered candidate generation +
@@ -658,12 +634,15 @@ object LlmOps {
     import spark.implicits._
     val vocab = broadcast(
       vocabSorted.zipWithIndex.toSeq.toDF("sh", "vid"))
+    // the key's string form joins the string vocabulary (a no-op cast for
+    // string keys; injective for the numeric ones, e.g. fingerprints)
+    val keyed = postings.select(col("doc_id"), col("sh").cast("string").as("sh"))
     // the mask builds as `words` bit_or aggregation columns — a fully
     // codegen'd hash aggregate (no collect_list array, no interpreted
     // set-bit lambda), one long per 64 vocabulary terms
     val wordAggs = (0 until words).map(w =>
       expr(s"bit_or(IF(vid div 64 = $w, shiftleft(1L, vid % 64), 0L))").as(s"m$w"))
-    val masks = postings.join(vocab, Seq("sh"))
+    val masks = keyed.join(vocab, Seq("sh"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n"), wordAggs: _*)
       .select(col("doc_id"), col("n"),
@@ -687,7 +666,7 @@ object LlmOps {
     val c = expr((0 until words)
       .map(w => s"bit_count(a.mask[$w] & b.mask[$w])")
       .mkString("CAST(", " + ", " AS BIGINT)"))
-    val jac = col("c").cast("double") / (col("a.n") + col("b.n") - col("c"))
+    val jac = jaccard(col("a.n"), col("b.n"))
     val cond = col("a.cell") === col("b.cell") &&
       (col("a.blk") =!= col("b.blk") || col("a.doc_id") < col("b.doc_id"))
     // explicit hash-repartition + shuffled hash join: the repartition is
@@ -721,7 +700,7 @@ object LlmOps {
   private[graft] def verifyJaccardPairs(cand: DataFrame, docSets: DataFrame,
                                         tau: Double): DataFrame = {
     val c = size(array_intersect(col("sa.shs"), col("sb.shs"))).cast("long")
-    val jac = col("c").cast("double") / (col("sa.n") + col("sb.n") - col("c"))
+    val jac = jaccard(col("sa.n"), col("sb.n"))
     cand
       .join(docSets.as("sa"), col("id_a") === col("sa.doc_id"))
       .join(docSets.as("sb"), col("id_b") === col("sb.doc_id"))
@@ -734,6 +713,24 @@ object LlmOps {
       .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
   }
 
+  /** D2 (n-gram form): word-bigram shingle Jaccard ≥ 0.5 — near-identical
+    * docs keep most shingles in common while random co-occurrence stays
+    * near zero, so shingling separates true near-dups far better than the
+    * unigram token sets of [[jaccardPairs]]. Same pair scan
+    * ([[exactJaccardPairs]]), same df-cap protection as [[jaccardPairs]]
+    * (here 10% of docs, 2000 absolute —
+    * shingles are far sparser than unigrams, so a boilerplate bigram
+    * shared by a tenth of the corpus is already pure noise; at the
+    * fixtures no shingle reaches either bound, so results are the
+    * uncapped ones while the guard stays load-bearing for saturated or
+    * closed-vocabulary corpora). The shingle is `concat_ws` over a 2-slice so Spark and
+    * DuckDB build byte-identical keys (both slice 1-based and truncate at
+    * the array end); docs with fewer than two tokens emit NO shingles on
+    * either side (a when-guard here, `range(1, len)` being empty at
+    * len ≤ 1 there — an unguarded Spark `sequence(1, len-1)` would count
+    * DOWN at len = 0 and a `greatest(1, …)` floor would emit a degenerate
+    * unigram shingle DuckDB never builds).
+    */
   val shingleJaccard = Q(
     "llm_shingle_jaccard",
     s"""WITH $shinglePairCtes
@@ -936,40 +933,52 @@ object LlmOps {
     * as the fixture-scale ground truth that LlmOpsSpec measures the
     * banded recall (and the SemDeDup drop subset) against.
     */
-  def exactCosinePairs(s: SparkSession, dir: String): DataFrame = {
-    val numBlocks = 8
-    val e = Tables.embeddings(s, dir)
-    // a-side: a vector in block p serves cells (p, j) for j ≥ p;
-    // b-side: a vector in block q serves cells (i, q) for i ≤ q. A pair
-    // with blocks (p, q), p ≤ q, therefore meets in exactly one cell, with
-    // the a-side in the lower block — each unordered pair is generated
-    // once, no dropDuplicates needed. Cross-block ids aren't ordered by
-    // block, so the output re-orients with least/greatest.
-    val aSide = e
-      .select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
-        pmod(col("vec_id"), lit(numBlocks)).as("blk_a"))
-      .withColumn("cj", explode(sequence(col("blk_a"), lit(numBlocks - 1))))
-      .withColumnRenamed("blk_a", "ci")
-    val bSide = e
-      .select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
-        pmod(col("vec_id"), lit(numBlocks)).as("blk_b"))
-      .withColumn("ci", explode(sequence(lit(0), col("blk_b"))))
-      .withColumnRenamed("blk_b", "cj")
-    val cos = vectors.cosineSim(col("emb_a"), col("emb_b"))
-    aSide
-      .join(bSide, Seq("ci", "cj"))
+  def exactCosinePairs(s: SparkSession, dir: String): DataFrame =
+    cosineVerify(blockGrid(Tables.embeddings(s, dir), numBlocks = 8), 0.4)
+      .orderBy("id_a", "id_b")
+
+  /** The unordered-pair block grid behind every cosine pair scan: `side`
+    * carries (vec_id, embedding, keys…), vectors land in
+    * pmod(vec_id, `numBlocks`) blocks, and a vector in block p serves the
+    * a-side of cells (p, j ≥ p) and the b-side of cells (i ≤ p, p). A pair
+    * with blocks (p, q), p ≤ q, therefore meets in exactly one cell, with
+    * the a-side in the lower block; same-block pairs meet in (p, p) both
+    * ways and the id_a < id_b filter keeps one — each unordered pair is
+    * generated once, no dropDuplicates needed. The cell join also matches
+    * on the extra equi-join `keys`: none (the exact scan), the band
+    * (t, band) of [[bandedCandidates]] or the cluster c_id of
+    * [[semDedup]]. Output rows carry keys, ci, cj, id_a, emb_a, id_b,
+    * emb_b; cross-block ids aren't ordered by block, so [[cosineVerify]]
+    * re-orients with least/greatest.
+    */
+  private def blockGrid(side: DataFrame, numBlocks: Int, keys: String*): DataFrame = {
+    def half(id: String, emb: String, blk: String, cell: String, cells: Column) =
+      side.select(Seq(col("vec_id").as(id), col("embedding").as(emb),
+          pmod(col("vec_id"), lit(numBlocks)).as(blk)) ++ keys.map(col): _*)
+        .withColumn(cell, explode(cells))
+    half("id_a", "emb_a", "ci", "cj", sequence(col("ci"), lit(numBlocks - 1)))
+      .join(half("id_b", "emb_b", "cj", "ci", sequence(lit(0), col("cj"))),
+        keys ++ Seq("ci", "cj"))
       .filter(col("id_a") =!= col("id_b") &&
         (col("ci") =!= col("cj") || col("id_a") < col("id_b")))
-      // MaterializeOnce (r12, guide §4.4): one cosine evaluation per pair —
-      // this exact scan IS n²/2 kernels, so doubling them doubled the job
-      .withColumn("cs", graft.functions.MaterializeOnce(cos))
-      .filter(col("cs") >= 0.4)
-      .select(
+  }
+
+  /** The cosine verify of a [[blockGrid]] pair scan: (keys…, id_a < id_b,
+    * cos_sim = ROUND(cos, 4)) for every pair with cos ≥ `tau`. The
+    * codegen'd cosine kernel runs behind MaterializeOnce (r12, guide
+    * §4.4): otherwise the threshold filter pushes into the join as a
+    * residual with the kernel inlined and the rounded output re-derives
+    * it — one evaluation per pair, the pair scan's whole cost.
+    */
+  private def cosineVerify(pairs: DataFrame, tau: Double, keys: String*): DataFrame =
+    pairs
+      .withColumn("cs", graft.functions.MaterializeOnce(
+        vectors.cosineSim(col("emb_a"), col("emb_b"))))
+      .filter(col("cs") >= tau)
+      .select(keys.map(col) ++ Seq(
         least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"),
-        round(col("cs"), 4).as("cos_sim"))
-      .orderBy("id_a", "id_b")
-  }
+        round(col("cs"), 4).as("cos_sim")): _*)
 
   /** Number of band tables / sign bits per band for [[nearDupCosine]].
     * Bands hash on the SIGN of fixed embedding dimensions (table t owns
@@ -978,30 +987,6 @@ object LlmOps {
   private val ndBandTables = 6
   private val ndBandBits = 4
 
-  /** D2/D3 (embedding near-dup), the AT-SCALE contract: candidate pairs
-    * must agree on all `ndBandBits` sign bits of at least one of the
-    * `ndBandTables` band tables (OR-probe), then verify with exact cosine
-    * ≥ 0.4 — banded LSH with a deterministic, data-derived hash. This is
-    * the DECLARED semantics of the registered query, chosen so that every
-    * query in the registry completes at 100× the corpus: candidate volume
-    * is the banded fraction of n²/2 (0.32 on this near-orthogonal fixture
-    * — θ ≈ 66° is LSH's worst regime; real embedding corpora near-dup at
-    * cosine ≥ 0.9, where the same layout passes ≲ 2⁻⁴ per table), and
-    * tables × bits are the scale knobs (bits grow with log n). Recall vs
-    * the exact scan ([[exactCosinePairs]], fixture-bounded) is pinned
-    * numerically in LlmOpsSpec (0.71 at sf0.001, floor 0.6).
-    *
-    * Plan shape: within each band the same one-cell-per-unordered-pair
-    * block grid as [[exactCosinePairs]] distributes residual volume, so
-    * the join key is (table, band, ci, cj) — a single shuffled equi-join,
-    * never corpus×corpus, with hot-band work split across B(B+1)/2 cells.
-    * A pair colliding in k tables surfaces k times and is deduplicated
-    * after the threshold filter. The similarity runs in the codegen'd
-    * cosine kernel; the oracle spells cosine as dot/(|a||b|) exactly like
-    * the kernel so both engines evaluate the same double arithmetic
-    * before the ROUND, and derives the identical band ids from CASE'd
-    * sign tests on the same dimensions.
-    */
   /** The banded candidate generator behind [[nearDupCosine]], with the
     * scale knobs as parameters: `tables` OR-probe band tables of `bits`
     * sign bits each (dims t·bits..t·bits+bits−1 — requires tables·bits ≤
@@ -1029,24 +1014,36 @@ object LlmOps {
     // NOT checkpointed (r12, measured): both grid sides consume the banded
     // frame, but it carries the vectors — see the annLsh note; the band
     // projection is sign tests, far cheaper than materializing the corpus.
-    val withBands = e.select(
-      col("vec_id"), col("embedding"),
-      array((0 until tables).map(bandExpr): _*).as("bands"),
-      pmod(col("vec_id"), lit(numBlocks)).as("blk"))
-    val aSide = withBands
-      .select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
-        col("blk").as("ci"), posexplode(col("bands")).as(Seq("t", "band")))
-      .withColumn("cj", explode(sequence(col("ci"), lit(numBlocks - 1))))
-    val bSide = withBands
-      .select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
-        col("blk").as("cj"), posexplode(col("bands")).as(Seq("t", "band")))
-      .withColumn("ci", explode(sequence(lit(0), col("cj"))))
-    aSide
-      .join(bSide, Seq("t", "band", "ci", "cj"))
-      .filter(col("id_a") =!= col("id_b") &&
-        (col("ci") =!= col("cj") || col("id_a") < col("id_b")))
+    val withBands = e.select(col("vec_id"), col("embedding"),
+      array((0 until tables).map(bandExpr): _*).as("bands"))
+    blockGrid(withBands.select(col("vec_id"), col("embedding"),
+      posexplode(col("bands")).as(Seq("t", "band"))), numBlocks, "t", "band")
   }
 
+  /** D2/D3 (embedding near-dup), the AT-SCALE contract: candidate pairs
+    * must agree on all `ndBandBits` sign bits of at least one of the
+    * `ndBandTables` band tables (OR-probe), then verify with exact cosine
+    * ≥ 0.4 — banded LSH with a deterministic, data-derived hash. This is
+    * the DECLARED semantics of the registered query, chosen so that every
+    * query in the registry completes at 100× the corpus: candidate volume
+    * is the banded fraction of n²/2 (0.32 on this near-orthogonal fixture
+    * — θ ≈ 66° is LSH's worst regime; real embedding corpora near-dup at
+    * cosine ≥ 0.9, where the same layout passes ≲ 2⁻⁴ per table), and
+    * tables × bits are the scale knobs (bits grow with log n). Recall vs
+    * the exact scan ([[exactCosinePairs]], fixture-bounded) is pinned
+    * numerically in LlmOpsSpec (0.71 at sf0.001, floor 0.6).
+    *
+    * Plan shape: within each band the same one-cell-per-unordered-pair
+    * block grid as [[exactCosinePairs]] distributes residual volume, so
+    * the join key is (table, band, ci, cj) — a single shuffled equi-join,
+    * never corpus×corpus, with hot-band work split across B(B+1)/2 cells.
+    * A pair colliding in k tables surfaces k times and is deduplicated
+    * after the threshold filter. The similarity runs in the codegen'd
+    * cosine kernel; the oracle spells cosine as dot/(|a||b|) exactly like
+    * the kernel so both engines evaluate the same double arithmetic
+    * before the ROUND, and derives the identical band ids from CASE'd
+    * sign tests on the same dimensions.
+    */
   val nearDupCosine = Q(
     "llm_neardup_cosine", {
       val bandSql = (0 until ndBandTables).map { t =>
@@ -1084,23 +1081,12 @@ object LlmOps {
     * exact-cosine verification → dedup of multi-table collisions.
     */
   private[graft] def bandedPairs(e: DataFrame, tables: Int, bits: Int,
-                                 numBlocks: Int, threshold: Double): DataFrame = {
-    val cos = vectors.cosineSim(col("emb_a"), col("emb_b"))
-    bandedCandidates(e, tables, bits, numBlocks)
-      // MaterializeOnce (r12, guide §4.4): otherwise the threshold filter
-      // and the rounded output each evaluate the cosine kernel — the
-      // verify stage's whole cost — per candidate pair
-      .withColumn("cs", graft.functions.MaterializeOnce(cos))
-      .filter(col("cs") >= threshold)
-      .select(
-        least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"),
-        round(col("cs"), 4).as("cos_sim"))
+                                 numBlocks: Int, threshold: Double): DataFrame =
+    cosineVerify(bandedCandidates(e, tables, bits, numBlocks), threshold)
       // a pair can collide in up to `tables` tables; rounded cos_sim is
       // a pure function of the pair, so the 3-column dedup is deterministic
       .dropDuplicates("id_a", "id_b", "cos_sim")
       .orderBy("id_a", "id_b")
-  }
 
   /** D3 scale path #2 (no oracle — cell ids are engine-local): IVF-style
     * ANN. Coarse cells come from signed-random-projection buckets; each
@@ -2429,11 +2415,7 @@ object LlmOps {
         when(col("h").isNotNull, 1).otherwise(0).as("is_exact"), col("text"))
       .localCheckpoint()
     val shx0 = bigramShingles(exist).localCheckpoint() // census + cap + postings
-    val nd = shx0.agg(countDistinct("doc_id").as("n_docs"))
-    val keys = shx0.groupBy("sh").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(nd))
-      .filter(col("df") <= least(lit(shingleDfFrac) * col("n_docs"), lit(shingleDfAbs)))
-      .select("sh")
+    val keys = capCensus(shx0, "sh", shingleDfFrac, shingleDfAbs).select("sh")
     val shx = shx0.join(keys, Seq("sh"), "left_semi").localCheckpoint()
     val shb = bigramShingles(bstat.filter(col("is_exact") === 0))
       .join(keys, Seq("sh"), "left_semi").localCheckpoint()
@@ -2442,11 +2424,7 @@ object LlmOps {
     val inter = shb.select(col("doc_id").as("bid"), col("sh"))
       .join(shx.select(col("doc_id").as("xid"), col("sh")), Seq("sh"))
       .groupBy("bid", "xid").agg(count(lit(1)).as("c"))
-    val jac = col("c").cast("double") / (col("bn") + col("xn") - col("c"))
-    val nears = inter
-      .join(szb.select(col("doc_id").as("bid"), col("n").as("bn")), Seq("bid"))
-      .join(szx.select(col("doc_id").as("xid"), col("n").as("xn")), Seq("xid"))
-      .filter(jac >= shingleJaccardThreshold)
+    val nears = countVerify(inter, "bid", "xid", szb, szx, shingleJaccardThreshold)
       .select("bid").distinct()
     bstat.join(nears, bstat("doc_id") === nears("bid"), "left")
       .groupBy("source")
@@ -2861,7 +2839,6 @@ object LlmOps {
       |  FROM pairs WHERE cs >= 0.4)
       |SELECT vec_id, c_id, dup_of, cos_sim FROM drops WHERE rn = 1
       |ORDER BY vec_id""".stripMargin) { (s, dir) =>
-    val numBlocks = 8
     // map-side argmax (r13, [[centroidArgmax]]): the r12 window form
     // shuffled the corpus (vectors included) through a vec_id exchange
     // PER GRID SIDE; now each side re-derives the assignment in its own
@@ -2871,36 +2848,13 @@ object LlmOps {
     // row-format corpus copy at any scale.
     val asg = centroidArgmax(Tables.embeddings(s, dir))
       .select(col("vec_id"), col("best.id").as("c_id"), col("embedding"))
-    // Same one-cell-per-unordered-pair block grid as nearDupCosine, with the
-    // cluster id joined in front — pairs never cross clusters.
-    val aSide = asg
-      .select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("c_id"),
-        pmod(col("vec_id"), lit(numBlocks)).as("blk_a"))
-      .withColumn("cj", explode(sequence(col("blk_a"), lit(numBlocks - 1))))
-      .withColumnRenamed("blk_a", "ci")
-    val bSide = asg
-      .select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("c_id"),
-        pmod(col("vec_id"), lit(numBlocks)).as("blk_b"))
-      .withColumn("ci", explode(sequence(lit(0), col("blk_b"))))
-      .withColumnRenamed("blk_b", "cj")
-    val cos = vectors.cosineSim(col("emb_a"), col("emb_b"))
-    val wDrop = Window.partitionBy("v").orderBy(col("u").asc)
-    aSide.join(bSide, Seq("c_id", "ci", "cj"))
-      .filter(col("id_a") =!= col("id_b") &&
-        (col("ci") =!= col("cj") || col("id_a") < col("id_b")))
-      // MaterializeOnce (r12, guide §4.4): the threshold filter otherwise
-      // pushes into the join as a residual with the cosine kernel inlined,
-      // and the rounded output re-derives it — one evaluation per pair,
-      // the in-cluster pair scan's whole cost
-      .withColumn("cs", graft.functions.MaterializeOnce(cos))
-      .filter(col("cs") >= 0.4)
-      .select(col("c_id"),
-        least(col("id_a"), col("id_b")).as("u"),
-        greatest(col("id_a"), col("id_b")).as("v"),
-        round(col("cs"), 4).as("cos_sim"))
+    // The block grid with the cluster id joined in front — pairs never
+    // cross clusters.
+    val wDrop = Window.partitionBy("id_b").orderBy(col("id_a").asc)
+    cosineVerify(blockGrid(asg, numBlocks = 8, "c_id"), 0.4, "c_id")
       .withColumn("rn", row_number().over(wDrop))
       .filter(col("rn") === 1)
-      .select(col("v").as("vec_id"), col("c_id"), col("u").as("dup_of"), col("cos_sim"))
+      .select(col("id_b").as("vec_id"), col("c_id"), col("id_a").as("dup_of"), col("cos_sim"))
       .orderBy("vec_id")
   }
 

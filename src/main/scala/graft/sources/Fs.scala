@@ -69,16 +69,6 @@ private[graft] object Fs {
     fs.create(path, true).close()
   }
 
-  /** Move a directory into place. Refuses an existing destination — the
-    * swap protocols here always delete-then-rename, and a silent merge
-    * (local-FS renameTo onto a dir) would corrupt a store.
-    */
-  def renameDir(src: String, dst: String): Unit = {
-    val (fs, s) = resolve(src)
-    require(!fs.exists(new Path(dst)), s"rename destination exists: $dst")
-    require(fs.rename(s, new Path(dst)), s"rename failed: $src -> $dst")
-  }
-
   /** ATOMIC single-file replace — the primitive behind [[StoreLog]]'s
     * commit markers (a marker appears whole, watermark included, or not
     * at all): write the new content to a uniquely-named sibling temp

@@ -84,7 +84,7 @@ class FsSpec extends SparkSpecBase {
   }
 
   test("Fs primitives on a NON-LOCAL scheme take the FileContext branch: " +
-    "atomic overwrite swap, absent-read None, renameDir refuse-existing") {
+    "atomic overwrite swap, absent-read None") {
     mockReady
     val root = s"mockfs:$tmp/mock_ptr"
     graft.sources.Fs.writeTextAtomic(s"$root/BASE", "gen-0")
@@ -98,21 +98,14 @@ class FsSpec extends SparkSpecBase {
     assert(leftovers.isEmpty, s"mock-scheme swap left files behind: $leftovers")
     // absent-mid-read contract
     assert(graft.sources.Fs.readTextIfExists(s"$root/ABSENT") === None)
-    // renameDir: refuses an existing destination, moves to a fresh one
     graft.sources.Fs.mkdirs(s"$root/a")
     graft.sources.Fs.mkdirs(s"$root/b")
-    intercept[IllegalArgumentException] {
-      graft.sources.Fs.renameDir(s"$root/a", s"$root/b")
-    }
-    graft.sources.Fs.renameDir(s"$root/a", s"$root/c")
-    assert(graft.sources.Fs.exists(s"$root/c") &&
-      !graft.sources.Fs.exists(s"$root/a"))
     // listing / size helpers resolve through the scheme too. (fileSignatures
     // is not asserted here: RawLocal-behind-a-foreign-scheme cannot load
     // permissions for LocatedFileStatus — a shim artifact; real remote
     // filesystems return located statuses with permissions attached, and
     // the corpus fingerprint only ever runs on the DATA dir anyway.)
-    assert(graft.sources.Fs.listSubdirs(root).map(_._1).toSet === Set("b", "c"))
+    assert(graft.sources.Fs.listSubdirs(root).map(_._1).toSet === Set("a", "b"))
     assert(graft.sources.Fs.sizeBytes(s"$root/BASE") > 0)
   }
 

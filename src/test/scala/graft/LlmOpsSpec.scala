@@ -560,7 +560,8 @@ class LlmOpsSpec extends SparkSpecBase {
       p.as("a").join(p.as("b"),
         $"a.tok" === $"b.tok" && $"a.doc_id" < $"b.doc_id").count()
     assert(selfJoinPairs(postings) === 1770L)
-    assert(selfJoinPairs(LlmOps.dfCapped(postings, "tok", 0.8)) === 0L)
+    val keep = LlmOps.capCensus(postings, "tok", 0.8, 2000L).select("tok")
+    assert(selfJoinPairs(postings.join(keep, Seq("tok"), "left_semi")) === 0L)
   }
 
   test("jaccard score is computed over the capped (discriminating) token space") {
@@ -632,28 +633,80 @@ class LlmOpsSpec extends SparkSpecBase {
       7L -> Seq("p q", "q r"),
       8L -> Seq("u v"),
       9L -> Seq("a b"))
-    val postings = sets.toSeq.flatMap { case (d, ss) => ss.map(d -> _) }
-      .toDF("doc_id", "sh")
-    val tau = 0.5
+    // the callers' other shapes as extra inputs: τ = 0.8 (llm_jaccard_pairs)
+    // with (10,11) J = 4/5 = 0.8 (boundary, in) and (12,13) J = 4/6 (out),
+    // and every case again over numeric keys like the winnow fingerprints
+    // (ids whose string order differs from their numeric order)
+    val sets08 = sets ++ Map(
+      10L -> Seq("f g", "g h", "h i", "i j", "j k"),
+      11L -> Seq("f g", "g h", "h i", "i j"),
+      12L -> Seq("m1", "m2", "m3", "m4", "m5"),
+      13L -> Seq("m1", "m2", "m3", "m4", "m6"))
+    val numKey = sets08.values.flatten.toSeq.distinct.sorted
+      .zipWithIndex.map { case (k, i) => k -> (7L + 3L * i) }.toMap
     // naive reference, driver-side: exact Jaccard over every doc pair
-    val expect = (for {
-      a <- sets.keys; b <- sets.keys if a < b
-      inter = sets(a).toSet.intersect(sets(b).toSet).size
-      if inter > 0
-      j = inter.toDouble / (sets(a).size + sets(b).size - inter)
-      if j >= tau
-    } yield (a, b, BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
-    assert(expect === Set((1L, 2L, 0.6), (4L, 5L, 0.5), (6L, 7L, 1.0)))
-    val vocab = sets.values.flatten.toSeq.distinct.sorted.toArray
-    val dense = LlmOps.densePairs(postings, vocab, tau)
-      .as[(Long, Long, Double)].collect().toSet
-    val prefixed = LlmOps.prefixVerifiedPairs(postings.localCheckpoint(), tau)
-      .as[(Long, Long, Double)].collect().toSet
-    val expanded = LlmOps.expandedPairs(postings.localCheckpoint(), tau)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(dense === expect, "dense bitset path diverged from the naive scan")
-    assert(prefixed === expect, "prefix-verified path diverged from the naive scan")
-    assert(expanded === expect, "expansion path diverged from the naive scan")
+    def naive(sets: Map[Long, Seq[String]], tau: Double): Set[(Long, Long, Double)] =
+      (for {
+        a <- sets.keys; b <- sets.keys if a < b
+        inter = sets(a).toSet.intersect(sets(b).toSet).size
+        if inter > 0
+        j = inter.toDouble / (sets(a).size + sets(b).size - inter)
+        if j >= tau
+      } yield (a, b, BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+    assert(naive(sets, 0.5) === Set((1L, 2L, 0.6), (4L, 5L, 0.5), (6L, 7L, 1.0)))
+    assert(naive(sets08, 0.8) === Set((6L, 7L, 1.0), (10L, 11L, 0.8)))
+    for ((cs, tau) <- Seq(sets -> 0.5, sets08 -> 0.8); numeric <- Seq(false, true)) {
+      val expect = naive(cs, tau)
+      val rows = cs.toSeq.flatMap { case (d, ss) => ss.map(d -> _) }
+      val postings =
+        if (numeric) rows.map { case (d, k) => (d, numKey(k)) }.toDF("doc_id", "sh")
+        else rows.toDF("doc_id", "sh")
+      val vocab = postings.select(col("sh").cast("string")).as[String]
+        .collect().distinct.sorted
+      val dense = LlmOps.densePairs(postings, vocab, tau)
+        .as[(Long, Long, Double)].collect().toSet
+      val prefixed = LlmOps.prefixVerifiedPairs(postings.localCheckpoint(), tau)
+        .as[(Long, Long, Double)].collect().toSet
+      val expanded = LlmOps.expandedPairs(postings.localCheckpoint(), tau)
+        .as[(Long, Long, Double)].collect().toSet
+      val shape = s"τ=$tau numeric=$numeric"
+      assert(dense === expect, s"$shape: dense bitset path diverged from the naive scan")
+      assert(prefixed === expect, s"$shape: prefix-verified path diverged from the naive scan")
+      assert(expanded === expect, s"$shape: expansion path diverged from the naive scan")
+    }
+  }
+
+  test("exact pair scan equals the capped-expansion spelling of llm_jaccard_pairs " +
+    "on the sf0.001 and sf0.01 fixtures") {
+    import org.apache.spark.sql.functions._
+    val root = new java.io.File(sfDir).getParent
+    for (dir <- Seq("sf0.001", "sf0.01").map(sf => s"$root/$sf")) {
+      val tok = graft.engine.Tables.documents(spark, dir)
+        .filter(col("source") === "src0")
+        .select(col("doc_id"),
+          explode(array_distinct(split(lower(col("text")), " "))).as("sh"))
+        .filter(col("sh") =!= "")
+      // the reference: the capped postings (df ≤ least(0.8·n_docs, 2000)
+      // by semi-join), pair counts by expansion, both sizes joined
+      val nDocs = tok.agg(countDistinct("doc_id").as("n_docs"))
+      val keep = tok.groupBy("sh").agg(count(lit(1)).as("df"))
+        .crossJoin(broadcast(nDocs))
+        .filter(col("df") <= least(lit(0.8) * col("n_docs"), lit(2000L)))
+        .select("sh")
+      val capped = tok.join(keep, Seq("sh"), "left_semi").localCheckpoint()
+      val sz = capped.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val jac = col("c").cast("double") / (col("sa.n") + col("sb.n") - col("c"))
+      val want = LlmOps.pairCounts(capped, "sh")
+        .join(sz.as("sa"), col("id_a") === col("sa.doc_id"))
+        .join(sz.as("sb"), col("id_b") === col("sb.doc_id"))
+        .filter(jac >= 0.8)
+        .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
+        .as[(Long, Long, Double)].collect().toSet
+      val got = LlmOps.exactJaccardPairs(tok, 0.8, 2000L, 0.8)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(want.nonEmpty, s"$dir: the reference found no pair")
+      assert(got === want, s"$dir: the exact pair scan diverged from the reference")
+    }
   }
 
   test("prefix filtering: candidates are a superset of every τ-qualifying pair " +

@@ -197,7 +197,10 @@ class StoreLogSpec extends SparkSpecBase {
       assert(!Fs.exists(s"$docsPath/b=0") && Fs.exists(s"$docsPath/b=1"))
       if (toV6) for ((name, dir) <- Fs.listSubdirs(s"$docsPath/base")) {
         val id = name.stripPrefix("gen-").takeWhile(_ != '-')
-        Fs.renameDir(dir, s"$docsPath/base/v=$id")
+        val fs = new org.apache.hadoop.fs.Path(dir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
+          new org.apache.hadoop.fs.Path(s"$docsPath/base/v=$id")))
         Fs.touch(s"$docsPath/base/v=$id/_COMMIT") // v6 markers are empty
       }
       streaming.Streaming.shinglePairsIngestBatch(exist, b2, pairs, docsPath, 2L)
