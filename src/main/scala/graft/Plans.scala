@@ -59,16 +59,18 @@ object Plans {
     "join_interval_overlap" -> "no shared equi-key, yet NO BNLJ: time-bucket binning turns the interval predicate into a SortMergeJoin on bucket + in-bucket range filter; the census-salt guard (broadcast hot-bucket list, salt sub-keys) bounds a storm hour's pairing per task",
     "log_template_mine" -> "mask + hash-agg in one codegen'd scan pipeline; partial agg collapses onto template-cardinality keys map-side",
     "text_gopher_docfilter" -> "entirely map-side: every rule (incl. trigram repetition via array ops) fuses into the parquet scan — no exchange at all",
-    "log_inverted_search" -> "query-term filter sits BEFORE the postings exchange: only rows for the 3 searched tokens shuffle — the probe shape of a persisted token-bucketed index",
+    "log_inverted_search" -> "the term-query core's raw source: per-term counts size(filter(ts, _ === t)) inside the scan (no Generate), the must predicate per row — no term row shuffles; the one exchange is the ORDER BY",
     "text_gopher_repetition" -> "one corpus-sized doc_id exchange up front; the gram count, (doc,n) window and per-doc rollup all reuse it — gram rows never cross the wire (was 3 exchanges, 31.1->5.4 s at x10)",
     "text_cdc_chunks" -> "one doc_id exchange orders tokens for the boundary cumsum; chunk digests partial-agg; the digest-df join is unhinted (chunk vocabulary scales with the corpus)",
-    "log_proximity_search" -> "NEAR/k as an equi-join: positions bin into width-k buckets, one side explodes +-1 neighbors — frequent terms pair per bucket neighborhood, never per document",
+    "log_proximity_search" -> "NEAR/k as an equi-join over the core's raw positional rows (the store writer's posexplode): positions bin into width-k buckets, one side explodes +-1 neighbors — frequent terms pair per bucket neighborhood, never per document",
     "log_drift_daily" -> "two scans total: bounds agg + binned counts; the global profile and all totals re-aggregate the checkpointed (day, bin) table — broadcast metadata rebases, no third scan",
     "stream_drift_1h" -> "streaming-legal single aggregation: the 10-bin histogram is ten conditional counts in ONE groupBy; KL folds statelessly against the broadcast baseline row",
     "meta_column_profile" -> "ANALYZE TABLE in one scan: a single aggregation row carries every column's stats; the per-column reshape EXPLODES that one row (structurally one scan, PlanSpec-pinned), never rescans",
-    "log_indexed_search" -> "the standing-index lifecycle: partition-pruned posting-store scan (PartitionFilters on tok_bucket = the query terms' hash buckets); the documents corpus appears nowhere in the plan",
-    "log_search_ranked" -> "BM25 with zero token shuffles: per-term tf and dl via size(filter(ts)) inside the scan (no Generate node), corpus stats as a single-row broadcast, TakeOrderedAndProject top-20",
-    "log_indexed_search_ranked" -> "ranked retrieval with ZERO corpus reads: pruned posting buckets -> tf/df, docstats join for dl, (N, avgdl) from store meta; same oracle as the raw-scan BM25",
+    "log_indexed_search" -> "the standing-index lifecycle: ONE partition-pruned posting-store scan (PartitionFilters on tok_bucket = the query terms' hash buckets) pivoted to per-doc tfs in one aggregation, then the must predicate; the documents corpus appears nowhere in the plan",
+    "log_phrase_search" -> "phrase as the core's adjacency join over raw positional rows (the store writer's posexplode): exact (doc_id, start) equi-keys, non-matching documents never pair",
+    "log_indexed_phrase" -> "the same adjacency join over the two terms' pruned posting rows — zero corpus reads",
+    "log_search_ranked" -> "BM25 with zero token shuffles: per-term tf and dl via size(filter(ts)) inside the scan (no Generate node), corpus stats (N, avgdl, dfs) as a single-row broadcast, the core's one BM25 term expression summed per row, TakeOrderedAndProject top-20",
+    "log_indexed_search_ranked" -> "ranked retrieval with ZERO corpus reads from ONE store snapshot: pruned posting buckets -> (doc, tok) tfs, the |terms|-row df relation broadcast-hash-joined on tok, docstats join for dl, (N, avgdl) from the snapshot's meta; the core's BM25 term summed per doc",
     "llm_ann_ivfpq_indexed" -> "ANN served from the persisted index: one pass over the PERSISTED code-table scan, pruned to the probed cell partitions, returns a bounded per-query top-k; ADC tables are built on the driver from the parquet codebook — no training job; the dumped plan is the answer's LocalTableScan",
     "llm_sql_ann_served" -> "the plain-SQL ANN face: the request's ADC distance tables (index metadata — queries × pqM × k doubles, computed driver-side from the codebook view with the identical float fold) ride in the inline VALUES LocalRelation, so the served plan is ONE broadcast join over the PQ code-table scan + the top-k window — the only file scan is the code store; embeddings.parquet appears nowhere (GraftSessionSpec-pinned)",
     "text_levenshtein_pairs" -> "blocked pair scan with kernel discipline: block-cap semi-join, kernel-free id/length prunes, then the Myers bit-parallel distance (O(n·m/64) vs the banded built-in's O(n·band)) evaluated ONCE per pair behind MaterializeOnce — the optimizer would otherwise inline it into the join condition 2-3x",
@@ -87,10 +89,10 @@ object Plans {
     "llm_embed_pca" -> "corpus touched once (the distributed co-moment scan, same aggregator as _cov); the 2080 covariance cells are metadata and the 16 power-iteration rounds run driver-side — the dumped plan is the co-moment job's LocalTableScan result",
     "join_asof_forward" -> "forward merge mirror of join_asof_events: one user_id exchange, first_value over a following frame — no pair fanout join",
     "agg_mode" -> "mode as count→rank: the fact scan partial-aggregates onto (nation × priority); the tie-pinned rank window runs over ≤125 metadata rows",
-    "log_boolean_search" -> "boolean query algebra on the probe discipline: only the 4 query terms survive the scan filter, the shuffle carries probe-sized rows, AND/OR/NOT evaluates on per-doc flags after the rollup",
-    "log_search_facets" -> "map-side array-lens hit test (no shuffle to find hits); each hit emits its (facet, value) structs in-row and ONE aggregation rolls every facet dimension in a single facet-cardinality exchange",
-    "log_boolean_search_indexed" -> "the boolean flags served from the standing index: partition-pruned posting-bucket scan (4 terms' hash buckets), no intersection filter — the predicate decides membership from the pivoted flags; documents.parquet appears nowhere",
-    "log_search_facets_indexed" -> "facet rollup with ZERO corpus reads: pruned-bucket conjunctive probe for hits, (doc_id, lang, source) from the store's docstats side table; shared oracle with the raw-scan formulation",
+    "log_boolean_search" -> "boolean query algebra in the core's map-side lens: the 4 term counts come from the one scan and must/should/must-not evaluate per row — no term row shuffles; the one exchange is the ORDER BY",
+    "log_search_facets" -> "map-side array-lens hit test (no shuffle to find hits); each hit emits its (facet, value) structs in-row and the core's ONE facet rollup aggregates every dimension in a single facet-cardinality exchange",
+    "log_boolean_search_indexed" -> "the boolean counts served from the standing index: ONE partition-pruned posting-bucket scan (4 terms' hash buckets) pivoted per doc in one aggregation, no intersection filter — the predicate decides membership from the counts; documents.parquet appears nowhere",
+    "log_search_facets_indexed" -> "facet rollup with ZERO corpus reads: the pruned-bucket pivot finds hits, (doc_id, lang, source) joins from the store's docstats side table, then the core's facet rollup; shared oracle with the raw-scan formulation",
     "meta_benford_digits" -> "digit histogram partial-aggregates the fact scan onto ≤9 keys; the single-row total cross-joins back as an allowlisted metadata rebase; chi² terms are one double expression per digit row",
     "log_cusum_changepoint" -> "corpus collapses to (day, type) counts in one partial-aggregated scan; the CUSUM fold is a sorted-array aggregate over ≤days rows per type — the change-point never sees raw events",
     "sql_returned_items" -> "TPC-H Q10 shape: returned-lineitem scan joins orders + broadcast nation dims; top-20 is TakeOrderedAndProject on the exact BIGINT revenue with custkey tiebreak, never a global sort",

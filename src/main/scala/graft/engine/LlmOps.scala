@@ -2666,19 +2666,6 @@ object LlmOps {
     cleaned.unionByName(empties).orderBy("doc_id")
   }
 
-  /** Embedding clustering E-step (the building block of k-means curation
-    * clustering / semantic mixing): assign every vector to its
-    * max-cosine centroid and profile the clusters. Centroids here are the
-    * k=8 lowest vec_ids — a deterministic seed choice; a real loop feeds
-    * the M-step means back in, same plan shape every iteration.
-    *
-    * 100 TB: the k centroid rows are collected to the driver, assignment
-    * is a map-side pick over the corpus scan (corpus never shuffles — the
-    * codegen'd cosine kernel runs inside the scan pipeline), and the final profile
-    * aggregates on k keys. Assignment ranks on ROUND(cos,4) with
-    * centroid-id tie-break, the same cross-engine-stable ordering the knn
-    * top-k uses.
-    */
   /** The shared E-step of the centroid family (llm_centroid_assign,
     * llm_embed_outliers, llm_semdedup): every vector's max-cosine centroid
     * as a MAP-SIDE pick — the nearest-centroid kernel under the
@@ -2710,6 +2697,19 @@ object LlmOps {
       .as[(Long, Array[Double])].collect().toSeq, score)
   }
 
+  /** Embedding clustering E-step (the building block of k-means curation
+    * clustering / semantic mixing): assign every vector to its
+    * max-cosine centroid and profile the clusters. Centroids here are the
+    * k=8 lowest vec_ids — a deterministic seed choice; a real loop feeds
+    * the M-step means back in, same plan shape every iteration.
+    *
+    * 100 TB: the k centroid rows are collected to the driver, assignment
+    * is a map-side pick over the corpus scan (corpus never shuffles — the
+    * codegen'd cosine kernel runs inside the scan pipeline), and the final profile
+    * aggregates on k keys. Assignment ranks on ROUND(cos,4) with
+    * centroid-id tie-break, the same cross-engine-stable ordering the knn
+    * top-k uses.
+    */
   val centroidAssign = Q(
     "llm_centroid_assign",
     """WITH c AS (

@@ -375,10 +375,6 @@ object LogOps {
     sessionTable(s, dir).orderBy("user_id", "session_id")
   }
 
-  /** The sessionized table (user_id, session_id, n_events, session_start,
-    * session_end) — shared by [[winSessionize]] and [[peakConcurrency]];
-    * both window passes and the final groupBy ride ONE user_id exchange.
-    */
   /** Per-event frame with its gap-session id — the pre-aggregation stage
     * of [[sessionTable]], shared by [[typeAffinity]] (which needs the
     * event_type column the session rollup discards). Same single user_id
@@ -397,6 +393,10 @@ object LogOps {
           .cast("long"))
   }
 
+  /** The sessionized table (user_id, session_id, n_events, session_start,
+    * session_end) — shared by [[winSessionize]] and [[peakConcurrency]];
+    * both window passes and the final groupBy ride ONE user_id exchange.
+    */
   private def sessionTable(s: org.apache.spark.sql.SparkSession,
                            dir: String): org.apache.spark.sql.DataFrame =
     sessionizedEvents(s, dir)
@@ -1105,16 +1105,6 @@ object LogOps {
       .orderBy("event_id")
   }
 
-  /** S-family (CSV): a real codec round-trip — orders is written out as
-    * headered CSV and read back through
-    * [[graft.sources.LogSource.readCsv]] with an explicit schema, then
-    * profiled per status. The oracle computes the same profile straight
-    * from the parquet view, so anything the CSV writer/parser mangles —
-    * quoting, the timestamp format, double text round-trip — breaks the
-    * hash. The write is a tiny local staging step; the graded path is the
-    * reader, which splits on line boundaries across executors like any
-    * text source at 100 TB.
-    */
   /** One staged copy of orders per (fixture, format) per JVM. A fixed path
     * keyed only on the fixture would race across processes (a Verify dump
     * and a Bench warm loop building against the same fixture concurrently —
@@ -1147,6 +1137,16 @@ object LogOps {
       out
     })
 
+  /** S-family (CSV): a real codec round-trip — orders is written out as
+    * headered CSV and read back through
+    * [[graft.sources.LogSource.readCsv]] with an explicit schema, then
+    * profiled per status. The oracle computes the same profile straight
+    * from the parquet view, so anything the CSV writer/parser mangles —
+    * quoting, the timestamp format, double text round-trip — breaks the
+    * hash. The write is a tiny local staging step; the graded path is the
+    * reader, which splits on line boundaries across executors like any
+    * text source at 100 TB.
+    */
   val csvRoundtrip = Q(
     "csv_roundtrip",
     """SELECT o_orderstatus, COUNT(*) AS n,
@@ -1643,23 +1643,6 @@ object LogOps {
       .orderBy("h", "event_type")
   }
 
-  /** Log template mining (the Drain/He et al. 2017 family, done the
-    * Spark-declarative way): raw lines → variable tokens masked to `<*>`
-    * → group by the resulting template. This is THE log-analytics
-    * compression step — millions of distinct lines collapse to dozens of
-    * templates, each with volume, user reach, first/last-seen, and an
-    * exemplar for the on-call engineer. Lines are synthesized from
-    * `events` with per-type formats (the [[parseLines]] convention) so
-    * the masking actually has integers/ids/durations to erase.
-    *
-    * Tree-based online parsers (Drain's prefix tree) exist for when the
-    * template set must be learned incrementally; for batch over a data
-    * lake, masking + hash-agg IS the scalable formulation: one scan,
-    * map-side partial aggregation onto a template-cardinality key space
-    * (dozens), no state, no driver structure. The regex stays in the
-    * RE2 ∩ Java subset. template_id is the first 8 hex of md5 — the
-    * stable join key for alert rules and round-over-round diffs.
-    */
   /** The synthetic raw-line CASE shared by [[templateMine]] and the
     * streaming twin's oracle ([[StreamOps]]) — one source of truth so the
     * batch and stream formulations can never mask different lines. */
@@ -1700,6 +1683,23 @@ object LogOps {
           lit(" user="), col("user_id").cast("string"), lit(" k="), k))
   }
 
+  /** Log template mining (the Drain/He et al. 2017 family, done the
+    * Spark-declarative way): raw lines → variable tokens masked to `<*>`
+    * → group by the resulting template. This is THE log-analytics
+    * compression step — millions of distinct lines collapse to dozens of
+    * templates, each with volume, user reach, first/last-seen, and an
+    * exemplar for the on-call engineer. Lines are synthesized from
+    * `events` with per-type formats (the [[parseLines]] convention) so
+    * the masking actually has integers/ids/durations to erase.
+    *
+    * Tree-based online parsers (Drain's prefix tree) exist for when the
+    * template set must be learned incrementally; for batch over a data
+    * lake, masking + hash-agg IS the scalable formulation: one scan,
+    * map-side partial aggregation onto a template-cardinality key space
+    * (dozens), no state, no driver structure. The regex stays in the
+    * RE2 ∩ Java subset. template_id is the first 8 hex of md5 — the
+    * stable join key for alert rules and round-over-round diffs.
+    */
   val templateMine = Q(
     "log_template_mine",
     raw"""WITH lines AS (
@@ -1737,26 +1737,6 @@ object LogOps {
       .orderBy("template")
   }
 
-  /** J6b: interval-overlap join with NO shared equi-key — "which sessions
-    * were live during each incident window", across ALL users. The naive
-    * formulation (`s.start <= i.end AND i.start <= s.end` alone) has no
-    * equi-conjunct, so Spark would plan a broadcast-nested-loop scan of
-    * every session for every incident — the classic range-join death at
-    * scale. The scalable rewrite BINS the time axis: each interval
-    * explodes to the 1-hour epoch buckets it touches, the join becomes an
-    * equi-join on bucket, the exact overlap predicate filters within the
-    * bucket, and a distinct collapses intervals that met in several
-    * buckets. Shuffle volume is O(intervals × avg buckets per interval),
-    * keyed by time bucket — uniform by construction, skew-free, and the
-    * plan is a plain SortMergeJoin ([[joinRangeEvents]] covers the easier
-    * case where a user_id equi-key already bounds the pairing).
-    *
-    * Incidents = high-value error events ± 2 min; sessions = the standing
-    * 30-min-gap session table ([[sessionTable]] — shares its one user_id
-    * exchange). Bucket width trades fan-out (wide intervals touch more
-    * buckets) against in-bucket selectivity; 1 h >> the 4-min incident
-    * width keeps incident fan-out at ~1-2 buckets.
-    */
   /** The incident definition shared by [[joinIntervalOverlap]] and
     * [[outageWindows]] — one source of truth for the severity threshold
     * and the ±pad, in both the Spark builders and the oracle SQL, so the
@@ -1779,6 +1759,26 @@ object LogOps {
         (unix_micros(col("ts")) - 120000000L).as("i_start"),
         (unix_micros(col("ts")) + 120000000L).as("i_end"))
 
+  /** J6b: interval-overlap join with NO shared equi-key — "which sessions
+    * were live during each incident window", across ALL users. The naive
+    * formulation (`s.start <= i.end AND i.start <= s.end` alone) has no
+    * equi-conjunct, so Spark would plan a broadcast-nested-loop scan of
+    * every session for every incident — the classic range-join death at
+    * scale. The scalable rewrite BINS the time axis: each interval
+    * explodes to the 1-hour epoch buckets it touches, the join becomes an
+    * equi-join on bucket, the exact overlap predicate filters within the
+    * bucket, and a distinct collapses intervals that met in several
+    * buckets. Shuffle volume is O(intervals × avg buckets per interval),
+    * keyed by time bucket — uniform by construction, skew-free, and the
+    * plan is a plain SortMergeJoin ([[joinRangeEvents]] covers the easier
+    * case where a user_id equi-key already bounds the pairing).
+    *
+    * Incidents = high-value error events ± 2 min; sessions = the standing
+    * 30-min-gap session table ([[sessionTable]] — shares its one user_id
+    * exchange). Bucket width trades fan-out (wide intervals touch more
+    * buckets) against in-bucket selectivity; 1 h >> the 4-min incident
+    * width keeps incident fan-out at ~1-2 buckets.
+    */
   val joinIntervalOverlap = Q(
     "join_interval_overlap",
     s"""WITH flagged AS (
@@ -1829,17 +1829,6 @@ object LogOps {
       .orderBy("incident_id")
   }
 
-  /** Conjunctive term search the way a search engine executes it: build
-    * token postings, probe ONLY the query terms, intersect by doc. The
-    * term filter sits BEFORE the postings shuffle, so the exchange
-    * carries query-term rows only — the same data movement as probing a
-    * persisted token-bucketed posting store, which is what this plan
-    * becomes when the postings are materialized (Sinks' bucketed-layout
-    * pattern). Contrast [[grepRegex]]/[[grepMulti]]: those re-scan text
-    * per query; posting intersection is how a log-search engine answers
-    * `term1 AND term2 AND term3` without touching non-matching lines.
-    * Per-doc term frequencies ride along for ranking.
-    */
   /** The conjunctive-search oracle SQL — ONE source of truth shared by the
     * raw-scan [[invertedSearch]], the store-served [[indexedSearch]], and
     * the SQL-surface [[sqlSearchServed]]: all three formulations must be
@@ -1859,23 +1848,19 @@ object LogOps {
       |FROM tf WHERE tf_spark > 0 AND tf_join > 0 AND tf_window > 0
       |ORDER BY doc_id""".stripMargin
 
-  val invertedSearch = Q(
-    "log_inverted_search", conjunctiveSearchSql) { (s, dir) =>
-    val terms = Seq("spark", "join", "window")
-    val postings = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
-      .filter(col("tok").isin(terms: _*)) // probe: only query terms shuffle
-      .groupBy("doc_id", "tok")
-      .agg(count(lit(1)).as("tf"))
-    postings.groupBy("doc_id")
-      .agg(
-        count(lit(1)).as("n_terms"),
-        max(when(col("tok") === "spark", col("tf"))).as("tf_spark"),
-        max(when(col("tok") === "join", col("tf"))).as("tf_join"),
-        max(when(col("tok") === "window", col("tf"))).as("tf_window"))
-      .filter(col("n_terms") === terms.length) // conjunctive intersection
-      .select("doc_id", "tf_spark", "tf_join", "tf_window")
-      .orderBy("doc_id")
+  private val conjunctive = TermQuery(Seq("spark", "join", "window"))
+
+  /** Conjunctive term search `spark AND join AND window` over the raw
+    * corpus, with per-doc term frequencies for ranking: the term-query
+    * core's map-side lens ([[Search.Raw]]) counts each term in the
+    * tokenized row and the predicate keeps the docs holding all three —
+    * no token row is exploded or shuffled, the one exchange is the
+    * ORDER BY. Contrast [[grepRegex]]/[[grepMulti]]: those match patterns
+    * per line; this is the tokenized term query a log-search engine
+    * answers.
+    */
+  val invertedSearch = Q("log_inverted_search", conjunctiveSearchSql) { (s, dir) =>
+    Search.matches(Search.raw(s, dir), conjunctive).orderBy("doc_id")
   }
 
   /** The PERSISTED-index lifecycle behind [[invertedSearch]] — the form a
@@ -1883,39 +1868,19 @@ object LogOps {
     * posting store is built ONCE from the corpus
     * (`Sinks.writePostings`, via the build-once `Stores` registry), and
     * every query after that prunes to the `tok_bucket` partitions its
-    * terms hash into and intersects posting rows — the corpus text is
-    * never read again. Same answer as the raw-scan formulation (the
-    * oracle IS that raw-scan SQL, and StorageLayoutSpec proves
-    * probe ≡ raw scan independently); what changes is the plan: a
-    * partition-pruned scan of |terms| bucket directories instead of a
-    * full-corpus tokenize. At 100 TB that is the difference between a
-    * search engine and Spark-over-parquet: query cost scales with the
-    * query terms' posting sizes, not the corpus.
+    * terms hash into and pivots the posting rows to per-doc tfs in one
+    * aggregation — the corpus text is never read again. Same answer as
+    * the raw-scan formulation (the oracle IS that raw-scan SQL, and
+    * StorageLayoutSpec proves probe ≡ raw scan independently); what
+    * changes is the plan: a partition-pruned scan of |terms| bucket
+    * directories instead of a full-corpus tokenize. At 100 TB that is the
+    * difference between a search engine and Spark-over-parquet: query cost
+    * scales with the query terms' posting sizes, not the corpus.
     */
-  val indexedSearch = Q(
-    "log_indexed_search", conjunctiveSearchSql) { (s, dir) =>
-    val terms = Seq("spark", "join", "window")
-    val store = graft.sources.Stores.postingStore(s, dir)
-    // pivot columns derive from `terms` — a term edit can't silently
-    // leave a stale literal producing an all-null tf column
-    val pivots = terms.map(t => max(when(col("tok") === t, col("tf"))).as(s"tf_$t"))
-    graft.sources.Sinks.probePostingsTf(s, store, terms)
-      .groupBy("doc_id")
-      .agg(pivots.head, pivots.tail: _*)
-      .orderBy("doc_id")
+  val indexedSearch = Q("log_indexed_search", conjunctiveSearchSql) { (s, dir) =>
+    Search.matches(Search.store(s, dir), conjunctive).orderBy("doc_id")
   }
 
-  /** BM25 ranked retrieval — the ranked search page on top of the term
-    * machinery: disjunctive multi-term query, docs scored with the
-    * Robertson/Lucene BM25 (k1 = 1.2, b = 0.75, idf = ln(1 + (N − df +
-    * 0.5)/(df + 0.5))), top-20 by score. Everything per-doc (dl and each
-    * term's tf) is computed MAP-SIDE in the one corpus scan — no token
-    * ever shuffles; the corpus-level stats (N, avgdl, per-term dfs) are
-    * ONE single-row aggregate broadcast back (the metadata-rebase
-    * pattern), and the top-k is a TakeOrdered, never a global sort. Docs
-    * are ranked on the 4-dp-rounded score with doc_id tiebreak so the
-    * cut is deterministic cross-engine.
-    */
   /** The BM25 oracle SQL, shared by the raw-scan [[searchRanked]] and the
     * store-served [[indexedSearchRanked]] — the two formulations must be
     * answer-identical, so they share one source of truth.
@@ -1947,42 +1912,34 @@ object LogOps {
       |  WHERE tf1 > 0 OR tf2 > 0 OR tf3 > 0) t
       |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin
 
+  private val ranked = TermQuery(Nil, should = Seq("spark", "hash", "scan"))
+
+  /** BM25 ranked retrieval — the ranked search page on top of the term
+    * machinery: disjunctive multi-term query, docs scored with the
+    * Robertson/Lucene BM25 (k1 = 1.2, b = 0.75, idf = ln(1 + (N − df +
+    * 0.5)/(df + 0.5))), top-20 by score ([[Search.bm25]]). Everything
+    * per-doc (dl and each term's tf) is computed MAP-SIDE in the one corpus
+    * scan — no token ever shuffles; the corpus-level stats (N, avgdl,
+    * per-term dfs) are ONE single-row aggregate broadcast back (the
+    * metadata-rebase pattern), and the top-k is a TakeOrdered, never a
+    * global sort. Docs are ranked on the 4-dp-rounded score with doc_id
+    * tiebreak so the cut is deterministic cross-engine.
+    */
   val searchRanked = Q("log_search_ranked", searchRankedSql) { (s, dir) =>
-    val terms = Seq("spark", "hash", "scan")
-    val ts = filter(split(lower(col("text")), " "), t => t =!= "")
-    val base = Tables.documents(s, dir)
-      .select(col("doc_id"), ts.as("ts"))
-      .select((col("doc_id") +: size(col("ts")).as("dl") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          size(filter(col("ts"), x => x === t)).as(s"tf${i + 1}")
-        }): _*)
-    val statAggs = count(lit(1)).as("n") +: avg("dl").as("avgdl") +:
-      terms.indices.map(i =>
-        sum(when(col(s"tf${i + 1}") > 0, 1).otherwise(0)).as(s"df${i + 1}"))
-    val stats = base.agg(statAggs.head, statAggs.tail: _*)
-    val score = terms.indices.map { i =>
-      val tf = col(s"tf${i + 1}").cast("double")
-      val idf = log(lit(1.0) + (col("n") - col(s"df${i + 1}") + 0.5) / (col(s"df${i + 1}") + 0.5))
-      idf * (tf * 2.2) / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-    }.reduce(_ + _)
-    base.crossJoin(broadcast(stats)) // single-row stats rebase
-      .filter(terms.indices.map(i => col(s"tf${i + 1}") > 0).reduce(_ || _))
-      .select(col("doc_id"), round(score, 4).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id"))
-      .limit(20)
+    Search.bm25(Search.raw(s, dir), ranked, k = 20)
   }
 
-  /** Phrase search via POSITIONAL postings — the adjacency join that
-    * makes `"hash join"` different from `hash AND join`. Each query term
-    * keeps its (doc, position) posting rows; the phrase match is an
-    * equi-join on (doc_id, pos+1). This is the standard
-    * positional-inverted-index formulation: the join keys are exact, the
-    * planner hashes them, and non-matching documents never pair. The
-    * oracle cross-checks with a direct per-row adjacency scan — same
-    * answer, scan-shaped; the postings shape is the one that works when
-    * the index is persisted and the query should not re-read every
-    * document.
+  /** [[searchRanked]] served ENTIRELY from the standing posting store —
+    * the completion of the index lifecycle for the ranked search page:
+    * tfs and dfs from the pruned term buckets, document lengths from the
+    * store's docstats side table, (N, avgdl) from its meta. Zero corpus
+    * reads at query time; the oracle is the raw-scan BM25 SQL, so
+    * store-served ranking is proven answer-identical to scanning.
     */
+  val indexedSearchRanked = Q("log_indexed_search_ranked", searchRankedSql) { (s, dir) =>
+    Search.bm25(Search.store(s, dir), ranked, k = 20)
+  }
+
   /** Phrase oracle SQL, shared by the raw-scan [[phraseSearch]] and the
     * store-served [[indexedPhrase]].
     */
@@ -1998,31 +1955,19 @@ object LogOps {
       |    i -> ts[i] = 'hash' AND ts[i+1] = 'join')) > 0
       |ORDER BY doc_id""".stripMargin
 
-  val phraseSearch = Q("log_phrase_search", phraseSearchSql) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-    val postings = Tables.documents(s, dir)
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-      .filter(col("tok").isin("hash", "join"))
-    val a = postings.filter(col("tok") === "hash")
-      .select(col("doc_id"), col("pos").as("a_pos"))
-    val b = postings.filter(col("tok") === "join")
-      .select(col("doc_id").as("b_id"), col("pos").as("b_pos"))
-    a.join(b, col("doc_id") === col("b_id") && col("b_pos") === col("a_pos") + 1)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_matches"))
-      .orderBy("doc_id")
-  }
-
-  /** [[searchRanked]] served ENTIRELY from the standing posting store —
-    * the completion of the index lifecycle for the ranked search page:
-    * tfs and dfs from the pruned term buckets, document lengths from the
-    * store's docstats side table, (N, avgdl) from its meta. Zero corpus
-    * reads at query time; the oracle is the raw-scan BM25 SQL, so
-    * store-served ranking is proven answer-identical to scanning.
+  /** Phrase search via POSITIONAL postings — the adjacency join that
+    * makes `"hash join"` different from `hash AND join` ([[Search.phrase]]).
+    * Each query term keeps its (doc, position) posting rows; the phrase
+    * match is an equi-join on (doc_id, pos+1). This is the standard
+    * positional-inverted-index formulation: the join keys are exact, the
+    * planner hashes them, and non-matching documents never pair. The
+    * oracle cross-checks with a direct per-row adjacency scan — same
+    * answer, scan-shaped; the postings shape is the one that works when
+    * the index is persisted and the query should not re-read every
+    * document.
     */
-  val indexedSearchRanked = Q("log_indexed_search_ranked", searchRankedSql) { (s, dir) =>
-    val store = graft.sources.Stores.postingStore(s, dir)
-    graft.sources.Sinks.probePostingsBm25(s, store, Seq("spark", "hash", "scan"), k = 20)
+  val phraseSearch = Q("log_phrase_search", phraseSearchSql) { (s, dir) =>
+    Search.phrase(Search.raw(s, dir), Seq("hash", "join")).orderBy("doc_id")
   }
 
   /** [[phraseSearch]] served from the standing posting store: positional
@@ -2030,9 +1975,7 @@ object LogOps {
     * (doc, pos+1). Same oracle as the raw scan.
     */
   val indexedPhrase = Q("log_indexed_phrase", phraseSearchSql) { (s, dir) =>
-    val store = graft.sources.Stores.postingStore(s, dir)
-    graft.sources.Sinks.probePostingsPhrase(s, store, "hash", "join")
-      .orderBy("doc_id")
+    Search.phrase(Search.store(s, dir), Seq("hash", "join")).orderBy("doc_id")
   }
 
   /** Trending templates — "what is new in today's logs": each template's
@@ -2158,11 +2101,8 @@ object LogOps {
       |  CAST(list_min(hits) AS BIGINT) AS min_dist
       |FROM d WHERE len(hits) > 0 ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val k = 4
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-    val postings = Tables.documents(s, dir)
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos0", "tok")))
-      .filter(col("tok").isin("spark", "vector"))
-      .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("tok"))
+    val postings = Search.positions(Search.raw(s, dir), Seq("spark", "vector"))
+      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("tok"))
     val a = postings.filter(col("tok") === "spark")
       .select(col("doc_id"), col("pos").as("pa"))
       .withColumn("bucket", expr(s"pa div $k"))
@@ -2758,15 +2698,6 @@ object LogOps {
       .orderBy("day")
   }
 
-  /** Alerting rules as DATA: a rule table (rule_id, event_type, daily
-    * threshold) evaluated against per-day type volumes in ONE corpus
-    * scan — the way a log engine serves hundreds of saved alerts without
-    * one query per rule. The rule set broadcasts (it is human-authored,
-    * therefore tiny); the join carries the event_type equi-key so the
-    * threshold predicate rides a BroadcastHashJoin, never a nested loop.
-    * Rule 4's absurd threshold pins the no-fire path. Adding a rule at
-    * 100 TB changes the broadcast payload, not the scan count.
-    */
   /** The canonical saved-alert fixture, shared with the streaming twin
     * (`stream_alert_rules`) so both engines evaluate the SAME rule table.
     * Rule 4's absurd threshold pins the no-fire path.
@@ -2793,6 +2724,15 @@ object LogOps {
       |FROM daily JOIN rules ON event_type = rule_type AND n >= min_n
       |ORDER BY rule_id, day""".stripMargin
 
+  /** Alerting rules as DATA: a rule table (rule_id, event_type, daily
+    * threshold) evaluated against per-day type volumes in ONE corpus
+    * scan — the way a log engine serves hundreds of saved alerts without
+    * one query per rule. The rule set broadcasts (it is human-authored,
+    * therefore tiny); the join carries the event_type equi-key so the
+    * threshold predicate rides a BroadcastHashJoin, never a nested loop.
+    * Rule 4's absurd threshold pins the no-fire path. Adding a rule at
+    * 100 TB changes the broadcast payload, not the scan count.
+    */
   val alertRules: Q = {
     Q("log_alert_rules", alertRulesSql) { (s, dir) =>
       import s.implicits._
@@ -2807,19 +2747,6 @@ object LogOps {
     }
   }
 
-  /** Emerging log shapes: per day, how many TEMPLATES appeared for the
-    * first time — the "is the system speaking a new language today"
-    * monitor that catches a deploy introducing novel error classes even
-    * when total volume is flat (volume monitors like
-    * `log_trending_templates` miss a brand-new shape with modest count).
-    * One corpus scan collapses to (template, first_day) — template
-    * cardinality is dozens — and the per-day rollup then runs on those
-    * metadata-sized rows; `first_ids` carries a deterministic sample of
-    * the day's debut templates for the on-call reader. At 100 TB the
-    * incremental form is the same plan over the ingest batch anti-joined
-    * against the standing template registry (the `llm_incremental_dedup`
-    * pattern); the batch query here IS the registry build.
-    */
   /** One oracle for both the batch and streaming formulations: a debut is a
     * (template, first_day) fact, independent of whether first sight was
     * found by a corpus-wide MIN or a stateful first-sighting fold.
@@ -2835,6 +2762,19 @@ object LogOps {
       |  string_agg(substr(md5(template), 1, 8), ',' ORDER BY template) AS first_ids
       |FROM firsts GROUP BY first_day ORDER BY first_day""".stripMargin
 
+  /** Emerging log shapes: per day, how many TEMPLATES appeared for the
+    * first time — the "is the system speaking a new language today"
+    * monitor that catches a deploy introducing novel error classes even
+    * when total volume is flat (volume monitors like
+    * `log_trending_templates` miss a brand-new shape with modest count).
+    * One corpus scan collapses to (template, first_day) — template
+    * cardinality is dozens — and the per-day rollup then runs on those
+    * metadata-sized rows; `first_ids` carries a deterministic sample of
+    * the day's debut templates for the on-call reader. At 100 TB the
+    * incremental form is the same plan over the ingest batch anti-joined
+    * against the standing template registry (the `llm_incremental_dedup`
+    * pattern); the batch query here IS the registry build.
+    */
   val newTemplates = Q("log_new_templates", newTemplatesSql) { (s, dir) =>
     Tables.events(s, dir)
       .select(col("ts"), syntheticLine.as("line"))
@@ -2920,18 +2860,6 @@ object LogOps {
       .orderBy("type_a", "type_b")
   }
 
-  /** P6+: boolean search — `spark AND (join OR window) AND NOT shuffle`,
-    * the full query algebra a search box needs beyond conjunction
-    * ([[invertedSearch]]) and phrases. Same probe discipline: only the
-    * four query terms survive the scan filter, so the shuffle carries
-    * probe-sized rows; the boolean evaluates on per-doc term flags after
-    * the intersection-style rollup. NOT is the subtle clause: a doc
-    * matching only the negative term never reaches the rollup (no
-    * positive-term row), and one that also matches positives arrives with
-    * its flag set and is filtered — either way excluded, with no second
-    * corpus pass. Served from the standing posting store, the same flags
-    * come from the pruned term buckets ([[graft.sources.Sinks.probePostings]]).
-    */
   /** The boolean-search oracle SQL, shared by the raw-scan
     * [[booleanSearch]] and the store-served [[booleanSearchIndexed]] —
     * the two formulations must be answer-identical, so they share one
@@ -2953,34 +2881,23 @@ object LogOps {
       |WHERE tf_spark > 0 AND (tf_join > 0 OR tf_window > 0) AND tf_shuffle = 0
       |ORDER BY doc_id""".stripMargin
 
+  private val boolean =
+    TermQuery(Seq("spark"), should = Seq("join", "window"), mustNot = Seq("shuffle"))
+
+  /** P6+: boolean search — `spark AND (join OR window) AND NOT shuffle`,
+    * the full query algebra a search box needs beyond conjunction
+    * ([[invertedSearch]]) and phrases: the term-query core's must, should
+    * and must-not terms. The four term counts come from the map-side lens
+    * in the one corpus scan and the predicate evaluates per row — no token
+    * row shuffles. NOT is the subtle clause: a doc holding the negative
+    * term carries a non-zero count and is filtered, with no second corpus
+    * pass. Served from the standing posting store, the same counts come
+    * from the pruned term buckets ([[booleanSearchIndexed]]).
+    */
   val booleanSearch = Q("log_boolean_search", booleanSearchSql) { (s, dir) =>
-    val terms = Seq("spark", "join", "window", "shuffle")
-    val postings = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy("doc_id", "tok")
-      .agg(count(lit(1)).as("tf"))
-    postings.groupBy("doc_id")
-      .agg(
-        coalesce(max(when(col("tok") === "spark", col("tf"))), lit(0L)).as("tf_spark"),
-        coalesce(max(when(col("tok") === "join", col("tf"))), lit(0L)).as("tf_join"),
-        coalesce(max(when(col("tok") === "window", col("tf"))), lit(0L)).as("tf_window"),
-        coalesce(max(when(col("tok") === "shuffle", col("tf"))), lit(0L)).as("tf_shuffle"))
-      .filter(col("tf_spark") > 0 &&
-        (col("tf_join") > 0 || col("tf_window") > 0) && col("tf_shuffle") === 0)
-      .select("doc_id", "tf_spark", "tf_join", "tf_window")
-      .orderBy("doc_id")
+    Search.matches(Search.raw(s, dir), boolean).orderBy("doc_id")
   }
 
-  /** P6+: search-page facets — for the conjunctive query `spark AND join`,
-    * hit counts by language and by source (the sidebar next to the result
-    * list). The hit test is the map-side array lens (no explode, no
-    * shuffle to FIND hits); each hit row then emits its two
-    * (facet, value) structs in-row and ONE aggregation rolls both facet
-    * dimensions up in a single exchange of facet-cardinality rows — not
-    * one scan or shuffle per facet. (The oracle spells the same rollup as
-    * UNION ALL of two GROUP BYs; only the values must match.)
-    */
   /** The facet-rollup oracle SQL, shared by the raw-scan [[searchFacets]]
     * and the store-served [[searchFacetsIndexed]].
     */
@@ -3000,45 +2917,22 @@ object LogOps {
       |FROM hits GROUP BY 2
       |ORDER BY facet, value""".stripMargin
 
+  private val faceted = TermQuery(Seq("spark", "join"))
+
+  /** P6+: search-page facets — for the conjunctive query `spark AND join`,
+    * hit counts by language and by source (the sidebar next to the result
+    * list). The hit test is the map-side array lens (no explode, no
+    * shuffle to FIND hits); each hit row then emits its two
+    * (facet, value) structs in-row and ONE aggregation rolls both facet
+    * dimensions up in a single exchange of facet-cardinality rows — not
+    * one scan or shuffle per facet ([[Search.facets]]). (The oracle spells
+    * the same rollup as UNION ALL of two GROUP BYs; only the values must
+    * match.)
+    */
   val searchFacets = Q("log_search_facets", searchFacetsSql) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-    def has(term: String) = size(filter(toks, t => t === term)) > 0
-    Tables.documents(s, dir)
-      .filter(has("spark") && has("join"))
-      .select(explode(array(
-        struct(lit("lang").as("facet"), col("lang").as("value")),
-        struct(lit("source").as("facet"), col("source").as("value")))).as("f"))
-      .groupBy(col("f.facet").as("facet"), col("f.value").as("value"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy("facet", "value")
+    Search.facets(Search.raw(s, dir), faceted)
   }
 
-  /** A4 at the PERSISTED-QUANTILE grain — "p95 latency over any date
-    * range" served from standing daily sketches, the percentile twin of
-    * `agg_hll_union_daily`'s distinct-count story. The sketch is the
-    * DDSketch design (Masson, Lee & Rhodes, VLDB 2019): log-γ value
-    * buckets (γ = 1.02 ⇒ ≤ (γ−1)/(γ+1) ≈ 0.99% relative error), one
-    * (event_type, day, bucket, n) count row per bucket — and UNLIKE a
-    * KLL/GK sketch the merge is plain count ADDITION: associative,
-    * commutative, and fully deterministic (Datasketches KLL compaction
-    * flips a shared java.util.Random coin, which would break both the
-    * registry determinism gate and cross-run dump identity — measured,
-    * not assumed). A range query SUMs the pruned days' bucket rows and
-    * walks the cumulative rank — raw events are never rescanned, cost is
-    * O(days × buckets) ≈ metadata at any corpus scale.
-    *
-    * Exactness across engines: the bucket index ceil(ln v/ln γ) is the
-    * one float hazard — LogOpsSpec sweeps every fixture and asserts no
-    * value's log-ratio sits within 1e-9 of an integer (the two exact
-    * hits, v = 1.0 (ln 1 = 0) and v = 1.02 (x/x = 1), are identical by
-    * IEEE construction on both engines; the nearest other value is
-    * 4.1e-5 away, 8 orders above cross-libm ulp drift). Rank selection is
-    * integer arithmetic (100·cum ≥ p·total); the midpoint estimate
-    * 2γᵇ/(γ+1) is ≥ 9.9e-8 from every 4dp rounding boundary over the
-    * reachable bucket range. Zero values live in a sentinel bucket below
-    * all positives (the DDSketch zero counter), so quantiles rank over
-    * ALL values.
-    */
   /** DDSketch zero-sentinel bucket id: sits below every positive bucket so
     * the rank walk orders zero/negative values first. Shared by the batch
     * query, the persisted store writer ([[graft.sources.Sinks.writeLatencySketches]])
@@ -3135,6 +3029,32 @@ object LogOps {
       |  ROUND(MIN(CASE WHEN cum * 100 >= total * 99 THEN est END), 4) + 0 AS p99_est
       |FROM ranked GROUP BY event_type ORDER BY event_type""".stripMargin
 
+  /** A4 at the PERSISTED-QUANTILE grain — "p95 latency over any date
+    * range" served from standing daily sketches, the percentile twin of
+    * `agg_hll_union_daily`'s distinct-count story. The sketch is the
+    * DDSketch design (Masson, Lee & Rhodes, VLDB 2019): log-γ value
+    * buckets (γ = 1.02 ⇒ ≤ (γ−1)/(γ+1) ≈ 0.99% relative error), one
+    * (event_type, day, bucket, n) count row per bucket — and UNLIKE a
+    * KLL/GK sketch the merge is plain count ADDITION: associative,
+    * commutative, and fully deterministic (Datasketches KLL compaction
+    * flips a shared java.util.Random coin, which would break both the
+    * registry determinism gate and cross-run dump identity — measured,
+    * not assumed). A range query SUMs the pruned days' bucket rows and
+    * walks the cumulative rank — raw events are never rescanned, cost is
+    * O(days × buckets) ≈ metadata at any corpus scale.
+    *
+    * Exactness across engines: the bucket index ceil(ln v/ln γ) is the
+    * one float hazard — LogOpsSpec sweeps every fixture and asserts no
+    * value's log-ratio sits within 1e-9 of an integer (the two exact
+    * hits, v = 1.0 (ln 1 = 0) and v = 1.02 (x/x = 1), are identical by
+    * IEEE construction on both engines; the nearest other value is
+    * 4.1e-5 away, 8 orders above cross-libm ulp drift). Rank selection is
+    * integer arithmetic (100·cum ≥ p·total); the midpoint estimate
+    * 2γᵇ/(γ+1) is ≥ 9.9e-8 from every 4dp rounding boundary over the
+    * reachable bucket range. Zero values live in a sentinel bucket below
+    * all positives (the DDSketch zero counter), so quantiles rank over
+    * ALL values.
+    */
   val latencySketchRange = Q(
     "log_latency_sketch_range", latencySketchRangeSql) { (s, dir) =>
     // the persisted grain: one count row per (event_type, day, bucket) —
@@ -3170,53 +3090,28 @@ object LogOps {
   }
 
   /** P6+: [[booleanSearch]] served from the standing posting store — the
-    * four term flags come from the pruned `tok_bucket` directories
-    * ([[graft.sources.Sinks.probePostingsTfAny]]: no intersection filter,
-    * the boolean predicate decides membership from the pivoted flags) and
-    * the corpus text is never read. SHARED oracle with the raw-scan
+    * four term counts come from the pruned `tok_bucket` directories,
+    * pivoted per doc in one aggregation with no intersection filter (the
+    * boolean predicate decides membership from the counts), and the
+    * corpus text is never read. SHARED oracle with the raw-scan
     * formulation, so the driver proves scan ≡ index; PlanSpec pins the
     * no-corpus-scan plan. At 100 TB the cost is the four terms' posting
     * sizes, not a corpus tokenize.
     */
   val booleanSearchIndexed = Q("log_boolean_search_indexed", booleanSearchSql) { (s, dir) =>
-    val pos = Seq("spark", "join", "window")
-    val negTerm = "shuffle"
-    val terms = pos :+ negTerm
-    val store = graft.sources.Stores.postingStore(s, dir)
-    // pivot columns derive from `terms` (the indexedSearch discipline)
-    val pivots = terms.map(t =>
-      coalesce(max(when(col("tok") === t, col("tf"))), lit(0L)).as(s"tf_$t"))
-    graft.sources.Sinks.probePostingsTfAny(s, store, terms)
-      .groupBy("doc_id")
-      .agg(pivots.head, pivots.tail: _*)
-      .filter(col("tf_spark") > 0 &&
-        (col("tf_join") > 0 || col("tf_window") > 0) && col("tf_shuffle") === 0)
-      .select("doc_id", "tf_spark", "tf_join", "tf_window")
-      .orderBy("doc_id")
+    Search.matches(Search.store(s, dir), boolean).orderBy("doc_id")
   }
 
-  /** P6+: [[searchFacets]] served from the standing posting store: hit
-    * doc_ids come from the pruned-bucket conjunctive probe and the facet
-    * dimensions from the store's (doc_id, dl, lang, source) docstats side
-    * table — zero corpus reads (the reason docstats carries the facet
-    * columns at all; they are written in the same index-time pass as dl).
-    * SHARED oracle with the raw-scan formulation. The hits→docstats join
-    * broadcasts the probe-sized hit list over the per-doc metadata table;
-    * at 100 TB both sides are index artifacts that scale with docs, not
-    * bytes of text.
+  /** P6+: [[searchFacets]] served from the standing posting store: hits
+    * come from the pruned-bucket pivot and the facet dimensions from the
+    * store's (doc_id, dl, lang, source) docstats side table — zero corpus
+    * reads (the reason docstats carries the facet columns at all; they
+    * are written in the same index-time pass as dl). SHARED oracle with
+    * the raw-scan formulation. At 100 TB both join sides are index
+    * artifacts that scale with docs, not bytes of text.
     */
   val searchFacetsIndexed = Q("log_search_facets_indexed", searchFacetsSql) { (s, dir) =>
-    val store = graft.sources.Stores.postingStore(s, dir)
-    val hits = graft.sources.Sinks.probePostings(s, store, Seq("spark", "join"))
-    val facets = graft.sources.Sinks.storeDocstats(s, store)
-      .select("doc_id", "lang", "source")
-    hits.join(facets, "doc_id")
-      .select(explode(array(
-        struct(lit("lang").as("facet"), col("lang").as("value")),
-        struct(lit("source").as("facet"), col("source").as("value")))).as("f"))
-      .groupBy(col("f.facet").as("facet"), col("f.value").as("value"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy("facet", "value")
+    Search.facets(Search.store(s, dir), faceted)
   }
 
   /** The INTERACTIVE SQL SURFACE over the standing search index

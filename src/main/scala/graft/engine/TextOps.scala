@@ -834,6 +834,41 @@ object TextOps {
     */
   val bpeRounds = 6
 
+  /** The shared BPE-training CTE chain (one source of truth for BOTH
+    * `text_bpe_merges` and `text_bpe_apply`, the shinglePairCtes
+    * convention): v0 = word counts with chr(31)-delimited symbol strings;
+    * each round r adds best$r (the argmax pair) and v$r (the rewritten
+    * vocabulary).
+    */
+  private val bpeOracleCtes: String = {
+    val D = "chr(31)"
+    def roundCtes(r: Int): String = {
+      val prev = s"v${r - 1}"
+      s""",
+         |best$r AS MATERIALIZED (
+         |  SELECT a AS ma, b AS mb, CAST(SUM(freq) AS BIGINT) AS score
+         |  FROM (
+         |    SELECT freq, z[1] AS a, z[2] AS b
+         |    FROM $prev, unnest(list_zip(string_split(s, $D), string_split(s, $D)[2:])) AS u(z)
+         |    WHERE z[2] IS NOT NULL)
+         |  GROUP BY a, b
+         |  ORDER BY score DESC, a ASC, b ASC
+         |  LIMIT 1),
+         |v$r AS MATERIALIZED (
+         |  SELECT tok, freq,
+         |    CASE WHEN ma IS NULL THEN s
+         |         ELSE replace(s, ma || $D || mb, ma || mb) END AS s
+         |  FROM $prev LEFT JOIN best$r ON TRUE)""".stripMargin
+    }
+    s"""v0 AS MATERIALIZED (
+       |  SELECT tok, CAST(COUNT(*) AS BIGINT) AS freq,
+       |    array_to_string(string_split(tok, ''), $D) AS s
+       |  FROM (SELECT unnest(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS tok
+       |        FROM documents)
+       |  GROUP BY tok)""".stripMargin +
+      (1 to bpeRounds).map(roundCtes).mkString
+  }
+
   /** D5/D9 (tokenizer training): byte-pair-encoding merge learning — the
     * algorithm behind every production tokenizer (GPT-2 BPE, SentencePiece
     * BPE mode), distributed the way industrial trainers actually scale it:
@@ -870,41 +905,6 @@ object TextOps {
     * algorithm in pure Scala and asserts equal merge sequences — stronger
     * than the hash, since it pins every rank's pair and score.
     */
-  /** The shared BPE-training CTE chain (one source of truth for BOTH
-    * `text_bpe_merges` and `text_bpe_apply`, the shinglePairCtes
-    * convention): v0 = word counts with chr(31)-delimited symbol strings;
-    * each round r adds best$r (the argmax pair) and v$r (the rewritten
-    * vocabulary).
-    */
-  private val bpeOracleCtes: String = {
-    val D = "chr(31)"
-    def roundCtes(r: Int): String = {
-      val prev = s"v${r - 1}"
-      s""",
-         |best$r AS MATERIALIZED (
-         |  SELECT a AS ma, b AS mb, CAST(SUM(freq) AS BIGINT) AS score
-         |  FROM (
-         |    SELECT freq, z[1] AS a, z[2] AS b
-         |    FROM $prev, unnest(list_zip(string_split(s, $D), string_split(s, $D)[2:])) AS u(z)
-         |    WHERE z[2] IS NOT NULL)
-         |  GROUP BY a, b
-         |  ORDER BY score DESC, a ASC, b ASC
-         |  LIMIT 1),
-         |v$r AS MATERIALIZED (
-         |  SELECT tok, freq,
-         |    CASE WHEN ma IS NULL THEN s
-         |         ELSE replace(s, ma || $D || mb, ma || mb) END AS s
-         |  FROM $prev LEFT JOIN best$r ON TRUE)""".stripMargin
-    }
-    s"""v0 AS MATERIALIZED (
-       |  SELECT tok, CAST(COUNT(*) AS BIGINT) AS freq,
-       |    array_to_string(string_split(tok, ''), $D) AS s
-       |  FROM (SELECT unnest(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS tok
-       |        FROM documents)
-       |  GROUP BY tok)""".stripMargin +
-      (1 to bpeRounds).map(roundCtes).mkString
-  }
-
   val bpeMerges: Q = {
     val sql = s"WITH $bpeOracleCtes" +
       "\nSELECT * FROM (\n" +

@@ -176,10 +176,6 @@ private[graft] object Fs {
     if (!fs.exists(path)) 0L else fs.getContentSummary(path).getLength
   }
 
-  /** Recursive (name, length, mtime) signature lines of every file under
-    * `p` — the store-registry corpus fingerprint input. Driver-side
-    * metadata listing only.
-    */
   /** SHALLOW (one listStatus call) signature of `p`'s direct entries —
     * (name, length, mtime) per child, files and directories alike. The
     * store-read-memo invalidation key: a filesystem write never modifies
@@ -198,6 +194,10 @@ private[graft] object Fs {
     }
   }
 
+  /** Recursive (name, length, mtime) signature lines of every file under
+    * `p` — the store-registry corpus fingerprint input. Driver-side
+    * metadata listing only.
+    */
   def fileSignatures(p: String): Seq[String] = {
     val (fs, path) = resolve(p)
     if (!fs.exists(path)) Seq.empty

@@ -301,8 +301,15 @@ object Sinks {
     * so an appended doc can never tokenize differently from the original
     * corpus pass.
     */
-  private def postingToks: org.apache.spark.sql.Column =
+  private[graft] def postingToks: org.apache.spark.sql.Column =
     filter(split(lower(col("text")), " "), t => t =!= "")
+
+  /** Positional term rows `(doc_id, pos, tok)` of `docs`, pos 0-based:
+    * what the store's postings hold, and the raw-scan twin of a pruned
+    * posting read ([[graft.engine.Search.positions]]).
+    */
+  private[graft] def positionRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), posexplode(postingToks).as(Seq("pos", "tok")))
 
   // The posting store is a [[StoreLog]] (`gen-*` versions, `seg/b=*`
   // segments; the module doc states the protocol) whose versions and
@@ -363,9 +370,7 @@ object Sinks {
     */
   private def indexDocs(docs: DataFrame, dir: String, buckets: Int,
                         docstatFiles: Int): Unit = {
-    val toks = postingToks
-    docs
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
+    positionRows(docs)
       .withColumn("tok_bucket", pmod(hash(col("tok")), lit(buckets)))
       .repartition(col("tok_bucket"))
       .write.mode("overwrite")
@@ -376,7 +381,7 @@ object Sinks {
     // facet dimensions (lang, source) — built in the same corpus pass
     // family at index time, so ranked queries AND facet rollups never
     // touch text: hits join this metadata-per-doc table, not the corpus
-    writeSized(docs.select(col("doc_id"), size(toks).cast("long").as("dl"),
+    writeSized(docs.select(col("doc_id"), size(postingToks).cast("long").as("dl"),
       col("lang"), col("source")), s"$dir/docstats", docstatFiles)
     writeMeta(docs.sparkSession, dir, buckets)
   }
@@ -412,7 +417,8 @@ object Sinks {
     * the BM25 normalizers, combined from the meta rows of the current
     * version and the visible segments (all immutable, all metadata-sized).
     * This is the relation behind the SQL surface's `graft_search_meta`
-    * view and [[probePostingsBm25]]'s normalizers.
+    * view; the term-query core reads the same normalizers through
+    * [[termRows]].
     */
   private[graft] def storeMeta(spark: org.apache.spark.sql.SparkSession,
                                path: String): DataFrame = {
@@ -468,146 +474,61 @@ object Sinks {
                       newDocs: DataFrame): Unit =
     ingestPostingsSegment(spark, path, newDocs, postingLog(path).snapshot.nextSegment)
 
-  /** Conjunctive-AND probe of a [[writePostings]] store: reads the bucket
-    * modulus from the store's own meta (never a caller-supplied count —
-    * see the writer note), resolves each term's bucket with the same
-    * `hash` the writer used, filters on the PARTITION column so the scan
-    * prunes to those directories, then intersects by doc. Returns doc_ids
-    * matching ALL terms. StorageLayoutSpec proves the pruning AND that
-    * the answer equals the raw-scan `log_inverted_search` formulation.
+  /** Conjunctive-AND probe of a [[writePostings]] store: the doc_ids
+    * matching ALL terms, read from the terms' pruned `tok_bucket`
+    * directories only — the store source of the term-query core
+    * ([[graft.engine.Search.matches]]). StorageLayoutSpec proves the
+    * pruning AND that the answer equals the raw-scan `log_inverted_search`.
     */
   def probePostings(spark: org.apache.spark.sql.SparkSession, path: String,
-                    terms: Seq[String]): DataFrame = {
-    val normTerms = normalizeTerms(terms)
-    prunedPostings(spark, path, normTerms)
-      .groupBy("doc_id")
-      .agg(countDistinct("tok").as("n_terms"))
-      .filter(col("n_terms") === normTerms.length)
-      .select("doc_id")
-  }
+                    terms: Seq[String]): DataFrame =
+    graft.engine.Search.matches(graft.engine.Search.Store(spark, path),
+      graft.engine.TermQuery(terms)).select("doc_id")
 
-  /** [[probePostings]] with per-(doc, term) term frequencies attached —
-    * the probe shape ranked retrieval and the registered
-    * `log_indexed_search` consume: (doc_id, tok, tf) rows for every doc
-    * matching ALL terms, read from the pruned buckets only.
-    */
-  def probePostingsTf(spark: org.apache.spark.sql.SparkSession, path: String,
-                      terms: Seq[String]): DataFrame = {
-    val normTerms = normalizeTerms(terms)
-    val tf = prunedPostings(spark, path, normTerms)
-      .groupBy("doc_id", "tok")
-      .agg(count(lit(1)).as("tf"))
-    val hits = tf.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"))
-      .filter(col("n_terms") === normTerms.length)
-      .select("doc_id")
-    tf.join(hits, "doc_id")
-  }
-
-  /** Per-(doc, term) term frequencies for docs matching ANY of the query
-    * terms, from the pruned term buckets — the flag-rollup probe boolean
-    * queries consume: unlike [[probePostingsTf]] there is no all-terms
-    * intersection filter, because a boolean expression (`a AND (b OR c)
-    * AND NOT d`) decides membership itself from the pivoted flags. A doc
-    * matching only the NOT term still surfaces here (with its flag set)
-    * and the caller's predicate excludes it; one matching no term at all
-    * has no posting row in these buckets and is excluded by construction.
-    */
-  def probePostingsTfAny(spark: org.apache.spark.sql.SparkSession, path: String,
-                         terms: Seq[String]): DataFrame =
-    prunedPostings(spark, path, normalizeTerms(terms))
-      .groupBy("doc_id", "tok")
-      .agg(count(lit(1)).as("tf"))
-
-  /** BM25 ranked retrieval served ENTIRELY from a [[writePostings]] store:
-    * per-(doc, term) tfs from the pruned term buckets, per-term dfs from
-    * the same rows, document lengths from the docstats side table, and
-    * (N, avgdl) from the store meta — the corpus text is never touched.
-    * Disjunctive (any-term) semantics, Robertson/Lucene idf, score
-    * rounded to 4 dp with doc_id tiebreak, top-`k`.
+  /** BM25 top-`k` served ENTIRELY from a [[writePostings]] store — the
+    * store source of [[graft.engine.Search.bm25]]: disjunctive (any-term)
+    * semantics, score rounded to 4 dp with doc_id tiebreak; the corpus
+    * text is never touched.
     */
   def probePostingsBm25(spark: org.apache.spark.sql.SparkSession, path: String,
-                        terms: Seq[String], k: Int,
-                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val normTerms = normalizeTerms(terms)
-    // ONE snapshot: stats, postings and docstats from the same view — see
-    // prunedPostingsOf
-    val v = postingsView(spark, path)
-    require(v.nDocs > 0, s"posting store at $path is empty")
-    val nDocs = v.nDocs
-    val avgdl = v.sumDl.toDouble / v.nDocs
-    val tf = prunedPostingsOf(spark, v, normTerms)
-      .groupBy("doc_id", "tok")
-      .agg(count(lit(1)).as("tf"))
-    val dfc = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-    val idf = log(lit(1.0) +
-      (lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
-    val lengthNorm = lit(k1) * (lit(1 - b) + lit(b) * col("dl") / lit(avgdl))
-    val docstats = v.docstatRoots.map(Stores.readCached(spark, _))
-      .reduce(_ unionByName _)
-    tf.join(broadcast(dfc), "tok") // |terms| rows
-      .join(docstats, "doc_id")
-      .withColumn("contrib",
-        idf * (col("tf").cast("double") * (k1 + 1)) / (col("tf") + lengthNorm))
-      .groupBy("doc_id")
-      .agg(round(sum("contrib"), 4).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id"))
-      .limit(k)
-  }
+                        terms: Seq[String], k: Int): DataFrame =
+    graft.engine.Search.bm25(graft.engine.Search.Store(spark, path),
+      graft.engine.TermQuery(Nil, should = terms), k)
 
-  /** Exact-adjacency phrase search from a [[writePostings]] store: both
-    * terms' POSITIONAL posting rows come from the pruned buckets and the
-    * phrase match is the (doc_id, pos + 1) equi-join — the positional-
-    * index formulation of `log_phrase_search`, with no corpus read.
+  /** The query-time face of a posting store for the term-query core
+    * ([[graft.engine.Search]]): positional rows `(doc_id, pos, tok)` of
+    * `terms` (already normalized), with the docstats and the BM25
+    * normalizers `(nDocs, avgdl)` — all from ONE resolved snapshot, or a
+    * segment committing between two resolutions hands the query torn
+    * normalizers (a df larger than N turns the BM25 idf negative — caught
+    * by the isolation race spec).
     */
-  def probePostingsPhrase(spark: org.apache.spark.sql.SparkSession, path: String,
-                          first: String, second: String): DataFrame = {
-    val p = prunedPostings(spark, path, normalizeTerms(Seq(first, second)))
-    val a = p.filter(col("tok") === first.toLowerCase)
-      .select(col("doc_id"), col("pos").as("a_pos"))
-    val b = p.filter(col("tok") === second.toLowerCase)
-      .select(col("doc_id").as("b_id"), col("pos").as("b_pos"))
-    a.join(b, col("doc_id") === col("b_id") && col("b_pos") === col("a_pos") + 1)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_matches"))
-  }
+  private[graft] final case class TermRows(rows: DataFrame, docstats: () => DataFrame,
+                                           nDocs: Long, avgdl: Double)
 
-  // normalize to the writer's tokenization (lowercase) and dedup — a
-  // verbatim "Spark" would hash into the wrong bucket and silently miss,
-  // and a duplicated term would make the n_terms intersection unmatchable
-  private def normalizeTerms(terms: Seq[String]): Seq[String] =
-    terms.map(_.toLowerCase).distinct
-
-  /** Store scan pruned to the query terms' partitions: resolves the bucket
-    * modulus from the store's own meta, hashes each term with the writer's
-    * `hash`, and filters on the PARTITION column before the term filter.
-    * Committed streaming segments ([[ingestPostingsSegment]]) union in,
-    * each pruned to the same buckets (all segments share the store's
-    * modulus — it is read from meta at ingest time).
+  /** [[TermRows]] of the store at `path`. The rows are pruned to the
+    * terms' partitions: the bucket modulus comes from the store's own meta,
+    * each term hashes with the writer's `hash`, and the filter on the
+    * PARTITION column lands before the term filter. Committed streaming
+    * segments ([[ingestPostingsSegment]]) union in, each pruned to the
+    * same buckets (all segments share the store's modulus — it is read
+    * from meta at ingest time).
     */
-  private def prunedPostings(spark: org.apache.spark.sql.SparkSession,
-                             path: String, normTerms: Seq[String]): DataFrame =
-    prunedPostingsOf(spark, postingsView(spark, path), normTerms)
-
-  /** [[prunedPostings]] against an ALREADY-RESOLVED snapshot — a probe
-    * that also needs the snapshot's stats or docstats must derive
-    * everything from ONE view, or a segment committing between two
-    * resolutions hands it torn normalizers (a df larger than N turns the
-    * BM25 idf negative — caught by the isolation race spec).
-    */
-  private def prunedPostingsOf(spark: org.apache.spark.sql.SparkSession,
-                               v: PostingsView,
-                               normTerms: Seq[String]): DataFrame = {
+  private[graft] def termRows(spark: org.apache.spark.sql.SparkSession, path: String,
+                              terms: Seq[String]): TermRows = {
     import spark.implicits._
-    val bucketIds = normTerms.toDF("t")
+    val v = postingsView(spark, path)
+    val bucketIds = terms.toDF("t")
       .select(pmod(hash(col("t")), lit(v.buckets)).as("b"))
       .as[Int].collect().toSeq.distinct
     val roots = v.postingRoots
     require(roots.nonEmpty, "posting store has no postings")
-    roots.map(Stores.readCached(spark, _)
+    val rows = roots.map(Stores.readCached(spark, _)
         .filter(col("tok_bucket").isin(bucketIds: _*)) // partition pruning
-        .filter(col("tok").isin(normTerms: _*)))
+        .filter(col("tok").isin(terms: _*)))
       .reduce(_ unionByName _)
+      .select("doc_id", "pos", "tok")
+    TermRows(rows, () => docstatsOf(spark, v), v.nDocs, v.sumDl.toDouble / v.nDocs)
   }
 
   /** Streaming-ingest step for a [[writePostings]] store: the batch lands
@@ -689,7 +610,7 @@ object Sinks {
     * partitions (absent in a stream-only store) unioned with every
     * visible committed segment's — the UNPRUNED view behind the SQL
     * surface's `graft_postings` ([[graft.GraftSession.openStores]]).
-    * Unlike [[prunedPostings]] no term filter is applied here; a SQL user
+    * Unlike [[termRows]] no term filter is applied here; a SQL user
     * prunes with the partition column (`tok_bucket IN (pmod(hash('<term>'),
     * <buckets>))`, modulus from `graft_search_meta`) and the filter
     * distributes over the union, so each side's scan keeps directory
@@ -707,10 +628,13 @@ object Sinks {
     * segment's.
     */
   private[graft] def storeDocstats(spark: org.apache.spark.sql.SparkSession,
-                                   path: String): DataFrame = {
-    val parts = postingsView(spark, path).docstatRoots
-    require(parts.nonEmpty, s"posting store at $path has no docstats")
-    parts.map(Stores.readCached(spark, _)).reduce(_ unionByName _)
+                                   path: String): DataFrame =
+    docstatsOf(spark, postingsView(spark, path))
+
+  private def docstatsOf(spark: org.apache.spark.sql.SparkSession,
+                         v: PostingsView): DataFrame = {
+    require(v.docstatRoots.nonEmpty, "posting store has no docstats")
+    v.docstatRoots.map(Stores.readCached(spark, _)).reduce(_ unionByName _)
   }
 
   /** Count of committed segments still visible over the current

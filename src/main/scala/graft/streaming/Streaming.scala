@@ -32,7 +32,6 @@ object Streaming {
 
   // ---- T1/T2/T3: windowed aggregations (work on batch AND stream) ----
 
-  /** T1: tumbling 1-hour counts per event type. */
   /** T1 × A4: per-hour DDSketch-style log-bucket latency counts — the
     * streaming face of `LogOps.latencySketchRange`. ONE aggregation over
     * (window, type, bucket) keys, so it is append-legal under a watermark
@@ -52,6 +51,7 @@ object Streaming {
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("ws"), col("event_type"), col("bucket"), col("n"))
 
+  /** T1: tumbling 1-hour counts per event type. */
   def tumblingCounts(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -600,8 +600,8 @@ object Streaming {
     * stream-fed store answers conjunctive/BM25/phrase probes identically
     * to a batch-built [[graft.sources.Sinks.writePostings]] store over the
     * same docs, and that a crash re-delivery changes nothing.
-    */
-  /** `compactEvery` closes the LSM loop WITHOUT an operator in it: once
+    *
+    * `compactEvery` closes the LSM loop WITHOUT an operator in it: once
     * the visible segment count reaches the threshold, the batch that
     * crossed it runs [[graft.sources.Sinks.compactPostings]] inline —
     * safe mid-stream because compaction commits a new store version with

@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.Search
 import java.net.URI
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{DelegateToFileSystem, RawLocalFileSystem}
@@ -122,7 +123,7 @@ class FsSpec extends SparkSpecBase {
     def answers(p: String): (Seq[String], Seq[String], Seq[String]) = (
       rows(graft.sources.Sinks.probePostings(spark, p, terms)),
       rows(graft.sources.Sinks.probePostingsBm25(spark, p, terms, k = 20)),
-      rows(graft.sources.Sinks.probePostingsPhrase(spark, p, "slow", "join")))
+      rows(Search.phrase(Search.Store(spark, p), Seq("slow", "join"))))
 
     graft.sources.Sinks.writePostings(docs.filter(col("doc_id") <= cut), dir, buckets = 16)
     // a committed version really lives on the mock scheme

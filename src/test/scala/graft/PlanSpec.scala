@@ -166,6 +166,46 @@ class PlanSpec extends SparkSpecBase {
     assert(plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
+  test("raw-scan searches plan no more shuffle exchanges than their hand-written spellings") {
+    // Exchanges of the plan as prepared, before AQE re-plans its stages.
+    // The bounds are the counts of the per-query spellings the term-query
+    // core replaced; the conjunctive and boolean searches now find hits
+    // map-side (no Generate, no term-row shuffle) and keep only the sort.
+    val bounds = Map("log_inverted_search" -> 3, "log_boolean_search" -> 3,
+      "log_search_facets" -> 2, "log_search_ranked" -> 1, "log_proximity_search" -> 2,
+      "log_phrase_search" -> 2)
+    for ((name, bound) <- bounds) {
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val shuffles = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }.size
+      assert(shuffles <= bound, s"$name: $shuffles shuffle exchanges > $bound\n$plan")
+      if (Set("log_inverted_search", "log_boolean_search")(name))
+        assert(!plan.toString.contains("Generate"), s"$name explodes tokens\n$plan")
+    }
+  }
+
+  test("store-served searches read each posting root once per term relation") {
+    // A pivot search reads the pruned buckets once; BM25 also reads them
+    // for its |terms|-row df relation, and the phrase once per side of its
+    // adjacency join. The hand-written conjunctive probe read them twice.
+    val reads = Map("log_indexed_search" -> 1, "log_boolean_search_indexed" -> 1,
+      "log_search_facets_indexed" -> 1, "log_indexed_search_ranked" -> 2,
+      "log_indexed_phrase" -> 2)
+    for ((name, bound) <- reads) {
+      val roots = SparkEntry.queries(name)(spark, sfDir).queryExecution.sparkPlan
+        .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+        .map(_.relation.location.rootPaths.mkString(","))
+        .filter(_.endsWith("/postings"))
+      assert(roots.nonEmpty, s"$name: no posting scan")
+      val most = roots.groupBy(identity).map { case (r, n) => r -> n.size }
+      assert(most.values.max <= bound, s"$name: posting reads $most > $bound")
+    }
+  }
+
   test("rollup-served report reads the standing rollup, never the raw log") {
     // The materialized-view contract: log_rollup_served answers from the
     // (day, event_type) partials. An events.parquet scan here means the

@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.{Search, TermQuery}
 import org.apache.spark.sql.functions._
 
 /** The 100 TB storage contract: a production log table is date-partitioned
@@ -306,14 +307,14 @@ class StorageLayoutSpec extends SparkSpecBase {
     val terms = Seq("spark", "join", "window")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
+    def phrase(p: String) = Search.phrase(Search.Store(spark, p), Seq("slow", "join"))
+    def anyTerm(p: String) = Search.matches(Search.Store(spark, p), TermQuery(Nil, should = terms))
     assert(rows(graft.sources.Sinks.probePostings(spark, incrDir, terms)) ===
            rows(graft.sources.Sinks.probePostings(spark, fullDir, terms)))
     assert(rows(graft.sources.Sinks.probePostingsBm25(spark, incrDir, terms, k = 20)) ===
            rows(graft.sources.Sinks.probePostingsBm25(spark, fullDir, terms, k = 20)))
-    assert(rows(graft.sources.Sinks.probePostingsPhrase(spark, incrDir, "slow", "join")) ===
-           rows(graft.sources.Sinks.probePostingsPhrase(spark, fullDir, "slow", "join")))
-    assert(rows(graft.sources.Sinks.probePostingsTfAny(spark, incrDir, terms)) ===
-           rows(graft.sources.Sinks.probePostingsTfAny(spark, fullDir, terms)))
+    assert(rows(phrase(incrDir)) === rows(phrase(fullDir)))
+    assert(rows(anyTerm(incrDir)) === rows(anyTerm(fullDir)))
     // facet side table: generation + segment docstats equal a full rebuild's
     assert(rows(graft.sources.Sinks.storeDocstats(spark, incrDir)) ===
            rows(graft.sources.Sinks.storeDocstats(spark, fullDir)))

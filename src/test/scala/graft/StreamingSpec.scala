@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.{Search, TermQuery}
 import java.sql.Timestamp
 import graft.streaming.Streaming
 import org.apache.spark.sql.DataFrame
@@ -463,8 +464,8 @@ class StreamingSpec extends SparkSpecBase {
     def probeAll(store: String): Seq[Seq[String]] = Seq(
       rows(graft.sources.Sinks.probePostings(spark, store, terms)),
       rows(graft.sources.Sinks.probePostingsBm25(spark, store, terms, k = 20)),
-      rows(graft.sources.Sinks.probePostingsPhrase(spark, store, "slow", "join")),
-      rows(graft.sources.Sinks.probePostingsTfAny(spark, store, terms)))
+      rows(Search.phrase(Search.Store(spark, store), Seq("slow", "join"))),
+      rows(Search.matches(Search.Store(spark, store), TermQuery(Nil, should = terms))))
     val streamed = probeAll(streamStore)
     assert(streamed === probeAll(fullStore),
       "stream-fed store diverged from the batch-built store")
