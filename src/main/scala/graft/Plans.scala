@@ -6,10 +6,10 @@ import org.apache.spark.sql.execution.FormattedMode
 
 /** The plan-dump tool: `.explain("formatted")` of registered queries.
   *
-  * With no arguments it writes PLANS.md: the formatted physical plan of
-  * every headline query plus the structurally interesting operators,
-  * annotated with what to look for. This is the artifact behind the scale
-  * claims — broadcast pins, single exchanges, pushed filters, codegen
+  * With no arguments it writes PLANS.md (ignored by git, not committed):
+  * the formatted physical plan of every headline query plus the
+  * structurally interesting operators, annotated with what to look for.
+  * This is the artifact behind the scale claims — broadcast pins, single exchanges, pushed filters, codegen
   * spans — regenerated on demand so the documented plans can never
   * silently drift from the code.
   *
@@ -55,6 +55,11 @@ object Plans {
     "log_grep_multi" -> "all N rlike predicates evaluate in ONE codegen'd pass over a single text scan; adding a pattern adds a count column, never a scan",
     "llm_jaccard_pairs" -> "the adaptive exact pair scan (exactJaccardPairs) over the df-capped src0 token sets: the closed token vocabulary (≤ 4096 capped keys) takes the dense path — per-doc bitmask words from a codegen'd bit_or aggregate, a block-grid ShuffledHashJoin on the cell with the popcount evaluated once per pair; no candidate pair set is materialized",
     "text_winnow_pairs" -> "the exact pair scan's expansion path over the census-capped fingerprints: postings group by fingerprint once, the C(df, 2) pairs expand map-side into a partially-aggregated count, and both size relations join the count verify (the open fingerprint vocabulary's adaptive route, prefix filter + array verify, measured slower)",
+    "llm_minhash_pairs" -> "signature table checkpointed once (tokenize, 4 md5 digests, 16 min slots); the band-bucket pair scan (bandPairs): a bucket census drops buckets over 50 docs, one (band_idx, band_key) equi self-join with id_a < id_b, one row per pair; est_jaccard from the two carried signatures",
+    "text_simhash_pairs" -> "per-doc simhash from one token aggregate; the band-bucket pair scan (bandPairs, uncapped) over four 8-bit bands: one (b, band_val) equi self-join, one row per pair, then the hamming <= 3 confirm",
+    "llm_dup_span_fraction" -> "one corpus scan: word-5-grams explode map-side into the gram-df relation (a (doc, gram) aggregate, then a COUNT(*) window over the gram partition) — no df census table, no join back; per-doc sums over its rows",
+    "llm_dup_span_removal" -> "positional 5-grams; the gram-df relation's grams with df >= 2 semi-join the gram starts on gram; one doc-ordered 4-preceding window max marks covered tokens — no document pair is ever compared",
+    "text_boilerplate_ngrams" -> "one corpus scan: trigrams feed the gram-df relation, and per-doc sums of occurrences and of boilerplate occurrences (df >= 5) read its rows — no broadcast join back to a second tokenize of the corpus",
     "llm_incremental_dedup" -> "digest probe ships 16-byte hashes; the near-dup postings join is batch x existing (small x large) — the standing corpus never self-joins",
     "join_interval_overlap" -> "no shared equi-key, yet NO BNLJ: time-bucket binning turns the interval predicate into a SortMergeJoin on bucket + in-bucket range filter; the census-salt guard (broadcast hot-bucket list, salt sub-keys) bounds a storm hour's pairing per task",
     "log_template_mine" -> "mask + hash-agg in one codegen'd scan pipeline; partial agg collapses onto template-cardinality keys map-side",

@@ -451,7 +451,7 @@ object Soak {
       // DIFFERENT replicas, making the conjunctive probe vacuously empty)
       val probeDoc = base.agg(min("doc_id")).head.getLong(0)
       val terms = base.filter(col("doc_id") === probeDoc)
-        .select(explode(filter(split(lower(col("text")), " "), t => t =!= "")).as("t"))
+        .select(explode(graft.engine.Words.tokens).as("t"))
         .groupBy("t").count().orderBy(col("count").desc, col("t")).limit(3)
         .collect().map(_.getString(0)).toSeq
       // ---- postings half ----

@@ -142,8 +142,8 @@ object CurationOps {
       .orderBy("lang", "pack_id")
   }
 
-  /** Vocabulary building: corpus-wide top-20 bigrams. Bigram generation is a
-    * per-row array zip (no self-join); the count shuffles one row per
+  /** Vocabulary building: corpus-wide top-20 bigrams. Bigram generation is the
+    * per-row word-n-gram generator ([[Words.grams]], no self-join); the count shuffles one row per
     * distinct bigram with map-side partial aggregation, and the top-k is a
     * TakeOrdered, not a global sort.
     */
@@ -158,17 +158,9 @@ object CurationOps {
       |  FROM toks)
       |SELECT bigram, COUNT(*) AS freq FROM grams
       |GROUP BY bigram ORDER BY freq DESC, bigram LIMIT 20""".stripMargin) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-    // slice length must not go negative: a doc whose text tokenizes to zero
-    // non-empty tokens would pass -1 and throw; the oracle's range(1, len)
-    // is simply empty there, so clamp to 0 (⇒ no bigrams) to match.
-    val sliceLen = greatest(lit(0), size(toks) - 1)
-    val bigrams = zip_with(
-      slice(toks, lit(1), sliceLen),
-      slice(toks, lit(2), sliceLen),
-      (a, b) => concat(a, lit(" "), b))
     Tables.documents(s, dir)
-      .select(explode(bigrams).as("bigram"))
+      .select(Words.tokens.as("ts"))
+      .select(explode(Words.grams(2)).as("bigram"))
       .groupBy("bigram")
       .agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("bigram"))
@@ -272,7 +264,7 @@ object CurationOps {
       .groupBy(md5(col("text")).as("digest"))
       .agg(min("doc_id").as("doc_id"))
       .select("doc_id")
-    val nTokens = size(filter(split(lower(col("text")), " "), t => t =!= ""))
+    val nTokens = size(Words.tokens)
     val h = hashByte(col("doc_id"))
     docs.join(keepers, Seq("doc_id"), "left_semi")
       .filter(nTokens >= 20)
@@ -377,7 +369,7 @@ object CurationOps {
     * doc into 50-token chunks on a 40-token stride (10-token overlap), the
     * shape every retrieval and long-context pipeline needs. Map-side only:
     * tokenize once into a materialized column (the O(len²) inline-lambda
-    * trap — see the n-gram builders), explode chunk indices, slice. Both
+    * trap — see [[Words.grams]]), explode chunk indices, slice. Both
     * engines clamp a trailing short slice identically; docs with zero
     * tokens emit no chunks on both sides (guarded explicitly — DuckDB's
     * `//` truncates toward zero, so its unguarded range(0, (-1//40)+1)
@@ -394,10 +386,9 @@ object CurationOps {
       |FROM toks, UNNEST(range(0, ((len(ts)-1)//40)+1)) AS u(i)
       |WHERE len(ts) >= 1
       |ORDER BY doc_id, chunk_idx""".stripMargin) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
     val chunk = slice(col("ts"), col("chunk_idx").cast("int") * 40 + 1, lit(50))
     Tables.documents(s, dir)
-      .select(col("doc_id"), toks.as("ts"))
+      .select(col("doc_id"), Words.tokens.as("ts"))
       .select(col("doc_id"), col("ts"),
         explode(when(size(col("ts")) >= 1,
             sequence(lit(0L), ((size(col("ts")) - 1) / 40).cast("long")))

@@ -165,7 +165,7 @@ object LlmOps {
     val tok = Tables.documents(s, dir)
       .filter(col("source") === "src0")
       .select(col("doc_id"),
-        explode(array_distinct(split(lower(col("text")), " "))).as("sh"))
+        explode(array_distinct(Words.raw)).as("sh"))
       .filter(col("sh") =!= "")
     exactJaccardPairs(tok, 0.8, 2000L, 0.8).orderBy("id_a", "id_b")
   }
@@ -183,17 +183,10 @@ object LlmOps {
        |        i -> array_to_string(string_split(lower(text), ' ')[i:i+1], ' ')))) AS sh
        |    FROM $fromClause""".stripMargin
 
-  /** Spark twin of [[shingleSelectSql]]: distinct bigram shingles per doc.
-    * The token array is a materialized alias — an inlined split() tree
-    * inside the lambda re-tokenizes per position, O(len²) per doc. */
-  private[graft] def bigramShingles(df: DataFrame): DataFrame = {
-    val toks = split(lower(col("text")), " ")
-    df.select(col("doc_id"), toks.as("ts"))
-      .select(col("doc_id"), explode(array_distinct(transform(
-        when(size(col("ts")) >= lit(2), sequence(lit(1), size(col("ts")) - 1))
-          .otherwise(array().cast("array<int>")),
-        i => concat_ws(" ", slice(col("ts"), i, lit(2)))))).as("sh"))
-  }
+  /** Spark twin of [[shingleSelectSql]]: distinct bigram shingles per doc. */
+  private[graft] def bigramShingles(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), Words.raw.as("ts"))
+      .select(col("doc_id"), explode(array_distinct(Words.grams(2))).as("sh"))
 
   /** Shingle df-cap parameters, shared across every consumer (Spark
     * [[capCensus]] calls and the oracle CTEs) so the cap can be tuned in
@@ -533,7 +526,14 @@ object LlmOps {
       // prefix filter + array verify is the measured-cheaper shape. The
       // 16× threshold is the avg-df grain where the array-carry starts to
       // dominate the 16-byte pair rows; both paths are exact, so the
-      // constant tunes cost only, never answers.
+      // constant tunes cost only, never answers. Measured on the capped
+      // postings (materialized, same JVM, local[2]), expansion vs prefix:
+      //   sf0.01 bigram shingles   P/N 14.3   0.43 vs 1.67 s
+      //   sf0.01 winnow fps        P/N 0.39   0.22 vs 0.50 s
+      //   1.0×sf0.1 winnow fps     P/N ≈ 3.5  2.07 vs 2.55 s
+      // No measured input favors the prefix path, so no lower bound is
+      // fitted: one would sit below 0.39 with no case on its far side,
+      // and text_winnow_pairs calls [[expandedPairs]] directly.
       val Array(p, n) = census
         .agg(sum(expr("df * (df - 1) / 2")), sum("df"))
         .head().toSeq.map(v => String.valueOf(v).toDouble).toArray
@@ -979,6 +979,38 @@ object LlmOps {
         least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"),
         round(col("cs"), 4).as("cos_sim")): _*)
+
+  /** The band-bucket candidate pair scan of the LSH members
+    * ([[minhashPairs]], [[graft.engine.TextOps.simhashPairs]]): `bands`
+    * holds one row per (doc, band) — `doc_id`, the bucket key columns
+    * `keys` and any per-doc payload columns. Docs in one bucket meet in an
+    * equi self-join on the keys, so the corpus is never crossed with
+    * itself; a pair that collides in several bands comes out once, as
+    * (id_a < id_b, each payload column as `<c>_a` and `<c>_b`). The
+    * payload is per doc, so the dedup is a distinct over all of these
+    * columns: a caller's filter on the payloads (simhash's hamming
+    * confirm) then runs below it — keyed on the ids alone, the dedup
+    * would shuffle every candidate (measured 1.6 → 6.0 s). With
+    * `maxBucket`, a census over the keys first drops every bucket holding
+    * more docs: such a bucket would emit O(bucket²) pairs, the cross
+    * product banding exists to avoid, and a band that many docs share
+    * carries no discriminating signal.
+    */
+  private[graft] def bandPairs(bands: DataFrame, maxBucket: Option[Long],
+      keys: String*): DataFrame = {
+    val inBucket = maxBucket.fold(bands) { cap =>
+      bands.join(bands.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bucket_n"))
+        .filter(col("bucket_n") <= cap).drop("bucket_n"), keys)
+    }
+    val payload = bands.columns.toSeq.filterNot(c => c == "doc_id" || keys.contains(c))
+    def side(x: String) = inBucket.select(col("doc_id").as(s"id_$x") +:
+      (keys ++ payload).map(c => col(c).as(s"${c}_$x")): _*)
+    side("a").join(side("b"),
+        keys.map(k => col(s"${k}_a") === col(s"${k}_b")).reduce(_ && _) &&
+        col("id_a") < col("id_b"))
+      .select((Seq("id_a", "id_b") ++ payload.flatMap(c => Seq(s"${c}_a", s"${c}_b"))).map(col): _*)
+      .distinct()
+  }
 
   /** Number of band tables / sign bits per band for [[nearDupCosine]].
     * Bands hash on the SIGN of fixed embedding dimensions (table t owns
@@ -1772,15 +1804,13 @@ object LlmOps {
     val nHash = 16
     val bands = 4
     val rowsPerBand = nHash / bands
-    // Degenerate-bucket cap: a band bucket holding > maxBucket docs would
-    // emit O(bucket²) candidate pairs — on near-duplicate-heavy corpora
-    // (like this synthetic one, where all docs share a 31-word vocabulary)
-    // that collapses back into the O(n²) cross product LSH exists to
-    // avoid. Production LSH dedup (e.g. the web-crawl pipelines) drops
-    // such buckets: a bucket that large means the band carries no
-    // discriminating signal. The cap bounds work per bucket, so the whole
-    // operator stays linear in corpus size at any scale.
-    val maxBucket = 50
+    // Bucket cap of the pair scan ([[bandPairs]]): on near-duplicate-heavy
+    // corpora (like this synthetic one, where all docs share a 31-word
+    // vocabulary) uncapped buckets collapse back into the O(n²) cross
+    // product. Production LSH dedup (e.g. the web-crawl pipelines) drops
+    // such buckets too; the cap bounds work per bucket, so the operator
+    // stays linear in corpus size at any scale.
+    val maxBucket = 50L
     // Each 128-bit md5 digest carries FOUR independent 32-bit words, so
     // 16 min-wise-independent slots need 4 digests per token, not 16 —
     // the digests were the whole cost of the r9 oracle migration (1.58 s
@@ -1835,7 +1865,7 @@ object LlmOps {
     Q("llm_minhash_pairs", sql) { (s, dir) =>
       val tok = Tables.documents(s, dir)
         .select(col("doc_id"),
-          explode(array_distinct(split(lower(col("text")), " "))).as("tok"))
+          explode(array_distinct(Words.raw)).as("tok"))
         .filter(col("tok") =!= "")
       // 16 independent 32-bit hash slots from 4 md5 digests — word j%4 of
       // digest j/4 (see the oracle-side note above on why NOT double
@@ -1864,20 +1894,7 @@ object LlmOps {
           concat_ws(":", (b * rowsPerBand until (b + 1) * rowsPerBand)
             .map(j => col(s"h$j").cast("string")): _*)): _*))
           .as(Seq("band_idx", "band_key")))
-      val smallBuckets = banded
-        .groupBy("band_idx", "band_key").agg(count(lit(1)).as("bucket_n"))
-        .filter(col("bucket_n") <= maxBucket)
-        .select("band_idx", "band_key")
-      val inBucket = banded.join(smallBuckets, Seq("band_idx", "band_key"))
-      val pairs = inBucket.as("a")
-        .join(inBucket.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-          col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-        .dropDuplicates("id_a", "id_b")
-      pairs
+      bandPairs(banded, Some(maxBucket), "band_idx", "band_key")
         .withColumn("est_jaccard",
           round(aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
             lit(0), (acc, v) => acc + v).cast("double") / nHash, 4))
@@ -1917,7 +1934,7 @@ object LlmOps {
       |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin) { (s, dir) =>
     val docs = Tables.documents(s, dir)
     val tok = docs
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
+      .select(col("doc_id"), explode(Words.raw).as("tok"))
       .filter(col("tok") =!= "")
     val tf = tok.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
     val df = tok.groupBy("tok").agg(countDistinct("doc_id").as("df"))
@@ -2021,19 +2038,11 @@ object LlmOps {
 
   /** (doc_id, source, ng): distinct word-8-grams per document — the shared
     * derivation behind [[decontaminate]] and [[bloomDecontaminate]].
-    * Tokenizes once into a materialized column (same O(len²) trap as the
-    * shingle builder: slice() in the lambda must reference a real column).
     */
-  private def docGrams(s: SparkSession, dir: String): DataFrame = {
-    val toks = split(lower(col("text")), " ")
+  private def docGrams(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), toks.as("ts"))
-      .select(col("doc_id"), col("source"),
-        explode(array_distinct(transform(
-          when(size(col("ts")) >= lit(8), sequence(lit(1), size(col("ts")) - 7))
-            .otherwise(array().cast("array<int>")),
-          i => concat_ws(" ", slice(col("ts"), i, lit(8)))))).as("ng"))
-  }
+      .select(col("doc_id"), col("source"), Words.raw.as("ts"))
+      .select(col("doc_id"), col("source"), explode(array_distinct(Words.grams(8))).as("ng"))
 
   /** Bloom-filter sizing for [[bloomDecontaminate]]: fixed 2^20 capacity at
     * 1% target FPP ≈ 1.2 MB of bits — benchmark suites are KB-to-MB scale,
@@ -2162,7 +2171,7 @@ object LlmOps {
     */
   val approxTopK = Q.noOracle("agg_approx_topk") { (s, dir) =>
     Tables.documents(s, dir)
-      .select(explode(split(lower(col("text")), " ")).as("tok"))
+      .select(explode(Words.raw).as("tok"))
       .filter(col("tok") =!= "")
       .agg(expr("approx_top_k(tok, 10)").as("topk"))
       .select(explode(col("topk")).as("entry"))
@@ -2516,14 +2525,11 @@ object LlmOps {
     * complementing the set-similarity ops: Jaccard/MinHash ask "how similar
     * is this PAIR", this asks "how much of THIS doc is non-original".
     *
-    * Shape is linear, not pairwise: positional 5-grams explode map-side,
-    * collapse to the DISTINCT (doc, gram) set in one hash agg, and each
-    * gram's document frequency is that set's per-gram row count — a
-    * COUNT(*) window over the gram partition, no df census table and no
-    * join-back. No postings self-join, so no df-cap is needed: a
-    * boilerplate gram shared by every doc costs rows linear in corpus
-    * size. Docs with fewer than five tokens emit no grams and drop out on
-    * both sides.
+    * Shape is linear, not pairwise: word-5-grams explode map-side into
+    * the gram-df relation ([[Words.gramDf]]), whose (doc, gram) rows carry
+    * the occurrence count and document frequency the per-doc sums need.
+    * Docs with fewer than five tokens emit no grams and drop out on both
+    * sides.
     */
   val dupSpanFraction = Q(
     "llm_dup_span_fraction",
@@ -2541,32 +2547,10 @@ object LlmOps {
       |    / COUNT(*), 4) AS dup_frac
       |FROM grams g JOIN dfc USING (gram)
       |GROUP BY g.doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    // tokenize ONCE into a materialized column: slice() inside the lambda
-    // references the token array per gram position, and an inlined
-    // filter(split(...)) tree would re-tokenize the full text for every
-    // position — O(len²) per doc. As a multiply-referenced non-cheap alias
-    // CollapseProject keeps `ts` a real column, so per-position work is the
-    // O(5) slice alone.
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-    // one explode pass, then ONE (doc, gram) pre-aggregation with a SINGLE
-    // consumer: each row of perDoc is a distinct (doc, gram), so the
-    // gram's document frequency is just that partition's row count —
-    // COUNT(*) OVER (PARTITION BY gram) — and the df census + join-back of
-    // the two-consumer shape collapses into one window pass. This retires
-    // the r12 localCheckpoint here, which materialized every distinct
-    // 5-gram STRING per doc (a corpus-scale payload, not a reduction —
-    // the rule the r12 llm_ann_lsh A/B established); now perDoc is
-    // consumed once and nothing is materialized at all.
-    val perDoc = Tables.documents(s, dir)
-      .select(col("doc_id"), toks.as("ts"))
-      .select(col("doc_id"),
-        explode(transform(
-          when(size(col("ts")) >= lit(5), sequence(lit(1), size(col("ts")) - 4))
-            .otherwise(array().cast("array<int>")),
-          i => concat_ws(" ", slice(col("ts"), i, lit(5))))).as("gram"))
-      .groupBy("doc_id", "gram").agg(count(lit(1)).as("n_occ"))
-    perDoc
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("gram")))
+    val grams = Tables.documents(s, dir)
+      .select(col("doc_id"), Words.tokens.as("ts"))
+      .select(col("doc_id"), explode(Words.grams(5)).as("gram"))
+    Words.gramDf(grams)
       .groupBy("doc_id")
       .agg(sum(col("n_occ")).as("n_grams"),
         sum(when(col("df") >= 2, col("n_occ")).otherwise(0L)).as("n_dup"))
@@ -2582,8 +2566,9 @@ object LlmOps {
     * ANOTHER document is dropped, and the surviving tokens re-join into
     * the cleaned text. Coverage derives from gram START positions with a
     * 4-preceding window max — token i is covered iff any dup gram starts
-    * in [i−4, i] — so the whole rewrite is the dup-span gram-df join plus
-    * ONE doc-ordered window pass; no pairwise document comparison exists
+    * in [i−4, i] — so the whole rewrite is the gram-df relation
+    * ([[Words.gramDf]]), a semi join of the gram starts against its grams
+    * with df ≥ 2, and ONE doc-ordered window pass; no pairwise document comparison exists
     * anywhere. Fully-duplicated docs clean to the empty string (their
     * text lives elsewhere); sub-5-token docs have no grams and pass
     * through verbatim (lowercased — the rewrite operates on the
@@ -2628,19 +2613,13 @@ object LlmOps {
       |SELECT doc_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT), 0.0, ''
       |FROM toks WHERE len(ts) = 0
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val ts = filter(split(lower(col("text")), " "), t => t =!= "")
-    val base = Tables.documents(s, dir).select(col("doc_id"), ts.as("ts"))
+    val base = Tables.documents(s, dir).select(col("doc_id"), Words.tokens.as("ts"))
     val tok = base.select(col("doc_id"), posexplode(col("ts")).as(Seq("pos0", "tok")))
       .select(col("doc_id"), (col("pos0") + 1).as("i"), col("tok"))
-    val grams = base
-      .filter(size(col("ts")) >= 5)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(1), size(col("ts")) - 4),
-        i => struct(i.as("p"), concat_ws(" ", slice(col("ts"), i, lit(5))).as("gram")))).as("u"))
+    val grams = base.select(col("doc_id"), explode(Words.posGrams(5)).as("u"))
       .select(col("doc_id"), col("u.p").as("p"), col("u.gram").as("gram"))
-    val dfc = grams.select("doc_id", "gram").distinct()
-      .groupBy("gram").agg(count(lit(1)).as("df"))
-    val dstart = grams.join(dfc, "gram").filter(col("df") >= 2)
+    val dupGrams = Words.gramDf(grams).filter(col("df") >= 2).select("gram")
+    val dstart = grams.join(dupGrams, Seq("gram"), "left_semi")
       .select(col("doc_id").as("d_id"), col("p"))
     val w = Window.partitionBy("doc_id").orderBy("i").rowsBetween(-4, Window.currentRow)
     val cleaned = tok

@@ -168,7 +168,7 @@ object LogOps {
       |FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) t
       |WHERE tok <> '' GROUP BY tok ORDER BY tok""".stripMargin) { (s, dir) =>
     Tables.documents(s, dir)
-      .select(explode(split(lower(col("text")), " ")).as("tok"))
+      .select(explode(Words.raw).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy("tok")
       .agg(count(lit(1)).as("n"))

@@ -82,7 +82,7 @@ object Search {
         val tfs = terms.map(t => size(filter(col("ts"), _ === t)).cast("long").as(s"tf_$t"))
         // MaterializeOnce: the pushed hit filter would otherwise re-tokenize
         // the row once per term it tests
-        docs.withColumn("ts", graft.functions.MaterializeOnce(graft.sources.Sinks.postingToks))
+        docs.withColumn("ts", graft.functions.MaterializeOnce(Words.tokens))
           .select(col("doc_id") +: (cols ++ tfs): _*)
       case Store(spark, path) =>
         val rows = graft.sources.Sinks.termRows(spark, path, terms)

@@ -76,7 +76,7 @@ object TextOps {
     val docs = Tables.documents(s, dir)
     val lex = lexicon.toDF("ltok", "cand")
     val tok = docs
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
+      .select(col("doc_id"), explode(Words.raw).as("tok"))
       .filter(col("tok") =!= "")
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("cand").asc)
     val best = tok.join(broadcast(lex), col("tok") === col("ltok"))
@@ -114,10 +114,8 @@ object TextOps {
       |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS toks FROM documents) t1) t2
       |WHERE n_tokens > 0
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val toks = split(lower(col("text")), " ")
-    val nonEmpty = filter(toks, t => t =!= "")
-    val stopHits = filter(toks, t => t.isin("the", "a", "value", "data"))
-    val nTokens = size(nonEmpty)
+    val stopHits = filter(Words.raw, t => t.isin("the", "a", "value", "data"))
+    val nTokens = size(Words.tokens)
     val stopRatio = size(stopHits).cast("double") / nTokens
     val avgTokLen = length(regexp_replace(col("text"), " ", "")).cast("double") / nTokens
     Tables.documents(s, dir)
@@ -165,12 +163,11 @@ object TextOps {
       |                     t -> CAST(length(t) AS BIGINT))),
       |    (a, b) -> (a * 31 + b) % 1000000007) AS fp_poly
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
     Tables.documents(s, dir)
       .select(
         col("doc_id"),
         md5(lower(trim(col("text")))).as("fp_md5"),
-        aggregate(toks, lit(0L),
+        aggregate(Words.tokens, lit(0L),
           (acc, t) => (acc * 31 + length(t).cast("long")) % 1000000007L).as("fp_poly"))
       .orderBy("doc_id")
   }
@@ -200,17 +197,12 @@ object TextOps {
     * proven cross-engine conversion the simhash operator established.
     */
   def winnowFps(docs: DataFrame): DataFrame = {
-    val ts = filter(split(lower(col("text")), " "), t => t =!= "")
     val grams = docs
-      .select(col("doc_id"), ts.as("ts"))
-      .filter(size(col("ts")) >= winnowK)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(1), size(col("ts")) - (winnowK - 1)),
-        i => struct(i.as("pos"),
-          concat_ws(" ", slice(col("ts"), i, lit(winnowK))).as("g")))).as("u"))
-      .select(col("doc_id"), col("u.pos").as("pos"),
-        conv(substring(md5(col("u.g")), 1, 8), 16, 10).cast("long").as("gh"))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
+      .select(col("doc_id"), Words.tokens.as("ts"))
+      .select(col("doc_id"), explode(Words.posGrams(winnowK)).as("u"))
+      .select(col("doc_id"), col("u.p").as("p"),
+        conv(substring(md5(col("u.gram")), 1, 8), 16, 10).cast("long").as("gh"))
+    val w = Window.partitionBy("doc_id").orderBy("p")
       .rowsBetween(Window.currentRow, winnowW - 1)
     grams
       .select(col("doc_id"),
@@ -326,7 +318,7 @@ object TextOps {
   /** Shared simhash builder: (doc_id, simhash) for every doc. */
   private def simhashOf(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val tok = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
+      .select(col("doc_id"), explode(Words.raw).as("tok"))
       .filter(col("tok") =!= "")
       .select(col("doc_id"),
         conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long").as("h"))
@@ -379,19 +371,11 @@ object TextOps {
        |SELECT id_a, id_b, CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
        |FROM cand WHERE bit_count(xor(ha, hb)) <= $hammingMax
        |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
-    val sh = simhashOf(s, dir)
-    val bands = sh.select(col("doc_id"), col("simhash"),
+    val bands = simhashOf(s, dir).select(col("doc_id"), col("simhash"),
         explode(array((0 until 4).map(lit): _*)).as("b"))
       .withColumn("band_val", expr("shiftright(simhash, 8 * b) & 255"))
-    val a = bands.select(col("doc_id").as("id_a"), col("simhash").as("ha"),
-      col("b"), col("band_val"))
-    val c = bands.select(col("doc_id").as("id_b"), col("simhash").as("hb"),
-      col("b").as("cb"), col("band_val").as("cband_val"))
-    a.join(c,
-        col("b") === col("cb") && col("band_val") === col("cband_val") &&
-        col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "ha", "hb").distinct()
-      .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))))
+    LlmOps.bandPairs(bands, None, "b", "band_val")
+      .withColumn("hamming", bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("hamming") <= hammingMax)
       .select("id_a", "id_b", "hamming")
       .orderBy("id_a", "id_b")
@@ -416,7 +400,7 @@ object TextOps {
       |FROM top ORDER BY rank""".stripMargin) { (s, dir) =>
     val w = Window.orderBy(col("freq").desc, col("tok"))
     Tables.documents(s, dir)
-      .select(explode(split(lower(col("text")), " ")).as("tok"))
+      .select(explode(Words.raw).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy("tok")
       .agg(count(lit(1)).as("freq"))
@@ -448,16 +432,7 @@ object TextOps {
       |        i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' ')) AS tris
       |    FROM documents) t) t2
       |WHERE n_tri > 0 ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    // tokens AND the trigram array are materialized columns: slice() in
-    // the lambda referencing an inlined split() tree re-tokenizes per
-    // position (O(len²) per doc), and `tris` is consumed twice below —
-    // as aliases both are built once per row (CollapseProject keeps
-    // multiply-referenced non-cheap aliases real)
-    val toks = split(lower(col("text")), " ")
-    val tris = transform(
-      when(size(col("ts")) >= lit(3), sequence(lit(1), size(col("ts")) - 2))
-        .otherwise(array().cast("array<int>")),
-      i => concat_ws(" ", slice(col("ts"), i, lit(3))))
+    // `tris` is consumed twice below, so it is a column of its own.
     // MaterializeOnce (r12, guide §4.4 applied to JVM expressions): the
     // pushed n_tri > 0 filter otherwise INLINES the whole
     // split → transform → concat_ws trigram build into the scan predicate
@@ -465,8 +440,8 @@ object TextOps {
     // row tokenized + built its trigram array TWICE. The barrier keeps the
     // filter above the projection; evaluation semantics are untouched.
     Tables.documents(s, dir)
-      .select(col("doc_id"), toks.as("ts"))
-      .select(col("doc_id"), graft.functions.MaterializeOnce(tris).as("tris"))
+      .select(col("doc_id"), Words.raw.as("ts"))
+      .select(col("doc_id"), graft.functions.MaterializeOnce(Words.grams(3)).as("tris"))
       .select(col("doc_id"),
         size(col("tris")).cast("long").as("n_tri"),
         size(array_distinct(col("tris"))).cast("long").as("n_distinct"))
@@ -538,14 +513,13 @@ object TextOps {
   /** Boilerplate phrase detection (CCNet/RefinedWeb-style): a token
     * trigram occurring in ≥ [[boilerDf]] distinct documents is boilerplate
     * (headers, footers, licence blurbs); each document reports how much of
-    * it is boilerplate. Two-pass shape: (1) trigram → distinct-doc count
-    * via partial-aggregating groupBy — the only shuffle, keyed on short
-    * trigram strings (at 100 TB the shuffle key would be xxhash64(trigram),
+    * it is boilerplate. One corpus scan: the trigrams feed the gram-df
+    * relation ([[Words.gramDf]]), whose (doc, trigram) rows carry the
+    * occurrence count and df the per-doc sums need — no broadcast join
+    * back to a second tokenize of the corpus. The shuffles are keyed on
+    * short trigram strings (at 100 TB the key would be xxhash64(trigram),
     * the same digest-not-payload trick the dedup family uses; kept as the
-    * raw string here so the DuckDB oracle is bit-exact); (2) the surviving
-    * boilerplate set is tiny by construction (a phrase in ≥5 docs at sf0.01
-    * → 151 rows) and joins back as an explicit broadcast — the corpus side
-    * never reshuffles.
+    * raw string here so the DuckDB oracle is bit-exact).
     */
   private val boilerDf = 5
 
@@ -565,23 +539,14 @@ object TextOps {
        |  ROUND(CAST(COUNT(boiler.g) AS DOUBLE) / COUNT(*), 4) AS boiler_frac
        |FROM tri LEFT JOIN boiler ON tri.g = boiler.g
        |GROUP BY tri.doc_id ORDER BY tri.doc_id""".stripMargin) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
     val tri = Tables.documents(s, dir)
-      .select(col("doc_id"), toks.as("ts"))
-      .select(col("doc_id"), explode(
-        when(size(col("ts")) >= 3, transform(
-          sequence(lit(1), size(col("ts")) - 2),
-          i => concat_ws(" ", slice(col("ts"), i, lit(3)))))
-          .otherwise(array().cast("array<string>"))).as("g"))
-    val boiler = tri.groupBy("g")
-      .agg(count_distinct(col("doc_id")).as("df"))
-      .filter(col("df") >= boilerDf)
-      .select(col("g").as("bg"))
-    tri.join(broadcast(boiler), col("g") === col("bg"), "left")
+      .select(col("doc_id"), Words.tokens.as("ts"))
+      .select(col("doc_id"), explode(Words.grams(3)).as("gram"))
+    Words.gramDf(tri)
       .groupBy("doc_id")
       .agg(
-        count(lit(1)).as("n_tri"),
-        count(col("bg")).as("n_boiler"))
+        sum(col("n_occ")).as("n_tri"),
+        sum(when(col("df") >= boilerDf, col("n_occ")).otherwise(0L)).as("n_boiler"))
       .select(col("doc_id"), col("n_tri"), col("n_boiler"),
         round(col("n_boiler").cast("double") / col("n_tri"), 4).as("boiler_frac"))
       .orderBy("doc_id")
@@ -636,7 +601,7 @@ object TextOps {
        |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
     val t = Tables.documents(s, dir).select(
       col("doc_id"), col("lang"), col("text"),
-      size(filter(split(lower(col("text")), " "), x => x =!= "")).as("n_tok"))
+      size(Words.tokens).as("n_tok"))
     val ok = t.groupBy("lang", "n_tok").count()
       .filter(col("count") <= levBlockCap).drop("count")
     val blocked = t.join(broadcast(ok), Seq("lang", "n_tok"), "left_semi")
@@ -714,7 +679,7 @@ object TextOps {
       |GROUP BY cnt.source ORDER BY source""".stripMargin) { (s, dir) =>
     val cnt = Tables.documents(s, dir)
       .select(col("source"),
-        explode(filter(split(lower(col("text")), " "), x => x =!= "")).as("t"))
+        explode(Words.tokens).as("t"))
       .groupBy("source", "t")
       .agg(count(lit(1)).as("c"))
     val tot = cnt.groupBy("source").agg(sum("c").as("n"))
@@ -755,8 +720,7 @@ object TextOps {
       |    AS avg_log2p
       |FROM toks t JOIN freq USING (tok) CROSS JOIN tot
       |GROUP BY t.doc_id, tot.n_total ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-    val occ = Tables.documents(s, dir).select(col("doc_id"), explode(toks).as("tok"))
+    val occ = Tables.documents(s, dir).select(col("doc_id"), explode(Words.tokens).as("tok"))
     val freq = occ.groupBy("tok").agg(count(lit(1)).as("c"))
     val total = freq.agg(sum("c").cast("double").as("n_total"))
     occ.join(freq, "tok")
@@ -808,9 +772,8 @@ object TextOps {
       |JOIN bfreq bf ON o.tok_a = bf.tok_a AND o.tok_b = bf.tok_b
       |JOIN pfreq pf ON o.tok_a = pf.tok_a
       |GROUP BY o.doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val ts = filter(split(lower(col("text")), " "), t => t =!= "")
     val occ = Tables.documents(s, dir)
-      .select(col("doc_id"), ts.as("ts"))
+      .select(col("doc_id"), Words.tokens.as("ts"))
       .filter(size(col("ts")) >= 2)
       .select(col("doc_id"), explode(transform(
         sequence(lit(1), size(col("ts")) - 1),
@@ -926,7 +889,7 @@ object TextOps {
                               rounds: Int): (DataFrame, DataFrame) = {
     import s.implicits._
     val toks = Tables.documents(s, dir)
-      .select(explode(filter(split(lower(col("text")), " "), t => t =!= "")).as("tok"))
+      .select(explode(Words.tokens).as("tok"))
     // The one distributed job: the corpus scan to (word, freq, symbols).
     val words = toks.groupBy("tok").agg(count(lit(1)).as("freq"))
       .select(col("tok"), col("freq"),
@@ -1005,7 +968,7 @@ object TextOps {
       .select(col("tok"), size(col("syms")).as("n_bpe"))
     val occ = Tables.documents(s, dir)
       .select(col("doc_id"),
-        explode(filter(split(lower(col("text")), " "), t => t =!= "")).as("tok"))
+        explode(Words.tokens).as("tok"))
     occ.join(vocab, Seq("tok"))
       .groupBy("doc_id")
       .agg(
@@ -1041,10 +1004,8 @@ object TextOps {
     * features [[qualityScore]] combines with HAND-PICKED weights.
     */
   private[graft] def qcFeatures(s: SparkSession, dir: String): DataFrame = {
-    val toks = split(lower(col("text")), " ")
-    val nonEmpty = filter(toks, t => t =!= "")
-    val stopHits = filter(toks, t => t.isin("the", "a", "value", "data"))
-    val nTokens = size(nonEmpty)
+    val stopHits = filter(Words.raw, t => t.isin("the", "a", "value", "data"))
+    val nTokens = size(Words.tokens)
     Tables.documents(s, dir)
       .filter(nTokens > 0)
       .select(col("doc_id"),
@@ -1294,17 +1255,11 @@ object TextOps {
       |  ROUND(CAST(MAX(CASE WHEN n = 3 THEN dup_chars END) AS DOUBLE) / total_chars, 4) AS dup3_frac
       |FROM per_n GROUP BY doc_id, n_tok, total_chars
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-    // gram arrays are built off the materialized `ts` alias (not the
-    // inlined split tree) — the text_repetition O(len²) lesson
-    def grams(n: Int): Column = transform(
-      sequence(lit(1), size(col("ts")) - (n - 1)),
-      i => concat_ws(" ", slice(col("ts"), i, lit(n))))
     val base = Tables.documents(s, dir)
       // MaterializeOnce (r12, guide §4.4): the pushed size(ts) >= 3 filter
       // otherwise inlines the split+filter token build into the scan
       // predicate (before-plan Filter(2)), tokenizing every row twice
-      .select(col("doc_id"), graft.functions.MaterializeOnce(toks).as("ts"))
+      .select(col("doc_id"), graft.functions.MaterializeOnce(Words.tokens).as("ts"))
       .filter(size(col("ts")) >= 3)
       // ONE corpus-sized exchange up front: doc_id partitioning satisfies
       // every downstream requirement (the (doc,n,gram) count, the (doc,n)
@@ -1318,8 +1273,8 @@ object TextOps {
         size(col("ts")).cast("long").as("n_tok"),
         length(concat_ws(" ", col("ts"))).cast("double").as("total_chars"),
         explode(concat(
-          transform(grams(2), g => struct(lit(2).as("n"), g.as("gram"))),
-          transform(grams(3), g => struct(lit(3).as("n"), g.as("gram"))))).as("g"))
+          transform(Words.grams(2), g => struct(lit(2).as("n"), g.as("gram"))),
+          transform(Words.grams(3), g => struct(lit(3).as("n"), g.as("gram"))))).as("g"))
       .select(col("doc_id"), col("n_tok"), col("total_chars"),
         col("g.n").as("n"), col("g.gram").as("gram"))
     val counts = base.groupBy("doc_id", "n_tok", "total_chars", "n", "gram")
@@ -1390,17 +1345,12 @@ object TextOps {
     // otherwise silently retain exactly the doc most deserving of
     // rejection), so the mean guards the 0/0 instead of a WHERE guard
     // excluding the row.
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-    val tris = transform(
-      when(size(col("ts")) >= 3, sequence(lit(1), size(col("ts")) - 2))
-        .otherwise(array().cast("array<int>")),
-      i => concat_ws(" ", slice(col("ts"), i, lit(3))))
     val triRep = when(size(col("ts")) >= 3,
       lit(1.0) - size(array_distinct(col("tris"))).cast("double") / size(col("tris")))
       .otherwise(lit(0.0))
     val signals = Tables.documents(s, dir)
-      .select(col("doc_id"), toks.as("ts"))
-      .select(col("doc_id"), col("ts"), tris.as("tris"))
+      .select(col("doc_id"), Words.tokens.as("ts"))
+      .select(col("doc_id"), col("ts"), Words.grams(3).as("tris"))
       .select(
         col("doc_id"),
         size(col("ts")).cast("long").as("n_tok"),
@@ -1478,9 +1428,8 @@ object TextOps {
        |    / COUNT(*), 4) AS dup_frac
        |FROM chunks c JOIN df ON c.digest = df.digest
        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin) { (s, dir) =>
-    val toks = filter(split(lower(col("text")), " "), t => t =!= "")
     val tokRows = Tables.documents(s, dir)
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos0", "tok")))
+      .select(col("doc_id"), posexplode(Words.tokens).as(Seq("pos0", "tok")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("tok"),
         when(conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long") % cdcMod === 0, 1)
           .otherwise(0).as("boundary"))

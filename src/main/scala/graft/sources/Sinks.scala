@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.engine.Words
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -297,19 +298,12 @@ object Sinks {
       .parquet(path)
   }
 
-  /** The store's tokenization — ONE definition shared by build and refresh
-    * so an appended doc can never tokenize differently from the original
-    * corpus pass.
-    */
-  private[graft] def postingToks: org.apache.spark.sql.Column =
-    filter(split(lower(col("text")), " "), t => t =!= "")
-
   /** Positional term rows `(doc_id, pos, tok)` of `docs`, pos 0-based:
     * what the store's postings hold, and the raw-scan twin of a pruned
     * posting read ([[graft.engine.Search.positions]]).
     */
   private[graft] def positionRows(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), posexplode(postingToks).as(Seq("pos", "tok")))
+    docs.select(col("doc_id"), posexplode(Words.tokens).as(Seq("pos", "tok")))
 
   // The posting store is a [[StoreLog]] (`gen-*` versions, `seg/b=*`
   // segments; the module doc states the protocol) whose versions and
@@ -381,7 +375,7 @@ object Sinks {
     // facet dimensions (lang, source) — built in the same corpus pass
     // family at index time, so ranked queries AND facet rollups never
     // touch text: hits join this metadata-per-doc table, not the corpus
-    writeSized(docs.select(col("doc_id"), size(postingToks).cast("long").as("dl"),
+    writeSized(docs.select(col("doc_id"), size(Words.tokens).cast("long").as("dl"),
       col("lang"), col("source")), s"$dir/docstats", docstatFiles)
     writeMeta(docs.sparkSession, dir, buckets)
   }
@@ -653,13 +647,13 @@ object Sinks {
     * vocabulary term, range-clustered BY TOKEN with an in-file sort and a
     * per-file (min_tok, max_tok, n) sidecar — [[writeRangeClustered]]'s
     * zone-map idea lifted from timestamps to strings. Built with the
-    * store tokenization ([[postingToks]]) so dict terms can never
-    * disagree with posting terms. At 100 TB the dict is vocabulary-sized
+    * store tokenization ([[graft.engine.Words.tokens]]) so dict terms can
+    * never disagree with posting terms. At 100 TB the dict is vocabulary-sized
     * (≪ corpus) and the sidecar is one row per file.
     */
   def writeTermDict(docs: DataFrame, path: String, files: Int = 8): Unit = {
     docs
-      .select(col("doc_id"), explode(postingToks).as("tok"))
+      .select(col("doc_id"), explode(Words.tokens).as("tok"))
       .groupBy("tok")
       .agg(countDistinct("doc_id").as("df"), count(lit(1)).as("cf"))
       .repartitionByRange(files, col("tok"))
@@ -700,7 +694,7 @@ object Sinks {
   def refreshTermDict(spark: org.apache.spark.sql.SparkSession, path: String,
                       newDocs: DataFrame): Unit =
     newDocs
-      .select(col("doc_id"), explode(postingToks).as("tok"))
+      .select(col("doc_id"), explode(Words.tokens).as("tok"))
       .groupBy("tok")
       .agg(countDistinct("doc_id").as("df"), count(lit(1)).as("cf"))
       .repartition(1)

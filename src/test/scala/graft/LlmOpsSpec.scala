@@ -96,6 +96,19 @@ class LlmOpsSpec extends SparkSpecBase {
     got.get((1L, 4L)).foreach(e => assert(e < 0.3))
   }
 
+  test("minhash pairs: an over-cap band bucket is dropped, not exploded") {
+    // 51 identical docs put 51 rows in each of the 4 band buckets, over
+    // the 50-doc cap, so every bucket is dropped and no pair comes out;
+    // at the cap every bucket survives and all C(50, 2) pairs do.
+    val overCap = docsDir((1L to 51L).map(i => (i, "a b c d")))
+    assert(LlmOps.minhashPairs.build(spark, overCap).count() === 0L)
+    val atCap = docsDir((1L to 50L).map(i => (i, "a b c d")))
+    val got = LlmOps.minhashPairs.build(spark, atCap)
+      .select("id_a", "id_b", "est_jaccard").as[(Long, Long, Double)].collect()
+    assert(got.length === 50 * 49 / 2)
+    assert(got.forall(r => r._1 < r._2 && r._3 == 1.0))
+  }
+
   test("lsh ann: recall@10 vs brute force is substantial, candidates are pruned") {
     val brute = LlmOps.knnCosine.build(spark, sfDir)
       .select("q_id", "vec_id").as[(Long, Long)].collect().groupBy(_._1)

@@ -128,6 +128,24 @@ class TextOpsSpec extends SparkSpecBase {
     assert(TextOps.levenshteinPairs.build(spark, atCap).count() === 100L * 99 / 2)
   }
 
+  test("simhash pairs equal the brute-force all-pairs hamming <= 3 filter") {
+    // Banding is complete by pigeonhole: 3 flipped bits touch at most 3 of
+    // the 4 8-bit bands, so every pair within distance 3 shares a band.
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val dir = s"/root/testdata/$sf"
+      val h = TextOps.simhash.build(spark, dir).select("doc_id", "simhash")
+        .as[(Long, Long)].collect().sortBy(_._1)
+      val brute = (for {
+        i <- h.indices; j <- i + 1 until h.length
+        d = java.lang.Long.bitCount(h(i)._2 ^ h(j)._2) if d <= 3
+      } yield (h(i)._1, h(j)._1, d)).toSet
+      val got = TextOps.simhashPairs.build(spark, dir)
+        .as[(Long, Long, Int)].collect().toSet
+      assert(brute.nonEmpty, sf)
+      assert(got === brute, sf)
+    }
+  }
+
   test("token entropy: uniform 2-token source = 1 bit; 1-token source = +0.0") {
     // "a a b b" → n=4, c={2,2}: H = log2(4) − (2·1 + 2·1)/4 = 1.0 exactly
     val got = TextOps.tokenEntropy.build(spark, docsDir(Seq((1L, "a a b b"))))
